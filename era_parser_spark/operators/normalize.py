@@ -12,6 +12,8 @@ reference schema declares it but never fills it — SURVEY §2.C15).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -336,6 +338,42 @@ TABLE_BUILDERS = {
     "deposit_requests": deposit_requests_table,
     "withdrawal_requests": withdrawal_requests_table,
     "consolidation_requests": consolidation_requests_table,
+}
+
+
+def _present(c: Column) -> Column:
+    return F.when(c.isNotNull(), 1).otherwise(0)
+
+
+def _length(c: Column) -> Column:
+    # explode/posexplode emit nothing for a null list; size(null) is -1
+    # under spark.sql.legacy.sizeOfNull, so test for null explicitly
+    return F.when(c.isNotNull(), F.size(c)).otherwise(0)
+
+
+# Rows each TABLE_BUILDERS[t] emits per parsed block, as a column over the
+# same blocks frame: 1, a null test for a builder that filters, or the
+# length of the list it explodes.  Summed per era it equals the built
+# table's row count per era (differential-tested), so one aggregate counts
+# every table without running the builders.
+ROWS_PER_BLOCK: dict[str, Callable[[], Column]] = {
+    "blocks": lambda: F.lit(1),
+    "sync_aggregates": lambda: _present(F.col("body.sync_aggregate")),
+    "execution_payloads": lambda: _present(F.col("body.execution_payload")),
+    "transactions": lambda: _length(F.col("body.execution_payload.transactions")),
+    "withdrawals": lambda: _length(F.col("body.execution_payload.withdrawals")),
+    "attestations": lambda: _length(F.col("body.attestations")),
+    "deposits": lambda: _length(F.col("body.deposits")),
+    "voluntary_exits": lambda: _length(F.col("body.voluntary_exits")),
+    "proposer_slashings": lambda: _length(F.col("body.proposer_slashings")),
+    "attester_slashings": lambda: _length(F.col("body.attester_slashings")),
+    "bls_changes": lambda: _length(F.col("body.bls_to_execution_changes")),
+    "blob_commitments": lambda: _length(F.col("body.blob_kzg_commitments")),
+    "deposit_requests": lambda: _length(F.col("body.execution_requests.deposits")),
+    "withdrawal_requests": lambda: _length(F.col("body.execution_requests.withdrawals")),
+    "consolidation_requests": lambda: _length(
+        F.col("body.execution_requests.consolidations")
+    ),
 }
 
 

@@ -215,14 +215,16 @@ def ivf_assign(
     cvecs = [r["cvec"] for r in cent_rows]
     # Degenerate centroid tables keep the expression path: empty, a NULL
     # centroid id (np.int64 / sort would raise), a NULL vector, ragged
-    # dims, or a null ELEMENT inside a vector (np.array would silently
-    # read None as NaN and diverge from sq_l2_expr's SQL-null distance).
+    # dims, a null ELEMENT inside a vector (np.array would silently read
+    # None as NaN and diverge from sq_l2_expr's SQL-null distance), or a
+    # NaN element (every row's distance turns NaN, which would send the
+    # whole input through the per-row Python fold).
     if (
         not cent_rows
         or any(r["centroid_id"] is None for r in cent_rows)
         or any(v is None for v in cvecs)
         or len({len(v) for v in cvecs}) != 1
-        or any(any(e is None for e in v) for v in cvecs)
+        or any(any(e is None or math.isnan(e) for e in v) for v in cvecs)
     ):
         return _ivf_assign_expr(df, vec_col, id_col, centroids, extra_cols)
     cent_rows.sort(key=lambda r: r["centroid_id"])

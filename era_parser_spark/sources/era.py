@@ -469,7 +469,8 @@ def era_file_inventory(
     with_md5: bool = False,
 ) -> DataFrame:
     """(path, era_number, network, size[, md5]) listing — the planning-side
-    view (A6): feed this to state.plan_pending for incremental runs.
+    view (A6); its (era_number, path) pairs are what state.plan_pending
+    plans incremental runs from.
     with_md5 adds the file-content hash the reference tracks per era (D9,
     era_state_manager.py:477-485) — it reads every byte, so keep it off for
     pure planning."""

@@ -31,9 +31,12 @@ from __future__ import annotations
 import time
 import traceback
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 STATE_SCHEMA = T.StructType(
     [
@@ -49,6 +52,19 @@ STATE_SCHEMA = T.StructType(
         T.StructField("insert_version", T.LongType(), False),  # ns timestamp
     ]
 )
+
+
+def rows_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """Local rows (dicts keyed by field name; missing keys are null) as a
+    DataFrame, built through a pyarrow.Table typed by `schema`.
+
+    A Python-list createDataFrame runs the rows through a Python RDD and
+    its worker processes — ~1 CPU-s even for one row — while an Arrow
+    table is handed to the JVM as record batches.  Every local-rows frame
+    in the state package (log appends, the empty log, the migration log)
+    goes through here."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 class StateLockHeld(RuntimeError):
@@ -164,28 +180,63 @@ class EraStateStore:
             return
         now = time.time_ns()
         data = [
-            (
-                r["network"],
-                r["era_number"],
-                r["status"],
-                r["era_number"] * 8192,
-                r["era_number"] * 8192 + 8191,
-                r.get("total_records"),
-                r.get("datasets"),
-                r.get("error_message"),
-                r.get("retry_count", 0),
-                now + i,
-            )
+            {
+                "network": r["network"],
+                "era_number": r["era_number"],
+                "status": r["status"],
+                "slot_start": r["era_number"] * 8192,
+                "slot_end": r["era_number"] * 8192 + 8191,
+                "total_records": r.get("total_records"),
+                "datasets_processed": r.get("datasets"),
+                "error_message": r.get("error_message"),
+                "retry_count": r.get("retry_count", 0),
+                "insert_version": now + i,
+            }
             for i, r in enumerate(rows)
         ]
-        df = self.spark.createDataFrame(data, STATE_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        rows_frame(self.spark, data, STATE_SCHEMA).coalesce(1).write.mode("append").parquet(
+            self.path
+        )
+
+    def _log_exists(self) -> bool:
+        fs, hp, _ = self._fs_and_path(self.path)
+        return bool(fs.exists(hp))
 
     def log(self) -> DataFrame:
-        try:
-            return self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
-        except Exception:
-            return self.spark.createDataFrame([], STATE_SCHEMA)
+        """The whole transition log; empty when nothing was ever recorded.
+
+        Only a missing path reads as empty.  Any other failure (unknown
+        filesystem scheme, listing or credential error) raises: read as
+        "nothing completed" it would make the next run reprocess the
+        whole archive."""
+        if not self._log_exists():
+            return rows_frame(self.spark, [], STATE_SCHEMA)
+        return self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
+
+    def era_summary(self, network: str) -> dict[int, tuple[str, int]]:
+        """{era_number: (latest status, max retry_count)} for `network`.
+
+        One aggregation job over the log (none when the log does not
+        exist): the latest status is argmax(insert_version), as in
+        latest_state(), and the retry count is D7's
+        COALESCE(MAX(retry_count), 0).  The log is a metadata table, so
+        it is read as one partition, which lets the aggregate run without
+        a shuffle — one job, not a map stage plus a result stage."""
+        if not self._log_exists():
+            return {}
+        rows = (
+            self.log()
+            .filter(F.col("network") == network)
+            .select("era_number", "status", "retry_count", "insert_version")
+            .coalesce(1)
+            .groupBy("era_number")
+            .agg(
+                F.max_by("status", "insert_version").alias("status"),
+                F.coalesce(F.max("retry_count"), F.lit(0)).alias("max_retry"),
+            )
+            .collect()
+        )
+        return {int(r.era_number): (r.status, int(r.max_retry)) for r in rows}
 
     # -- views (D2, D6, D7) --------------------------------------------------
 
@@ -197,13 +248,6 @@ class EraStateStore:
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
-        )
-
-    def completed(self, network: str) -> DataFrame:
-        return (
-            self.latest_state()
-            .filter((F.col("network") == network) & (F.col("status") == "completed"))
-            .select("era_number")
         )
 
     def status_summary(self, network: str) -> DataFrame:
@@ -220,28 +264,15 @@ class EraStateStore:
 
     def max_retry(self, network: str, era_number: int) -> int:
         """D7: COALESCE(MAX(retry_count), 0)."""
-        row = (
-            self.log()
-            .filter((F.col("network") == network) & (F.col("era_number") == era_number))
-            .agg(F.coalesce(F.max("retry_count"), F.lit(0)).alias("m"))
-            .first()
-        )
-        return int(row["m"])
+        return self.max_retries(network, [era_number])[era_number]
 
     def max_retries(self, network: str, eras: list[int]) -> dict[int, int]:
-        """Bulk D7: one aggregation job for a whole batch of eras
-        (max_retry per era is N jobs; this is 1)."""
+        """Bulk D7 over era_summary's one read (max_retry per era would be
+        N jobs; this is 1)."""
         if not eras:
             return {}
-        rows = (
-            self.log()
-            .filter((F.col("network") == network) & F.col("era_number").isin(eras))
-            .groupBy("era_number")
-            .agg(F.coalesce(F.max("retry_count"), F.lit(0)).alias("m"))
-            .collect()
-        )
-        got = {int(r.era_number): int(r.m) for r in rows}
-        return {e: got.get(e, 0) for e in eras}
+        summary = self.era_summary(network)
+        return {e: summary[e][1] if e in summary else 0 for e in eras}
 
     def failed_eras(self, network: str) -> DataFrame:
         return self.latest_state().filter(
@@ -327,17 +358,26 @@ class EraStateStore:
 
     # -- planning (D1) ---------------------------------------------------------
 
-    def plan_pending(self, inventory: DataFrame, network: str, force: bool = False) -> DataFrame:
-        """D1: available eras minus completed ones (left anti join).
+    def plan_pending(
+        self, found: list[tuple[int, str]], network: str, force: bool = False
+    ) -> list[tuple[int, str, int]]:
+        """D1: the found (era_number, path) pairs minus completed eras,
+        ascending, each with the max retry_count the log holds for it.
 
-        `inventory` is sources.era.era_file_inventory output.  The completed
-        side is a per-network metadata set — broadcast, no shuffle of the
-        inventory."""
-        inv = inventory.filter(F.col("network") == network)
-        if force:
-            return inv
-        return inv.join(
-            F.broadcast(self.completed(network)), "era_number", "left_anti"
+        The reference's "skip completed eras" anti-join
+        (era_state_manager.py:430-473), done on the driver: the inventory
+        is already a driver-side list and the completed set is one
+        era_summary read, so planning costs one job (none on a fresh
+        state path) and the retry counts the batch records come with it.
+        `force` plans every found era."""
+        if not found:
+            return []
+        summary = self.era_summary(network)
+        done = set() if force else {e for e, (st, _) in summary.items() if st == "completed"}
+        return sorted(
+            (era, path, summary[era][1] if era in summary else 0)
+            for era, path in found
+            if era not in done
         )
 
 

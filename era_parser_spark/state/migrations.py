@@ -17,6 +17,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from era_parser_spark.state.era_state import rows_frame
+
 _LOG_SCHEMA = T.StructType(
     [
         T.StructField("version", T.IntegerType(), False),
@@ -70,8 +72,9 @@ class MigrationRunner:
             if m.version in done:
                 continue
             m.apply(self.spark, self.warehouse)
-            row = [(m.version, m.name, time.time_ns(), "applied")]
-            self.spark.createDataFrame(row, _LOG_SCHEMA).coalesce(1).write.mode(
+            row = {"version": m.version, "name": m.name,
+                   "applied_at_ns": time.time_ns(), "status": "applied"}
+            rows_frame(self.spark, [row], _LOG_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(self.log_path)
             applied.append(m.version)

@@ -1,7 +1,7 @@
 """Incremental processing + Structured Streaming surface.
 
 run_incremental() is the reference's remote/batch lifecycle (§3.2) rebuilt
-on Spark primitives: inventory -> anti-join against the state store (D1) ->
+on Spark primitives: inventory -> minus the state store's completed eras (D1) ->
 per-era atomic processing (D8) with partition-overwrite idempotency (D3).
 Era archives are closed/past data, so the reference needs no watermarks —
 "process new files, skip done ones" is exactly this.
@@ -69,13 +69,8 @@ def run_incremental(
     # era_dir may be a local dir, s3://bucket/prefix, or an http(s) listing
     # URL (the reference's --remote flow); downloads stay task-side either way
     found = filter_era_range(discover_auto(era_dir, network), era_range)
-    if not found:
-        return {}
-    inventory = spark.createDataFrame(
-        [(e, p, network) for e, p in found], "era_number long, path string, network string"
-    )
-    pending = store.plan_pending(inventory, network, force=force)
-    todo = [(r.era_number, r.path) for r in pending.orderBy("era_number").collect()]
+    # one state-log read plans the run and carries each era's retry count
+    todo = store.plan_pending(found, network, force=force)
     if not todo:
         return {}
 
@@ -83,7 +78,7 @@ def run_incremental(
         from era_parser_spark.operators.normalize import all_tables
 
         results: dict[int, dict[str, int]] = {}
-        for era_number, path in todo:
+        for era_number, path, _ in todo:
             blocks = read_era_blocks(spark, path, network=network, tables=tables).cache()
             try:
                 tbls = all_tables(blocks, tables)
@@ -102,29 +97,33 @@ def run_incremental(
 def process_eras_batch(
     store: EraStateStore,
     network: str,
-    todo: list[tuple[int, str]],
+    todo: list[tuple[int, str, int]],
     out_base: str,
     tables: list[str] | None = None,
 ) -> dict[int, dict[str, int]]:
     """One distributed job for all pending eras: scan every era file in
     parallel, write each table once partitioned by era_number (dynamic
     overwrite replaces exactly the touched eras), then flip all statuses.
-    """
-    from pyspark.sql import functions as F
 
-    from era_parser_spark.operators.normalize import TABLE_BUILDERS
+    `todo` is plan_pending's (era_number, path, retry_count) list.  The
+    bookkeeping around the writes is one staging write, one row-count
+    aggregate (two jobs under AQE: its shuffle map stage and its result)
+    and two state appends — no job per table besides its write.
+    """
+    from era_parser_spark.operators.normalize import ROWS_PER_BLOCK, TABLE_BUILDERS
     from era_parser_spark.sinks.writers import write_parquet
 
     spark = store.spark
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    eras = [e for e, _ in todo]
-    # one retry-count aggregation + one log append for the whole batch
-    # (per-era record() would be 2N Spark jobs and N tiny files)
-    retries = store.max_retries(network, eras)
+    eras = [e for e, _, _ in todo]
+    # the attempt number each era's transitions carry in this batch
+    attempt = {e: r + 1 for e, _, r in todo}
+    # one log append for the whole batch (per-era record() would be N
+    # Spark jobs and N tiny files)
     store.record_many(
         [
             {"network": network, "era_number": era, "status": "processing",
-             "retry_count": retries[era] + 1}
+             "retry_count": attempt[era]}
             for era in eras
         ]
     )
@@ -141,38 +140,41 @@ def process_eras_batch(
         # Parse cost stays one pass either way; the staging write is the
         # same volume the cache would have spilled, and each table build
         # reads only its own columns back.
-        read_era_blocks(
-            spark, [p for _, p in todo], network=network, tables=tables
-        ).write.mode("overwrite").parquet(staging)
-        blocks = spark.read.parquet(staging)
+        decoded = read_era_blocks(spark, [p for _, p, _ in todo], network=network, tables=tables)
+        decoded.write.mode("overwrite").parquet(staging)
+        # the schema is known, so reading it back needs no footer-inference job
+        blocks = spark.read.schema(decoded.schema).parquet(staging)
         names = tables or list(TABLE_BUILDERS)
-        counts: dict[int, dict[str, int]] = {e: {} for e in eras}
+        # Every table's rows per era from ONE aggregate over the staging
+        # frame: each builder's row count per block is a null test or the
+        # size of the list it explodes, so summing it per era equals the
+        # built table's groupBy(era).count() (differential-tested) without
+        # running the 15 builders.
+        era_number = F.expr("slot div 8192")
+        era_rows = blocks.groupBy(era_number.alias("era_number")).agg(
+            *[F.sum(ROWS_PER_BLOCK[name]()).alias(name) for name in names]
+        ).collect()
+        per_era = {r.era_number: r for r in era_rows}
+        counts = {
+            era: {name: int(per_era[era][name]) if era in per_era else 0 for name in names}
+            for era in eras
+        }
         for name in names:
-            df = TABLE_BUILDERS[name](blocks)
-            # era_number rides along from the source via slot -> era math
-            era_df = df.withColumn("era_number", F.expr("slot div 8192"))
-            per_era_counts = {
-                r.era_number: r.cnt
-                for r in era_df.groupBy("era_number")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
-            if sum(per_era_counts.values()) > 0:
+            # empty tables are skipped (reference skips them too, A13)
+            if any(r[name] for r in era_rows):
                 write_parquet(
-                    era_df,
+                    TABLE_BUILDERS[name](blocks).withColumn("era_number", era_number),
                     f"{out_base}/{name}",
                     partition_by_month=False,
                     partition_by_era=True,
                     mode="overwrite",
                 )
-            for era in eras:
-                counts[era][name] = int(per_era_counts.get(era, 0))
         store.record_many(
             [
                 {"network": network, "era_number": era, "status": "completed",
                  "total_records": sum(counts[era].values()),
                  "datasets": sorted(counts[era]),
-                 "retry_count": retries[era] + 1}
+                 "retry_count": attempt[era]}
                 for era in eras
             ]
         )
@@ -182,7 +184,7 @@ def process_eras_batch(
             [
                 {"network": network, "era_number": era, "status": "failed",
                  "error_message": f"{type(exc).__name__}: {exc}"[:2000],
-                 "retry_count": retries[era] + 1}
+                 "retry_count": attempt[era]}
                 for era in eras
             ]
         )

@@ -106,6 +106,35 @@ def test_normalized_counts_match_docs(blocks_df, era_dir):
     assert tables["transactions"].count() == ntx
 
 
+def test_rows_per_block_matches_builders(spark, blocks_df, tmp_path):
+    """Differential pin for run_incremental's one count aggregate: per era,
+    summing ROWS_PER_BLOCK[t] over the blocks frame equals the built
+    table's groupBy(era).count(), for all 15 tables over a phase0 ->
+    electra corpus (null payloads and sync aggregates before their forks,
+    empty lists, electra execution requests).  Both sides read a parquet
+    copy of the blocks, as the batch path reads its staging parquet."""
+    from era_parser_spark.operators.normalize import ROWS_PER_BLOCK, TABLE_BUILDERS
+
+    staging = str(tmp_path / "staging")
+    blocks_df.write.parquet(staging)
+    blocks = spark.read.parquet(staging)
+    era = F.expr("slot div 8192").alias("era_number")
+    summed = blocks.groupBy(era).agg(
+        *[F.sum(ROWS_PER_BLOCK[t]()).alias(t) for t in TABLE_BUILDERS]
+    ).collect()
+    assert sorted(r.era_number for r in summed) == sorted(ERA_FORKS)
+    assert set(ROWS_PER_BLOCK) == set(TABLE_BUILDERS)
+    for t, build in TABLE_BUILDERS.items():
+        built = {r.era_number: r["count"] for r in build(blocks).groupBy(era).count().collect()}
+        got = {r.era_number: r[t] for r in summed}
+        assert got == {e: built.get(e, 0) for e in ERA_FORKS}, t
+        assert sum(got.values()) > 0, t  # every table is exercised
+    # the corpus holds the degenerate shapes the null tests guard
+    per_era = {r.era_number: r for r in summed}
+    assert per_era[0]["execution_payloads"] == per_era[0]["sync_aggregates"] == 0
+    assert per_era[1300]["deposit_requests"] == 0
+
+
 def test_attester_slashing_invariants(blocks_df, era_dir):
     from era_parser_spark.operators.normalize import attester_slashings_table
 

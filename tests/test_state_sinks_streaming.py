@@ -3,8 +3,10 @@ and the Structured Streaming surface."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import uuid
 
 import pytest
 
@@ -731,3 +733,109 @@ def test_mid_write_kill_recovery_batched(spark, chaos_era_dir, tmp_path_factory,
     assert {r.era_number: r.status for r in store.latest_state().collect()} == {
         1400: "completed", 1401: "completed"
     }
+
+
+# --- bookkeeping jobs of the batched run -------------------------------------
+
+
+@contextlib.contextmanager
+def _job_group(spark, name):
+    """Tag every Spark job the block submits with job group `name`."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+
+
+def _job_ids(spark, name) -> list[int]:
+    # drain the listener bus so the status tracker has seen every job
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def _run_counting_jobs(spark, monkeypatch, era_dir, out, state, tables=None):
+    """run_incremental's result, its non-write job ids and its table-write
+    job ids (each write_parquet call runs under a second job group)."""
+    import era_parser_spark.sinks.writers as writers
+    from era_parser_spark.streaming.incremental import run_incremental
+
+    run, write = f"run_{uuid.uuid4().hex}", f"write_{uuid.uuid4().hex}"
+    real_write = writers.write_parquet
+
+    def grouped_write(df, path, **kw):
+        with _job_group(spark, write):
+            return real_write(df, path, **kw)
+
+    monkeypatch.setattr(writers, "write_parquet", grouped_write)
+    with _job_group(spark, run):
+        result = run_incremental(spark, era_dir, out, state, "gnosis", tables=tables)
+    monkeypatch.setattr(writers, "write_parquet", real_write)
+    return result, _job_ids(spark, run), _job_ids(spark, write)
+
+
+def test_batched_run_job_counts(spark, chaos_era_dir, tmp_path_factory, monkeypatch):
+    """Job-count pin for the batched run's bookkeeping.  A fresh run over 2
+    eras runs the same non-write jobs for all 15 tables as for one — the
+    staging write, the row-count aggregate, two state appends — and no
+    state read (the state path does not exist yet); a resume over the
+    completed state runs one job, the state read."""
+    from era_parser_spark.operators.normalize import TABLE_BUILDERS
+
+    base = tmp_path_factory.mktemp("jobs_pin")
+    one, one_run, one_writes = _run_counting_jobs(
+        spark, monkeypatch, chaos_era_dir, str(base / "one"), str(base / "one_state"),
+        tables=["blocks"],
+    )
+    out, state = str(base / "all"), str(base / "all_state")
+    fresh, run_jobs, write_jobs = _run_counting_jobs(
+        spark, monkeypatch, chaos_era_dir, out, state
+    )
+    assert sorted(fresh) == sorted(one) == [1400, 1401]
+    assert fresh[1400]["blocks"] == one[1400]["blocks"]
+    assert set(fresh[1400]) == set(TABLE_BUILDERS)
+    nonempty = [t for t in TABLE_BUILDERS if fresh[1400][t] + fresh[1401][t] > 0]
+    assert len(one_writes) == 1
+    assert len(write_jobs) == len(nonempty)
+    # staging write + count aggregate (shuffle map stage + result) + 2 appends
+    assert len(run_jobs) == len(one_run) == 5
+
+    again, resume_jobs, resume_writes = _run_counting_jobs(
+        spark, monkeypatch, chaos_era_dir, out, state
+    )
+    assert again == {}
+    assert len(resume_jobs) == 1 and resume_writes == []
+
+
+def test_plan_on_missing_state_path_runs_no_job(spark, tmp_path):
+    from era_parser_spark.state.era_state import STATE_SCHEMA, EraStateStore
+
+    store = EraStateStore(spark, str(tmp_path / "never_written"))
+    group = f"plan_{uuid.uuid4().hex}"
+    found = [(7, "b.era"), (3, "a.era")]
+    with _job_group(spark, group):
+        planned = store.plan_pending(found, "gnosis")
+        assert store.max_retries("gnosis", [3, 7]) == {3: 0, 7: 0}
+    assert planned == [(3, "a.era", 0), (7, "b.era", 0)]
+    assert _job_ids(spark, group) == []
+    assert store.log().schema == STATE_SCHEMA
+
+
+def test_unreadable_state_path_raises(spark, era_dir, tmp_path):
+    """A state path that cannot be listed must fail the run, not read as an
+    empty log: "nothing completed" would reprocess the whole archive."""
+    from py4j.protocol import Py4JJavaError
+
+    from era_parser_spark.state.era_state import EraStateStore
+    from era_parser_spark.streaming.incremental import run_incremental
+
+    state = "nosuchfs://bucket/_era_state"
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        EraStateStore(spark, state).log()
+    out = str(tmp_path / "wh")
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        run_incremental(spark, era_dir, out, state, "gnosis", tables=["blocks"])
+    assert not os.path.exists(out)  # nothing was planned, decoded or written
