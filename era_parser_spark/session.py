@@ -10,6 +10,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Generated classes kept per session; Spark's default is 100.  One
+# perfbench era_ingest pass (run_incremental, its resume and the 13 beacon
+# queries) generates 275 classes, one llm_ops pass 206.  The cache is a
+# Guava LRU split into 4 segments that each evict at their share of the
+# limit, so at 100 every warm pass recompiled its whole class set with
+# Janino and ran fresh bytecode the JIT had not seen.  2000 holds several
+# passes of either.
+CODEGEN_CACHE_MAX_ENTRIES = 2000
+
 
 def get_spark(
     app_name: str = "era_parser_spark",
@@ -41,6 +50,8 @@ def get_spark(
         )
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.ui.explainMode", "formatted")
+        # Static conf: takes effect only when this call creates the session.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )

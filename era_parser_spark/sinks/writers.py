@@ -42,7 +42,8 @@ def write_parquet(
 ) -> None:
     """Partitioned parquet sink; Catalyst prunes partitions on read filters.
 
-    With partition_by_era + spark.sql.sources.partitionOverwriteMode=dynamic,
+    With partition_by_era the write overwrites partitions dynamically (a
+    writer option, so the session conf is left as the caller set it):
     re-writing one era replaces exactly that era's partition (D3 semantics).
     """
     parts = []
@@ -54,6 +55,8 @@ def write_parquet(
     writer = df.write.mode(mode)
     if parts:
         writer = writer.partitionBy(*parts)
+    if "era_number" in parts:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(path)
     if metadata is not None:
         _write_sidecar(path, metadata)
@@ -326,19 +329,12 @@ def compact_dataset(
             * F.element_at(bucket_map, F.col(col).cast("string"))
         ).cast("int"),
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            salted.repartition(n_out, F.col(col), F.col("__salt"))
-            .drop("__salt")
-            .write.mode("overwrite")
-            .partitionBy(col)
-            .parquet(path)
-        )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    (
+        salted.repartition(n_out, F.col(col), F.col("__salt"))
+        .drop("__salt")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
     return {k.split("=", 1)[1]: n for k, (n, _) in sorted(todo.items())}

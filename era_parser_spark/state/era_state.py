@@ -394,8 +394,6 @@ def process_era_atomic(
     era_number (D3): a retry after a mid-write failure replaces the same
     partitions instead of duplicating rows — no DELETE pass needed.
     """
-    spark = store.spark
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     retry = store.max_retry(network, era_number)
     store.record(network, era_number, "processing", retry_count=retry + 1)
     counts: dict[str, int] = {}

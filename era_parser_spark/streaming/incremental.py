@@ -114,7 +114,6 @@ def process_eras_batch(
     from era_parser_spark.sinks.writers import write_parquet
 
     spark = store.spark
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     eras = [e for e, _, _ in todo]
     # the attempt number each era's transitions carry in this batch
     attempt = {e: r + 1 for e, _, r in todo}

@@ -319,7 +319,6 @@ def test_compact_dataset_merges_small_files(spark, tmp_path_factory):
     from era_parser_spark.sinks.writers import compact_dataset
 
     out = str(tmp_path_factory.mktemp("compact_ds") / "blocks")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # 6 append batches -> 6 files in each of two era partitions
     for i in range(6):
         spark.createDataFrame(
@@ -353,7 +352,8 @@ def test_compact_dataset_sizes_files_per_partition(spark, tmp_path_factory):
     """With many partitions and a small target, each partition ends up with
     ceil(partition_bytes/target) files — NOT the global ceil(total/target)
     (the round-robin-before-partitionBy bug: every output task touches every
-    partition, multiplying files).  Also: the overwrite-mode conf is restored."""
+    partition, multiplying files).  Also: a session set to static overwrite
+    stays static (the rewrite overwrites dynamically by writer option)."""
     import glob as _g
     import math
     import os
@@ -361,7 +361,6 @@ def test_compact_dataset_sizes_files_per_partition(spark, tmp_path_factory):
     from era_parser_spark.sinks.writers import compact_dataset
 
     out = str(tmp_path_factory.mktemp("compact_sz") / "events")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     rng_payloads = ["".join(chr(97 + (i * 7 + k) % 26) for k in range(400)) for i in range(60)]
     for i in range(6):  # 6 append batches x 8 partitions
         spark.createDataFrame(
@@ -398,7 +397,6 @@ def test_compact_dataset_sizes_files_per_partition(spark, tmp_path_factory):
         )
     after = sorted((r.era, r.seq) for r in spark.read.parquet(out).collect())
     assert after == rows_before
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
 
 def test_digest_dedup_state_across_microbatches(spark, tmp_path_factory):
@@ -808,6 +806,75 @@ def test_batched_run_job_counts(spark, chaos_era_dir, tmp_path_factory, monkeypa
     )
     assert again == {}
     assert len(resume_jobs) == 1 and resume_writes == []
+
+
+def test_repeat_pass_compiles_no_new_classes(spark, chaos_era_dir, tmp_path_factory):
+    """Codegen-cache pin.  A pass is the product loop: run_incremental into
+    a fresh warehouse and state path, then the beacon queries over what it
+    wrote (~165 generated classes here).  A second identical pass must find
+    every class in the session's cache; with Spark's default 100 entries it
+    recompiled ~160 of them.  A failure here after adding operators means
+    the per-pass class set grew past CODEGEN_CACHE_MAX_ENTRIES: raise the
+    constant."""
+    from era_parser_spark.operators.beacon_analytics import BEACON_QUERIES
+    from era_parser_spark.session import CODEGEN_CACHE_MAX_ENTRIES
+    from era_parser_spark.streaming.incremental import run_incremental
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    base = tmp_path_factory.mktemp("codegen_pin")
+
+    def one_pass(tag):
+        out = str(base / tag)
+        result = run_incremental(spark, chaos_era_dir, out, f"{out}_state", "gnosis")
+        answers = {
+            q: sorted(fn(*[spark.read.parquet(f"{out}/{t}") for t in tables]).collect())
+            for q, (fn, tables) in BEACON_QUERIES.items()
+            if all(os.path.isdir(f"{out}/{t}") for t in tables)
+        }
+        return result, answers
+
+    first = one_pass("a")
+    before = compiles.getCount()
+    second = one_pass("b")
+    recompiled = compiles.getCount() - before
+    assert second == first
+    assert sorted(second[0]) == [1400, 1401] and len(second[1]) >= 5
+    assert recompiled <= 5, f"{recompiled} classes recompiled on a repeat pass"
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_MAX_ENTRIES
+    )
+
+
+def test_ingest_leaves_partition_overwrite_mode_alone(
+    spark, chaos_era_dir, tmp_path_factory
+):
+    """The era writes overwrite partitions dynamically through a writer
+    option, not the session conf: after an ingest a session set to static
+    still reads static, and a one-era re-run keeps the other era's
+    partition."""
+    from era_parser_spark.streaming.incremental import run_incremental
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        base = tmp_path_factory.mktemp("overwrite_mode")
+        out, state = str(base / "wh"), str(base / "state")
+        first = run_incremental(spark, chaos_era_dir, out, state, "gnosis",
+                                tables=["blocks"])
+        assert spark.conf.get(key) == "static"
+        again = run_incremental(spark, chaos_era_dir, out, state, "gnosis",
+                                era_range="1401", tables=["blocks"], force=True)
+        assert sorted(again) == [1401]
+        assert spark.conf.get(key) == "static"
+        per_era = {
+            r.era_number: r.cnt
+            for r in spark.read.parquet(f"{out}/blocks").groupBy("era_number")
+            .agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+        assert per_era == {e: first[e]["blocks"] for e in (1400, 1401)}
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_plan_on_missing_state_path_runs_no_job(spark, tmp_path):
