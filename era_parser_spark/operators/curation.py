@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from era_parser_spark.session import rows_frame
+
 _BUCKET = "__pack_bucket"
 _BASE = "__pack_base"
 
@@ -738,7 +740,7 @@ def token_drift_chi2(
             T.StructField("chi2", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return rows_frame(spark, out, schema)
 
 
 def budget_waterfill(

@@ -27,8 +27,13 @@ Scale notes:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
+
+from era_parser_spark.session import rows_frame
 
 # Edge lists at or below this row count take the exact driver union-find
 # fast path instead of the iterative distributed rounds (round 12): a
@@ -71,9 +76,7 @@ def _smallgraph_labels(
             parent[max(ra, rb)] = min(ra, rb)
     label_rows = [(x, find(x)) for x in parent]
     t = base.schema.fields[0].dataType.simpleString()
-    labels = nodes.sparkSession.createDataFrame(
-        label_rows, f"__node {t}, __label {t}"
-    )
+    labels = rows_frame(nodes.sparkSession, label_rows, f"__node {t}, __label {t}")
     return nodes.select(F.col(id_col)).join(
         F.broadcast(labels.withColumnRenamed("__node", id_col)), id_col, "left"
     ).select(
@@ -641,6 +644,13 @@ def bfs_distances(
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
+    # Landmarks are typed from their Python values (ints read as long);
+    # with no landmarks the column takes the node type.
+    lm_type = (
+        from_arrow_type(pa.array(sources).type)
+        if len(sources)
+        else adj.schema["src"].dataType
+    )
     # Small-graph driver fast path (round 12, the SMALL_GRAPH_EDGE_THRESHOLD
     # convention): each distributed wave costs ~6 jobs (join + group +
     # anti-join + two checkpoints + the emptiness probe), pure fixed
@@ -684,11 +694,6 @@ def bfs_distances(
                 f"max_iter={max_iter} waves — raise max_iter or run "
                 "bounded rounds= explicitly"
             )
-        from pyspark.sql import types as T
-
-        lm_type = spark.createDataFrame(
-            [(s,) for s in sources], ["landmark"]
-        ).schema["landmark"].dataType
         schema = T.StructType(
             [
                 T.StructField("landmark", lm_type),
@@ -696,8 +701,12 @@ def bfs_distances(
                 T.StructField("dist", T.LongType()),
             ]
         )
-        return spark.createDataFrame(out_rows, schema)
-    lm = spark.createDataFrame([(s,) for s in sources], ["landmark"])
+        return rows_frame(spark, out_rows, schema)
+    lm = rows_frame(
+        spark,
+        [(s,) for s in sources],
+        T.StructType([T.StructField("landmark", lm_type)]),
+    )
     nodes = adj.select(F.col("src").alias("node")).distinct()
     frontier = (
         lm.join(nodes, lm["landmark"] == nodes["node"], "inner")

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from era_parser_spark.session import rows_frame
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Sequential-fold dot product in doubles (deterministic order)."""
@@ -132,8 +134,8 @@ def centroid_table(
         cents = [
             (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
         ]
-        return df.sparkSession.createDataFrame(
-            cents, "centroid_id long, cvec array<double>"
+        return rows_frame(
+            df.sparkSession, cents, "centroid_id long, cvec array<double>"
         )
     if trainer != "stride":
         raise ValueError(f"unknown centroid trainer: {trainer!r}")
@@ -400,8 +402,8 @@ def all_pairs_topk(
     # kernel above (an arbitrary first() row is not a safe dim witness)
     dim = _mode_dim(df, vec_col)
     if dim is None:
-        return df.sparkSession.createDataFrame(
-            [], "doc_a long, doc_b long, cosine_sim double"
+        return rows_frame(
+            df.sparkSession, [], "doc_a long, doc_b long, cosine_sim double"
         )
     df = df.where(
         F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
@@ -1210,7 +1212,7 @@ def pq_codebook(
     rows = [
         (i, [x for j in range(m) for x in centers[j][i]]) for i in range(k_eff)
     ]
-    return df.sparkSession.createDataFrame(rows, "code_id long, v array<double>")
+    return rows_frame(df.sparkSession, rows, "code_id long, v array<double>")
 
 
 def pq_codes(
@@ -1662,8 +1664,10 @@ def mmr_topk(
                 best = (cid, score)
         chosen.append(best[0])
         selected.append((best[0], rank, rel[best[0]], best[1]))
-    out = df.sparkSession.createDataFrame(
-        selected, f"{id_col} long, rank int, relevance double, mmr_score double"
+    out = rows_frame(
+        df.sparkSession,
+        selected,
+        f"{id_col} long, rank int, relevance double, mmr_score double",
     )
     return out.orderBy("rank")
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from era_parser_spark.operators.dedup import tokens_col
+from era_parser_spark.session import rows_frame
 
 # Pair count above which the LCP walks switch from the lazy single-job
 # chain to the level-skip + per-level-checkpoint strategy (see
@@ -464,9 +465,7 @@ def global_dense_rank(
         offsets.append((int(r["__pid"]), acc))
         acc += int(r["__m"])
     spark = df.sparkSession
-    offs_df = spark.createDataFrame(
-        offsets or [], "__pid int, __off long"
-    )
+    offs_df = rows_frame(spark, offsets, "__pid int, __off long")
     ranked = (
         loc.join(F.broadcast(offs_df), "__pid")
         .withColumn("__gr", F.col("__lr") + F.col("__off"))
@@ -531,7 +530,7 @@ def _adjacent_pairs(
         + tuple(fl[i + 1]["__first"][c] for c in cols)
         for i in range(len(fl) - 1)
     ]
-    boundary = df.sparkSession.createDataFrame(boundary_rows or [], pair_schema)
+    boundary = rows_frame(df.sparkSession, boundary_rows, pair_schema)
     return within.unionByName(boundary)
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 # stand-in counts with, so swapping the tokenizer never changes what a
 # "word" is — only how words split into subwords.
 from era_parser_spark.operators.text import BPE_PATTERN
+from era_parser_spark.session import rows_frame
 
 _RANKS_CACHE: dict[tuple[str, float], dict[tuple[str, str], int]] = {}
 
@@ -385,12 +386,13 @@ def _driver_merge_loop(
         else "rank int, left string, right string, merged string,"
         " pair_count long"
     )
-    merges_df = spark.createDataFrame(out_rows, schema)
+    merges_df = rows_frame(spark, out_rows, schema)
     if return_vocab:
         # the final per-word segmentation, same (w, freq, syms) shape as
         # the distributed word table after all merges.  Words are
         # distinct, so the syms key maps back to exactly one word.
-        vocab_df = spark.createDataFrame(
+        vocab_df = rows_frame(
+            spark,
             [("".join(syms), fq, list(syms)) for syms, fq in vocab.items()],
             "w string, freq long, syms array<string>",
         )
@@ -556,7 +558,8 @@ def bpe_merges_distributed(
         cur = cur.mapInPandas(
             _apply_merge_kernel(a, b), cur.schema
         ).localCheckpoint(eager=True)
-    merges_df = spark.createDataFrame(
+    merges_df = rows_frame(
+        spark,
         out_rows,
         "rank int, left string, right string, merged string, pair_count long",
     )
@@ -718,7 +721,8 @@ def wordpiece_merges_distributed(
         cur = cur.mapInPandas(
             _apply_merge_kernel(a, b), cur.schema
         ).localCheckpoint(eager=True)
-    merges_df = spark.createDataFrame(
+    merges_df = rows_frame(
+        spark,
         out_rows,
         "rank int, left string, right string, merged string,"
         " pair_count long, left_count long, right_count long, score_q long",

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from era_parser_spark.queries.exprs import dsum, sql_dsum
 from era_parser_spark.queries.registry import register, table
+from era_parser_spark.session import rows_frame
 
 
 @register(
@@ -196,9 +197,10 @@ def x6_range_join(spark, sf_dir):
     """Banded range join against a tiny broadcast band table (Spark plans a
     broadcast nested-loop — the right physical plan for bands)."""
     li = table(spark, sf_dir, "lineitem")
-    buckets = li.sparkSession.createDataFrame(
+    buckets = rows_frame(
+        li.sparkSession,
         [(0.0, 10.0, "low"), (10.0, 25.0, "mid"), (25.0, 1e9, "high")],
-        ["lo", "hi", "label"],
+        "lo double, hi double, label string",
     )
     return (
         li.join(

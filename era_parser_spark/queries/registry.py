@@ -131,45 +131,57 @@ _FIRST_50 = [
     # none ever driver-gated; 90 never-gated remained after r11 — this
     # puts the round-11/12 additions and long-ungated flagships through
     # the external gate).
+    # Local-frames rotation out: dd18, s11c, s18, t31, t34, p2, p15, p19,
+    # x38, st8, st13, d2, q1 (each gated since r11 or earlier).  In: x6,
+    # t37, p17 — the only never-gated entries that build a frame through
+    # session.rows_frame (range-join bands, the WordPiece driver trainer,
+    # the chi2 drift table) — plus never-gated s10, s11b, t22, p13, p18,
+    # x25, st9, st15, d6, q5.  "Never gated" = in no _FIRST_50 of this
+    # file's history and not in the module-order prefix rounds 1-8
+    # sampled; 92 remain.
     # dedup flagship: full pipeline w/ quality keeper, ExactSubstr cut +
-    # routed drop, learned-cluster SemDeDup, multimodal pHash clusters
+    # routed drop, multimodal pHash clusters
     "dd9c_fuzzy_dedup_quality_keeper",
-    "dd18_semdedup_kmeans",
     "dd19_exactsubstr_drop_routed",
     "dd20_exactsubstr_drop_refined",
     "mm10_phash_dup_clusters",
-    # similarity / selection: IVF-PQ search + rerank, MMR, k-center init
+    # similarity / selection: PQ codes + residual IVF-PQ, IVF-PQ search,
+    # MMR
+    "s10_pq_codes",
     "s11_ivf_pq_search",
-    "s11c_ivf_pq_rerank",
+    "s11b_ivf_pq_residual",
     "s12_mmr_diversify",
-    "s18_kmeans_kcenter_init",
-    # text: distributed BPE train, WordPiece train, suffix family incl.
-    # the round-11 chunked repeat routing, C4 gate
+    # text: C4 gate, WordPiece train + count, BM25, suffix family incl.
+    # the round-11 chunked repeat routing
+    "t22_bm25_topk",
     "t28_c4_rules",
-    "t31_bpe_merges",
-    "t34_longest_repeat",
     "t35_cross_doc_span",
+    "t37_wordpiece_token_counts",
     "t40_longest_repeat_chunked",
     "t41_cross_doc_span_refined",
-    # curation pipelines: packing, v3, v4, v5, v6 (learned-BPE budget)
-    "p2_sequence_packing",
-    "p15_curation_v3",
-    "p19_curation_v4",
+    # curation pipelines: corpus report, chi2 drift, budget waterfill,
+    # v5, v6 (learned-BPE budget)
+    "p13_corpus_report",
+    "p17_source_drift_chi2",
+    "p18_budget_waterfill",
     "p20_curation_v5",
     "p21_curation_v6",
-    # sequence / interval / graph analytics
-    "x38_peak_concurrency",
+    # analytics / graph: range-join bands, PageRank, k-core, MAD
+    # outliers, BFS landmarks
+    "x6_range_join",
+    "x25_pagerank",
     "x39_kcore",
     "x40_mad_outliers",
     "x42_bfs_distances",
-    # streaming: stream-stream join, batch-trained serving, custom stateful
-    "st8_stream_stream_join",
-    "st13_stream_cluster_counts",
+    # streaming: near-dedup band monitor, robust-outlier monitor, custom
+    # stateful as-of + token budget
+    "st9_stream_near_dedup",
+    "st15_stream_mad_outlier_counts",
     "st16_stream_asof_enrich",
     "st17_stream_token_budget",
     # state management + TPC-H
-    "d2_latest_state",
-    "q1_pricing_summary",
+    "d6_status_summary",
+    "q5_local_supplier_volume",
 ]
 
 

@@ -7,8 +7,12 @@ real cluster (AQE, shuffle partitions sized to parallelism, Arrow on).
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Generated classes kept per session; Spark's default is 100.  One
 # perfbench era_ingest pass (run_incremental, its resume and the 13 beacon
@@ -60,3 +64,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def rows_frame(
+    spark: SparkSession,
+    rows: Sequence[tuple] | Sequence[dict],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """Rows the driver already holds as a DataFrame, built through a
+    pyarrow.Table typed by `schema` (a StructType or a DDL string such as
+    "id long, v array<double>").  Rows are tuples in schema order or
+    dicts keyed by field name (a missing key is null).  A naive datetime
+    in a timestamp column reads as UTC; the list path read it in the
+    host's local zone, so the two differ off UTC hosts.
+
+    A Python-list createDataFrame sends the rows through a PythonRDD map
+    with one task per core, and every Python task pays ~0.2 CPU-s of
+    worker set-up before it runs any code; an Arrow table reaches the JVM
+    as record batches and starts no Python worker.  Every local-rows
+    frame in the package goes through here (docs/PLANS.md "Local frames
+    through Arrow")."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if rows and isinstance(rows[0], dict):
+        table = pa.Table.from_pylist(list(rows), schema=arrow_schema)
+    else:
+        cols = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+        table = pa.Table.from_arrays(
+            [
+                pa.array(c, type=f.type)
+                for c, f in zip(cols, arrow_schema, strict=True)
+            ],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(table, schema)

@@ -41,6 +41,7 @@ from era_parser_spark.parsing import arrow_direct as _arrow_direct
 from era_parser_spark.parsing import ssz
 from era_parser_spark.parsing.beacon import BODY_SCHEMAS, block_schema
 from era_parser_spark.parsing.beacon import parse_block
+from era_parser_spark.session import rows_frame
 
 # body fields each normalized table needs (drives pruned decode)
 TABLE_BODY_FIELDS: dict[str, set[str]] = {
@@ -121,6 +122,18 @@ def _fetch_era_bytes(path: str) -> bytes:
         with urllib.request.urlopen(path, timeout=120) as resp:
             return resp.read()
     raise ValueError(f"no task-side fetch for {path!r}")
+
+
+def _url_rows(spark: SparkSession, urls: list, glob: str | None) -> DataFrame:
+    """One `path` row per http(s) URL whose file name matches `glob`, one
+    URL per partition (each task fetches its own file)."""
+    import fnmatch
+
+    keep = [
+        (u,) for u in urls
+        if glob is None or fnmatch.fnmatch(str(u).rsplit("/", 1)[-1], glob)
+    ]
+    return rows_frame(spark, keep, "path string").repartition(len(keep) or 1)
 
 
 def _era_path_filter(slot_range: tuple[int, int]) -> F.Column:
@@ -418,15 +431,7 @@ def read_era_blocks(
     in_paths = [paths] if isinstance(paths, str) else list(paths)
     is_http = all(str(p).startswith(("http://", "https://")) for p in in_paths)
     if is_http:
-        import fnmatch
-
-        urls = [
-            p for p in in_paths
-            if glob is None or fnmatch.fnmatch(str(p).rsplit("/", 1)[-1], glob)
-        ]
-        src = spark.createDataFrame(
-            [(u,) for u in urls], T.StructType([T.StructField("path", T.StringType())])
-        ).repartition(len(urls) or 1)
+        src = _url_rows(spark, in_paths, glob)
     else:
         reader = spark.read.format("binaryFile")
         if glob:
@@ -521,15 +526,7 @@ def validate_era_files(
     ensure_package_shipped(spark)
     in_paths = [paths] if isinstance(paths, str) else list(paths)
     if all(str(p).startswith(("http://", "https://")) for p in in_paths):
-        import fnmatch
-
-        urls = [
-            p for p in in_paths
-            if glob is None or fnmatch.fnmatch(str(p).rsplit("/", 1)[-1], glob)
-        ]
-        src = spark.createDataFrame(
-            [(u,) for u in urls], T.StructType([T.StructField("path", T.StringType())])
-        ).repartition(len(urls) or 1)
+        src = _url_rows(spark, in_paths, glob)
     else:
         reader = spark.read.format("binaryFile")
         if glob:

@@ -31,12 +31,11 @@ from __future__ import annotations
 import time
 import traceback
 
-import pyarrow as pa
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+
+from era_parser_spark.session import rows_frame
 
 STATE_SCHEMA = T.StructType(
     [
@@ -52,19 +51,6 @@ STATE_SCHEMA = T.StructType(
         T.StructField("insert_version", T.LongType(), False),  # ns timestamp
     ]
 )
-
-
-def rows_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
-    """Local rows (dicts keyed by field name; missing keys are null) as a
-    DataFrame, built through a pyarrow.Table typed by `schema`.
-
-    A Python-list createDataFrame runs the rows through a Python RDD and
-    its worker processes — ~1 CPU-s even for one row — while an Arrow
-    table is handed to the JVM as record batches.  Every local-rows frame
-    in the state package (log appends, the empty log, the migration log)
-    goes through here."""
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
 
 
 class StateLockHeld(RuntimeError):

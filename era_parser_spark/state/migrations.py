@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from era_parser_spark.state.era_state import rows_frame
+from era_parser_spark.session import rows_frame
 
 _LOG_SCHEMA = T.StructType(
     [

@@ -142,3 +142,23 @@ def test_alternating_singletons_and_shapes(spark):
     assert got == _union_find(nodes, edges)
     got_empty = _run_alt(spark, [5, 6, 7], [])
     assert got_empty == {5: 5, 6: 6, 7: 7}
+
+
+def test_bfs_no_landmarks_returns_empty_typed_frame(spark, monkeypatch):
+    """bfs_distances(edges, []) is an empty (landmark, node, dist) frame
+    with the landmark typed like the nodes, on the driver fast path and
+    on the distributed waves alike."""
+    import era_parser_spark.operators.graph as gr
+
+    for ddl, edges, node_type in (
+        ("src long, dst long", [(1, 2), (2, 3)], "bigint"),
+        ("src string, dst string", [("a", "b"), ("b", "c")], "string"),
+    ):
+        e = spark.createDataFrame(edges, ddl)
+        for thr in (1_000_000, -1):
+            monkeypatch.setattr(gr, "SMALL_GRAPH_EDGE_THRESHOLD", thr)
+            out = gr.bfs_distances(e, sources=[])
+            assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+                ("landmark", node_type), ("node", node_type), ("dist", "bigint"),
+            ]
+            assert out.collect() == []
