@@ -392,8 +392,9 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--force", action="store_true")
     sp.add_argument("--network", default=None)
     sp.add_argument("--per-era", action="store_true", dest="per_era",
-                    help="serial era-at-a-time processing (reference-shaped); "
-                         "default is one distributed job over all pending eras")
+                    help="one-era batches in era order, stopping at the first "
+                         "failed era (reference-shaped); default is one batch "
+                         "over all pending eras")
     sp.add_argument("--exclusive", action="store_true",
                     help="take the state-log lock for the run (multi-driver guard)")
     sp.set_defaults(fn=cmd_batch)

@@ -91,6 +91,8 @@ def dd2_ngram_jaccard_topk(spark, sf_dir):
     # Connected components re-derived in SQL: same thresholded Jaccard edge
     # list, then a recursive CTE propagating min reachable doc_id (UNION
     # dedups rows, so the recursion terminates at the transitive closure).
+    # The edge CTE is MATERIALIZED: the recursion re-reads it every round
+    # and DuckDB inlines plain CTEs, re-running the shingle self-join.
     oracle=f"""
     WITH RECURSIVE
     sh AS (SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents),
@@ -106,7 +108,7 @@ def dd2_ngram_jaccard_topk(spark, sf_dir):
       JOIN sizes sb ON sb.doc_id = doc_b
       WHERE CAST(inter AS DOUBLE) / (sa.nsh + sb.nsh - inter) >= 0.5
     ),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT doc_a AS src, doc_b AS dst FROM dup_edges
       UNION ALL SELECT doc_b, doc_a FROM dup_edges
     ),
@@ -195,7 +197,7 @@ def dd3_minhash_lsh(spark, sf_dir):
       JOIN sizes sb ON sb.doc_id = doc_b
       WHERE CAST(inter AS DOUBLE) / (sa.nsh + sb.nsh - inter) >= 0.5
     ),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT doc_a AS src, doc_b AS dst FROM dup_edges
       UNION ALL SELECT doc_b, doc_a FROM dup_edges
     ),
@@ -472,7 +474,8 @@ def _dd9_ctes(src: str = "documents") -> str:
     """The brute-force fuzzy-dedup cluster CTEs (shingle pairs -> exact
     Jaccard edges -> recursive reachability -> min-label clusters),
     parameterized on the source relation so pipeline oracles can run the
-    same clustering over a FILTERED corpus CTE (p20)."""
+    same clustering over a FILTERED corpus CTE (p20).  ``edges`` is
+    MATERIALIZED for the same reason as in dd5's oracle."""
     return f"""
     sh AS (SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM {src}),
     sizes AS (SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id),
@@ -487,7 +490,7 @@ def _dd9_ctes(src: str = "documents") -> str:
       JOIN sizes sb ON sb.doc_id = doc_b
       WHERE CAST(inter AS DOUBLE) / (sa.nsh + sb.nsh - inter) >= 0.5
     ),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT doc_a AS src, doc_b AS dst FROM dup_edges
       UNION ALL SELECT doc_b, doc_a FROM dup_edges
     ),

@@ -1079,7 +1079,8 @@ def _p19_oracle() -> str:
         FROM w
       ) WHERE rn = (n + 1) // 2
     ),
-    surv AS (SELECT w.doc_id FROM w, medv WHERE w.w_mean > medv.mv),
+    -- MATERIALIZED: the Lloyd chain reads ex (hence surv) once per CTE
+    surv AS MATERIALIZED (SELECT w.doc_id FROM w, medv WHERE w.w_mean > medv.mv),
     sex AS (
       SELECT doc_id, t
       FROM (SELECT d.doc_id, unnest({tok}) AS t

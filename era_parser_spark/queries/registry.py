@@ -139,46 +139,52 @@ _FIRST_50 = [
     # x25, st9, st15, d6, q5.  "Never gated" = in no _FIRST_50 of this
     # file's history and not in the module-order prefix rounds 1-8
     # sampled; 92 remain.
+    # One-ingest-path rotation out: mm10, s11, s12, t28, t40, t41, p20,
+    # p21, x39, x40, st16, st17 (each gated since r12 or earlier).  In:
+    # never-gated mm9, s5, s14, t10, t13, t26, p5, p10, x26, x41, st4,
+    # st12.  Counted strictly — an entry in the module-order first 50 at
+    # ANY commit of this file's package history counts as gated — 63 were
+    # never gated before this swap and 51 remain.
     # dedup flagship: full pipeline w/ quality keeper, ExactSubstr cut +
-    # routed drop, multimodal pHash clusters
+    # routed drop, multimodal pHash pairs
     "dd9c_fuzzy_dedup_quality_keeper",
     "dd19_exactsubstr_drop_routed",
     "dd20_exactsubstr_drop_refined",
-    "mm10_phash_dup_clusters",
-    # similarity / selection: PQ codes + residual IVF-PQ, IVF-PQ search,
-    # MMR
+    "mm9_image_phash_pairs",
+    # similarity / selection: PQ codes + residual IVF-PQ, kNN join, SQ8
+    # top-k
+    "s5_knn_join",
     "s10_pq_codes",
-    "s11_ivf_pq_search",
     "s11b_ivf_pq_residual",
-    "s12_mmr_diversify",
-    # text: C4 gate, WordPiece train + count, BM25, suffix family incl.
-    # the round-11 chunked repeat routing
+    "s14_sq8_topk",
+    # text: PII redaction, n-gram top-k, hash embeddings, WordPiece
+    # train + count, BM25, suffix family
+    "t10_pii_redact",
+    "t13_ngram_topk",
     "t22_bm25_topk",
-    "t28_c4_rules",
+    "t26_hash_embed",
     "t35_cross_doc_span",
     "t37_wordpiece_token_counts",
-    "t40_longest_repeat_chunked",
-    "t41_cross_doc_span_refined",
-    # curation pipelines: corpus report, chi2 drift, budget waterfill,
-    # v5, v6 (learned-BPE budget)
+    # curation pipelines: temperature mix, token budget cap, corpus
+    # report, chi2 drift, budget waterfill
+    "p5_temperature_mix",
+    "p10_token_budget_cap",
     "p13_corpus_report",
     "p17_source_drift_chi2",
     "p18_budget_waterfill",
-    "p20_curation_v5",
-    "p21_curation_v6",
-    # analytics / graph: range-join bands, PageRank, k-core, MAD
-    # outliers, BFS landmarks
+    # analytics / graph: range-join bands, PageRank, label propagation,
+    # state durations, BFS landmarks
     "x6_range_join",
     "x25_pagerank",
-    "x39_kcore",
-    "x40_mad_outliers",
+    "x26_label_propagation",
+    "x41_state_durations",
     "x42_bfs_distances",
-    # streaming: near-dedup band monitor, robust-outlier monitor, custom
-    # stateful as-of + token budget
+    # streaming: near-dedup band monitor, robust-outlier monitor, exact
+    # dedup, window funnel
+    "st4_stream_exact_dedup",
     "st9_stream_near_dedup",
+    "st12_stream_window_funnel",
     "st15_stream_mad_outlier_counts",
-    "st16_stream_asof_enrich",
-    "st17_stream_token_budget",
     # state management + TPC-H
     "d6_status_summary",
     "q5_local_supplier_volume",

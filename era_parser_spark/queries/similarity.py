@@ -584,7 +584,9 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
     picks argmax(lam*rel - (1-lam)*max sim to selected) over the pool
     minus the selected set, ties on vec_id.  All sims DECIMAL(10,6)-
     quantized; lam products/subtractions are single IEEE ops — identical
-    to the operator's driver-side arithmetic."""
+    to the operator's driver-side arithmetic.  Every sel{i} is
+    MATERIALIZED: each later step reads all earlier ones, and DuckDB
+    would inline them per reference."""
     q = "(SELECT embedding FROM embeddings WHERE vec_id = 0)::DOUBLE[]"
     parts = [
         f"""WITH pool AS (
@@ -602,7 +604,7 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
       JOIN embeddings ea ON ea.vec_id = a.vec_id
       JOIN embeddings eb ON eb.vec_id = b.vec_id
     ),
-    sel1 AS (
+    sel1 AS MATERIALIZED (
       SELECT vec_id, rel, CAST({lam} AS DOUBLE) * rel AS score
       FROM pool ORDER BY score DESC, vec_id LIMIT 1
     )"""
@@ -613,7 +615,7 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
         )
         parts.append(
             f""",
-    sel{i} AS (
+    sel{i} AS MATERIALIZED (
       SELECT p.vec_id, p.rel,
              CAST({lam} AS DOUBLE) * p.rel
              - (CAST(1.0 AS DOUBLE) - CAST({lam} AS DOUBLE)) * (
@@ -992,9 +994,11 @@ def kcenter_select_ctes(k: int) -> list[str]:
     (kmeans_lloyd_ctes' quantization fragments): cen_0 = smallest id;
     round r computes every point's min distance to cen_{r-1} and appends
     the argmax under (mind DESC, vec_id ASC); ``cen_fin`` is the DISTINCT
-    selected set.  Shared by s17 and s18's init."""
+    selected set.  Shared by s17 and s18's init.  The cen_{r} are
+    MATERIALIZED: md_{r+1} and cen_{r+1} both read cen_{r}, so inlined
+    (DuckDB's default) the chain re-expands exponentially in k."""
     parts = [
-        """cen_0 AS (
+        """cen_0 AS MATERIALIZED (
       SELECT vec_id FROM qv ORDER BY vec_id LIMIT 1
     )"""
     ]
@@ -1011,7 +1015,7 @@ def kcenter_select_ctes(k: int) -> list[str]:
     )"""
         )
         parts.append(
-            f"""cen_{r} AS (
+            f"""cen_{r} AS MATERIALIZED (
       SELECT vec_id FROM cen_{r - 1}
       UNION ALL
       SELECT vec_id FROM (SELECT vec_id FROM md_{r}

@@ -7,9 +7,9 @@ ReplacingMergeTree(insert_version) semantics plus an era_status latest-view
 
 Spark shape: an append-only parquet log of status transitions; the latest
 state is an exact window dedup (argmax insert_version per network+era).
-Appends are tiny (one row per transition) — the log is a metadata table,
-not a data table, so a single-file append per era is the right cost model
-even at 100 TB of block data.
+Appends are tiny (one row per era transition, one file per batch) — the
+log is a metadata table, not a data table, so a single-file append per
+batch is the right cost model even at 100 TB of block data.
 
 Idempotent data writes (D3's delete-then-insert) come from dynamic
 partition overwrite on era_number: reprocessing an era atomically replaces
@@ -29,7 +29,6 @@ on S3, where a manifest-conditional-put service should replace it).
 from __future__ import annotations
 
 import time
-import traceback
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -130,30 +129,6 @@ class EraStateStore:
 
     # -- log primitives ------------------------------------------------------
 
-    def record(
-        self,
-        network: str,
-        era_number: int,
-        status: str,
-        total_records: int | None = None,
-        datasets: list[str] | None = None,
-        error_message: str | None = None,
-        retry_count: int = 0,
-    ) -> None:
-        self.record_many(
-            [
-                {
-                    "network": network,
-                    "era_number": era_number,
-                    "status": status,
-                    "total_records": total_records,
-                    "datasets": datasets,
-                    "error_message": error_message,
-                    "retry_count": retry_count,
-                }
-            ]
-        )
-
     def record_many(self, rows: list[dict]) -> None:
         """One append for N status transitions: one Spark job, one file.
 
@@ -248,13 +223,9 @@ class EraStateStore:
             )
         )
 
-    def max_retry(self, network: str, era_number: int) -> int:
-        """D7: COALESCE(MAX(retry_count), 0)."""
-        return self.max_retries(network, [era_number])[era_number]
-
     def max_retries(self, network: str, eras: list[int]) -> dict[int, int]:
-        """Bulk D7 over era_summary's one read (max_retry per era would be
-        N jobs; this is 1)."""
+        """D7, COALESCE(MAX(retry_count), 0), for each era in `eras` from
+        era_summary's one read."""
         if not eras:
             return {}
         summary = self.era_summary(network)
@@ -366,56 +337,3 @@ class EraStateStore:
             if era not in done
         )
 
-
-def process_era_atomic(
-    store: EraStateStore,
-    network: str,
-    era_number: int,
-    tables: dict[str, DataFrame],
-    out_base: str,
-) -> dict[str, int]:
-    """D8: processing -> write all datasets -> completed / failed.
-
-    Data writes are idempotent via dynamic partition overwrite on
-    era_number (D3): a retry after a mid-write failure replaces the same
-    partitions instead of duplicating rows — no DELETE pass needed.
-    """
-    retry = store.max_retry(network, era_number)
-    store.record(network, era_number, "processing", retry_count=retry + 1)
-    counts: dict[str, int] = {}
-    try:
-        from era_parser_spark.sinks.writers import write_parquet
-
-        for name, df in tables.items():
-            era_df = df.withColumn("era_number", F.lit(era_number)).cache()
-            n = era_df.count()
-            if n > 0:
-                # empty datasets are skipped (reference skips them too, A13);
-                # an all-empty write would also leave no readable schema
-                write_parquet(
-                    era_df,
-                    f"{out_base}/{name}",
-                    partition_by_month=False,
-                    partition_by_era=True,
-                    mode="overwrite",
-                )
-            era_df.unpersist()
-            counts[name] = n
-        store.record(
-            network,
-            era_number,
-            "completed",
-            total_records=sum(counts.values()),
-            datasets=sorted(counts),
-            retry_count=retry + 1,
-        )
-        return counts
-    except Exception as exc:  # noqa: BLE001 - status must record any failure
-        store.record(
-            network,
-            era_number,
-            "failed",
-            error_message=f"{type(exc).__name__}: {exc}\n{traceback.format_exc()[:2000]}",
-            retry_count=retry + 1,
-        )
-        raise

@@ -2,9 +2,12 @@
 
 run_incremental() is the reference's remote/batch lifecycle (§3.2) rebuilt
 on Spark primitives: inventory -> minus the state store's completed eras (D1) ->
-per-era atomic processing (D8) with partition-overwrite idempotency (D3).
-Era archives are closed/past data, so the reference needs no watermarks —
-"process new files, skip done ones" is exactly this.
+process_eras_batch, the one ingest path: processing -> write all tables ->
+completed/failed per era (D8), with partition-overwrite idempotency (D3).
+It takes all pending eras in one batch, or (per_era) one-era batches in
+era order that stop at the first failure.  Era archives are closed/past
+data, so the reference needs no watermarks — "process new files, skip done
+ones" is exactly this.
 
 For live consumption of the *normalized* tables (new eras landing as
 parquet), stream_blocks()/windowed_block_rate() give a real Structured
@@ -16,7 +19,9 @@ across micro-batches — something no stateless query can do.
 
 from __future__ import annotations
 
+import traceback
 from collections.abc import Iterator
+from contextlib import nullcontext
 
 import pandas as pd
 
@@ -26,7 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from era_parser_spark.sources.era import read_era_blocks
-from era_parser_spark.state.era_state import EraStateStore, process_era_atomic
+from era_parser_spark.state.era_state import EraStateStore
 
 
 def run_incremental(
@@ -46,8 +51,10 @@ def run_incremental(
 
     Default (batched): ALL pending eras go through one distributed job per
     table — one scan parallelized across era files, one partitioned write —
-    which is the 100 TB shape (the reference loops eras serially; so does
-    per_era=True here, trading throughput for era-granular status rows).
+    which is the 100 TB shape.  per_era=True runs the same batch path on
+    one-era batches in era order, as the reference loops eras serially:
+    it stops at the first failure, so the eras before it stay completed,
+    the failing era is marked failed and later eras get no status row.
     Idempotency is identical either way: era_number partition overwrite +
     status log; a mid-job failure leaves eras 'processing' and the next run
     redoes exactly those partitions.
@@ -60,38 +67,19 @@ def run_incremental(
     from era_parser_spark.sources.discovery import discover_auto, filter_era_range
 
     store = EraStateStore(spark, state_path)
-    if exclusive:
-        with store.exclusive(owner=f"run_incremental:{network}"):
-            return run_incremental(
-                spark, era_dir, out_base, state_path, network=network,
-                era_range=era_range, tables=tables, force=force, per_era=per_era,
-            )
-    # era_dir may be a local dir, s3://bucket/prefix, or an http(s) listing
-    # URL (the reference's --remote flow); downloads stay task-side either way
-    found = filter_era_range(discover_auto(era_dir, network), era_range)
-    # one state-log read plans the run and carries each era's retry count
-    todo = store.plan_pending(found, network, force=force)
-    if not todo:
-        return {}
-
-    if per_era:
-        from era_parser_spark.operators.normalize import all_tables
-
+    with store.exclusive(owner=f"run_incremental:{network}") if exclusive else nullcontext():
+        # era_dir may be a local dir, s3://bucket/prefix, or an http(s) listing
+        # URL (the reference's --remote flow); downloads stay task-side either way
+        found = filter_era_range(discover_auto(era_dir, network), era_range)
+        # one state-log read plans the run and carries each era's retry count
+        todo = store.plan_pending(found, network, force=force)
+        if not todo:
+            return {}
         results: dict[int, dict[str, int]] = {}
-        for era_number, path, _ in todo:
-            blocks = read_era_blocks(spark, path, network=network, tables=tables).cache()
-            try:
-                tbls = all_tables(blocks, tables)
-                results[era_number] = process_era_atomic(
-                    store, network, era_number, tbls, out_base
-                )
-            finally:
-                blocks.unpersist()
+        # per_era: one-era batches in era order; the first failure raises
+        for batch in [[item] for item in todo] if per_era else [todo]:
+            results.update(process_eras_batch(store, network, batch, out_base, tables=tables))
         return results
-
-    return process_eras_batch(
-        store, network, todo, out_base, tables=tables
-    )
 
 
 def process_eras_batch(
@@ -101,11 +89,13 @@ def process_eras_batch(
     out_base: str,
     tables: list[str] | None = None,
 ) -> dict[int, dict[str, int]]:
-    """One distributed job for all pending eras: scan every era file in
-    parallel, write each table once partitioned by era_number (dynamic
-    overwrite replaces exactly the touched eras), then flip all statuses.
+    """The one ingest path: one distributed job for a batch of eras —
+    scan every era file in parallel, write each table once partitioned by
+    era_number (dynamic overwrite replaces exactly the touched eras), then
+    flip all statuses.
 
-    `todo` is plan_pending's (era_number, path, retry_count) list.  The
+    `todo` is plan_pending's (era_number, path, retry_count) list, or a
+    one-era slice of it when run_incremental runs per era.  The
     bookkeeping around the writes is one staging write, one row-count
     aggregate (two jobs under AQE: its shuffle map stage and its result)
     and two state appends — no job per table besides its write.
@@ -117,7 +107,7 @@ def process_eras_batch(
     eras = [e for e, _, _ in todo]
     # the attempt number each era's transitions carry in this batch
     attempt = {e: r + 1 for e, _, r in todo}
-    # one log append for the whole batch (per-era record() would be N
+    # one log append for the whole batch (an append per era would be N
     # Spark jobs and N tiny files)
     store.record_many(
         [
@@ -182,7 +172,7 @@ def process_eras_batch(
         store.record_many(
             [
                 {"network": network, "era_number": era, "status": "failed",
-                 "error_message": f"{type(exc).__name__}: {exc}"[:2000],
+                 "error_message": f"{type(exc).__name__}: {exc}\n{traceback.format_exc()}"[:2000],
                  "retry_count": attempt[era]}
                 for era in eras
             ]

@@ -45,7 +45,7 @@ def test_incremental_run_skips_completed(spark, era_dir, tmp_path_factory):
     store = EraStateStore(spark, state_path)
     summary = {r.status: r.era_count for r in store.status_summary("gnosis").collect()}
     assert summary == {"completed": 3}
-    assert store.max_retry("gnosis", 1300) == 1
+    assert store.max_retries("gnosis", [1300])[1300] == 1
 
     # data landed partitioned by era; re-running one era with force replaces
     # exactly that partition (idempotent D3 overwrite), not duplicating rows.
@@ -59,24 +59,39 @@ def test_incremental_run_skips_completed(spark, era_dir, tmp_path_factory):
     )
     assert sorted(third) == [1301]
     assert spark.read.parquet(f"{out}/blocks").count() == before
-    assert store.max_retry("gnosis", 1301) == 2
+    assert store.max_retries("gnosis", [1301])[1301] == 2
 
 
-def test_failed_status_recorded(spark, era_dir, tmp_path_factory):
-    from era_parser_spark.state.era_state import EraStateStore, process_era_atomic
+def test_per_era_failure_stops_at_failed_era(spark, era_dir, tmp_path_factory, monkeypatch):
+    """D8 per-era status model: a write failure in the second era leaves the
+    first completed, marks the second failed with the exception type, its
+    message and traceback, gives the third no status row, and raises."""
+    import era_parser_spark.sinks.writers as writers
+    from era_parser_spark.state.era_state import EraStateStore
+    from era_parser_spark.streaming.incremental import run_incremental
 
     out = str(tmp_path_factory.mktemp("warehouse_fail"))
-    store = EraStateStore(spark, os.path.join(out, "_state"))
+    state_path = os.path.join(out, "_state")
+    real_write = writers.write_parquet
+    calls = {"n": 0}
 
-    class Boom:
-        def withColumn(self, *a, **k):
+    def failing_write(df, path, **kw):
+        calls["n"] += 1
+        if calls["n"] == 2:
             raise RuntimeError("disk full (simulated)")
+        return real_write(df, path, **kw)
 
-    with pytest.raises(RuntimeError):
-        process_era_atomic(store, "gnosis", 99, {"blocks": Boom()}, out)
-    latest = store.latest_state().filter(F.col("era_number") == 99).first()
-    assert latest.status == "failed"
-    assert "disk full" in latest.error_message
+    monkeypatch.setattr(writers, "write_parquet", failing_write)
+    with pytest.raises(RuntimeError, match="disk full"):
+        run_incremental(spark, era_dir, out, state_path, "gnosis",
+                        tables=["blocks"], per_era=True)
+    latest = {r.era_number: r for r in EraStateStore(spark, state_path).latest_state().collect()}
+    assert sorted(latest) == [1300, 1301]
+    assert latest[1300].status == "completed"
+    assert latest[1301].status == "failed"
+    assert "disk full" in latest[1301].error_message
+    assert "RuntimeError" in latest[1301].error_message
+    assert "Traceback" in latest[1301].error_message
 
 
 def test_sinks_shapes(spark, era_dir, tmp_path_factory):
@@ -168,7 +183,8 @@ def test_clean_failed_eras_roundtrip(spark, era_dir, tmp_path_factory):
                     era_range="1300", tables=["blocks"])
     run_incremental(spark, era_dir, out, state_path, "gnosis",
                     era_range="1301", tables=["blocks"])
-    store.record("gnosis", 1301, "failed", error_message="simulated", retry_count=1)
+    store.record_many([{"network": "gnosis", "era_number": 1301, "status": "failed",
+                        "error_message": "simulated", "retry_count": 1}])
     assert [r.era_number for r in store.failed_eras("gnosis").collect()] == [1301]
     part = f"{out}/blocks/era_number=1301"
     assert os.path.isdir(part)
@@ -196,8 +212,11 @@ def test_clean_failed_cli_and_compact(spark, era_dir, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("warehouse_cli_clean"))
     state = os.path.join(out, "_state")
     store = EraStateStore(spark, state)
-    store.record("gnosis", 7, "failed", error_message="boom", retry_count=2)
-    store.record("gnosis", 8, "completed", total_records=10)
+    # two appends, so compaction below has two files to merge
+    store.record_many([{"network": "gnosis", "era_number": 7, "status": "failed",
+                        "error_message": "boom", "retry_count": 2}])
+    store.record_many([{"network": "gnosis", "era_number": 8, "status": "completed",
+                        "total_records": 10}])
     assert main(["clean-failed-eras", "--state", state, "--output", out]) == 0
     assert store.failed_eras("gnosis").count() == 0
     assert store.latest_state().filter(F.col("status") == "completed").count() == 1
@@ -631,7 +650,7 @@ def test_mid_write_kill_recovery_per_era(spark, chaos_era_dir, tmp_path_factory,
     """Chaos pin (round-7 verdict item 6): a hard kill mid-era-write — the
     sink lands a PARTIAL partition and the process dies before any
     failed-status record can be written (BaseException, so
-    process_era_atomic's except-Exception never runs) — leaves the era
+    process_eras_batch's except-Exception never runs) — leaves the era
     'processing'.  The restarted run must re-process exactly that era,
     dynamic partition overwrite must replace the partial partition (no
     duplicate and no missing rows), and log compaction must preserve the
@@ -674,7 +693,7 @@ def test_mid_write_kill_recovery_per_era(spark, chaos_era_dir, tmp_path_factory,
     # the partial (3-row) partition was REPLACED by the full era
     assert per_era[1400] > 3
     assert blocks.select("slot").distinct().count() == blocks.count()
-    assert store.max_retry("gnosis", 1400) == 2  # killed attempt counted
+    assert store.max_retries("gnosis", [1400])[1400] == 2  # killed attempt counted
 
     # third run: a no-op; then the log compacts without changing state
     assert run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
@@ -755,7 +774,7 @@ def _job_ids(spark, name) -> list[int]:
     return list(sc.statusTracker().getJobIdsForGroup(name))
 
 
-def _run_counting_jobs(spark, monkeypatch, era_dir, out, state, tables=None):
+def _run_counting_jobs(spark, monkeypatch, era_dir, out, state, tables=None, per_era=False):
     """run_incremental's result, its non-write job ids and its table-write
     job ids (each write_parquet call runs under a second job group)."""
     import era_parser_spark.sinks.writers as writers
@@ -770,7 +789,8 @@ def _run_counting_jobs(spark, monkeypatch, era_dir, out, state, tables=None):
 
     monkeypatch.setattr(writers, "write_parquet", grouped_write)
     with _job_group(spark, run):
-        result = run_incremental(spark, era_dir, out, state, "gnosis", tables=tables)
+        result = run_incremental(spark, era_dir, out, state, "gnosis", tables=tables,
+                                 per_era=per_era)
     monkeypatch.setattr(writers, "write_parquet", real_write)
     return result, _job_ids(spark, run), _job_ids(spark, write)
 
@@ -780,7 +800,8 @@ def test_batched_run_job_counts(spark, chaos_era_dir, tmp_path_factory, monkeypa
     eras runs the same non-write jobs for all 15 tables as for one — the
     staging write, the row-count aggregate, two state appends — and no
     state read (the state path does not exist yet); a resume over the
-    completed state runs one job, the state read."""
+    completed state runs one job, the state read.  A per-era run is the
+    same batch once per era: 5 non-write jobs each."""
     from era_parser_spark.operators.normalize import TABLE_BUILDERS
 
     base = tmp_path_factory.mktemp("jobs_pin")
@@ -803,6 +824,19 @@ def test_batched_run_job_counts(spark, chaos_era_dir, tmp_path_factory, monkeypa
 
     again, resume_jobs, resume_writes = _run_counting_jobs(
         spark, monkeypatch, chaos_era_dir, out, state
+    )
+    assert again == {}
+    assert len(resume_jobs) == 1 and resume_writes == []
+
+    out, state = str(base / "per_era"), str(base / "per_era_state")
+    serial, serial_jobs, serial_writes = _run_counting_jobs(
+        spark, monkeypatch, chaos_era_dir, out, state, per_era=True
+    )
+    assert serial == fresh
+    assert len(serial_writes) == sum(n > 0 for c in serial.values() for n in c.values())
+    assert len(serial_jobs) == 10
+    again, resume_jobs, resume_writes = _run_counting_jobs(
+        spark, monkeypatch, chaos_era_dir, out, state, per_era=True
     )
     assert again == {}
     assert len(resume_jobs) == 1 and resume_writes == []
