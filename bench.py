@@ -275,25 +275,20 @@ def bench_scaling(spark) -> dict:
             "blocks_per_sec": round(blocks / best, 1),
         }
     b1 = runs["1"]["blocks_per_sec"]
-    # columnar (Arrow-direct) vs dict-IR decode on the pruned
-    # blocks+attestations scan — the round-6 kernel change; the ratio at
-    # 8/32 pinned tasks is the accept gate for the columnar path
-    # (parsing/arrow_direct.py; >= 1.3x per-node plateau)
+    # the pruned blocks+attestations scan at 8/32 pinned tasks
     pruned: dict[str, dict] = {}
     for n_tasks in (8, 32):
-        for label, fast in ((f"{n_tasks}_columnar", True), (f"{n_tasks}_dict_ir", False)):
-            best, blocks = float("inf"), 0
-            for _ in range(2):
-                t0 = time.perf_counter()
-                blocks = read_era_blocks(
-                    spark, files, partitions=n_tasks,
-                    tables=["blocks", "attestations"], arrow_direct=fast,
-                ).count()
-                best = min(best, time.perf_counter() - t0)
-            pruned[label] = {
-                "sec": round(best, 3),
-                "blocks_per_sec": round(blocks / best, 1),
-            }
+        best, blocks = float("inf"), 0
+        for _ in range(2):
+            t0 = time.perf_counter()
+            blocks = read_era_blocks(
+                spark, files, partitions=n_tasks, tables=["blocks", "attestations"],
+            ).count()
+            best = min(best, time.perf_counter() - t0)
+        pruned[str(n_tasks)] = {
+            "sec": round(best, 3),
+            "blocks_per_sec": round(blocks / best, 1),
+        }
     return {
         "runs": runs,
         "per_core_efficiency_vs_1_task": {
@@ -302,14 +297,6 @@ def bench_scaling(spark) -> dict:
             if n != "1"
         },
         "pruned_scan": pruned,
-        "columnar_speedup": {
-            str(n): round(
-                pruned[f"{n}_columnar"]["blocks_per_sec"]
-                / pruned[f"{n}_dict_ir"]["blocks_per_sec"],
-                2,
-            )
-            for n in (8, 32)
-        },
     }
 
 

@@ -1,354 +1,388 @@
-"""Columnar (Arrow-direct) decode for the hottest pruned era scans.
+"""Columnar block decoder generated from the SSZ schema.
 
-The round-5 scaling root-cause (docs/PLANS.md "Parse-kernel per-core
-scaling") pinned the kernel's per-node ceiling on DRAM bandwidth and
-allocator churn from millions of small PyObjects: the dict IR builds one
-nested dict per block (and per attestation) which pyarrow then walks
-field-by-field.  This module decodes SSZ straight into flat per-column
-Python lists and assembles the Arrow block struct bottom-up
-(`pa.StructArray.from_arrays` / `pa.ListArray.from_arrays`), skipping the
-per-row dicts entirely.  Measured 2.0-2.9x on the decode+build step
-(tools/profile_arrow_direct.py, driving THIS collector), with
-byte-identical Arrow output.
+Every era scan, full or pruned, decodes through this module.  For each fork
+in `BODY_SCHEMAS`, `_Gen` walks the fork's SignedBeaconBlock container beside
+the Arrow block type (`BLOCK_SPARK_SCHEMA`, the electra superset) and emits
+Python source: constant offsets inlined, one function per variable-size
+type, every leaf appended straight into its own column list.  `flush()`
+builds the block struct bottom-up, so no per-block dict is ever made.
 
-Scope: the two hottest normalized tables — `blocks` (header +
-randao/eth1_data/graffiti) and `attestations` — i.e. any pruned scan whose
-`body_include` is a subset of SUPPORTED_FIELDS.  Everything else (full
-decodes, payload tables) keeps the schema-compiled dict IR, which remains
-the behavioral oracle: the differential suite pins this path byte-equal to
-it on every fork.
+* Fields a fork lacks (sync_aggregate before altair, committee_bits before
+  electra, ...) become null rows; body fields pruned by `body_include` are
+  never decoded and flush as `pa.nulls`.
+* Error rules are the generic walk's (`Container.decode`, which stays the
+  oracle and the `block` CLI path): fixed-part lengths, every top-level
+  offset chain (pruned fields included), list offset tables, the bitlist
+  sentinel.  One rule is added: a uint64 the int64 column cannot hold
+  raises SSZError at `append`, where the Arrow build would otherwise fail
+  the whole batch.
+* `append` is atomic: on error every column is truncated back to the
+  committed row count (a list child to its committed `offsets[-1]`).
 
-Error semantics: `append` is atomic (no partial column state on failure)
-and raises SSZError on malformed input like the generic decoder.  One
-deliberate difference: it validates only the offsets it READS (header,
-attestations span, per-attestation layout), so a block whose corruption
-lives entirely in an un-requested field can decode here where the generic
-pruned walk (which chains every top-level offset) would raise — more
-permissive, never mis-sliced.
-
-Reference parity note: the reference always decodes every field
-(era_parser/core/processor.py:401-404) and has no columnar path at all;
-this is engine-side optimization, not reference behavior.
+Each fork's source is compiled once per process, on first use; a collector
+binds the compiled code to its own column lists.  The reference decodes
+every field into Python objects (era_parser/core/processor.py:401-404) and
+has no columnar path; this is engine-side design, not reference behavior.
 """
 
 from __future__ import annotations
 
+import itertools
 import struct
 
 import pyarrow as pa
 
-from era_parser_spark.parsing.ssz import SSZError
-
-_U32 = struct.Struct("<I").unpack_from
-_U64 = struct.Struct("<Q").unpack_from
-
-#: body fields with a columnar decode; scans pruned to a subset of these
-#: take the fast path
-SUPPORTED_FIELDS = frozenset(
-    {"randao_reveal", "eth1_data", "graffiti", "attestations"}
+from era_parser_spark.parsing.beacon import BODY_SCHEMAS, block_schema
+from era_parser_spark.parsing.ssz import (
+    Bitlist, Bitvector, ByteList, ByteVector, Container, List, SSZError, SSZType, Uint, Vector,
 )
 
-# Body layout constants shared by EVERY fork (phase0..electra declare the
-# same first eight fields): fixed prefix randao(96)+eth1(72)+graffiti(32)
-# = 200 bytes, then u32 offsets for proposer_slashings, attester_slashings,
-# attestations, deposits, ...  The attestations payload spans
-# [offset@208, offset@212).
-_BODY_FIXED_PREFIX = 200
-_ATT_OFF_POS = _BODY_FIXED_PREFIX + 4 * 2
-_DEP_OFF_POS = _BODY_FIXED_PREFIX + 4 * 3
+_BASE_ENV = {
+    "_u32": struct.Struct("<I").unpack_from,
+    "_u64": struct.Struct("<Q").unpack_from,
+    "_unpack_from": struct.unpack_from,
+    "SSZError": SSZError,
+}
+_BODY_PATH = ("message", "body")
+_RANGE_ERR = "SSZError('uint64 exceeds the int64 column range')"
 
 
-#: forks whose attestation layout this decoder knows.  Membership is
-#: EXPLICIT (not `fork == "electra"` with a pre-electra fallthrough): a
-#: future fork added to config/networks.py would otherwise silently take
-#: the pre-electra branch — the fixed-size check still passes and
-#: bits/signature slice fine, but committee_bits would be emitted null
-#: while the dict IR decodes real values.  Unknown forks raise
-#: UnsupportedForkError instead (loud; never mis-decoded).
-PRE_ELECTRA_FORKS = frozenset({"phase0", "altair", "bellatrix", "capella", "deneb"})
-ELECTRA_LIKE_FORKS = frozenset({"electra"})
+# --- column tree: one node per Arrow type node; a pruned body field is None ---------
 
 
-class UnsupportedForkError(SSZError):
-    """The columnar decoder has no attestation layout for this fork.
+def _mask(nulls: list | None) -> pa.Array | None:
+    """Validity mask (True = null) from a node's null flags, then cleared."""
+    if nulls is None:
+        return None
+    mask = pa.array(nulls, pa.bool_()) if True in nulls else None
+    nulls.clear()
+    return mask
 
-    Deliberately NOT swallowed by the scan's on_error='skip' block
-    isolation (sources/era.py re-raises it): a new fork must fail the
-    scan loudly with a pointer at arrow_direct=False, not silently drop
-    or mis-decode every block of the new fork."""
+
+class _Leaf:
+    def __init__(self, k: int, typ: pa.DataType, env: dict):
+        self.k, self.type, self.values = k, typ, []
+        env[f"_a{k}"], env[f"_x{k}"] = self.values.append, self.values.extend
+
+    def truncate(self, n: int) -> None:
+        del self.values[n:]
+
+    def build(self, n: int) -> pa.Array:
+        arr = pa.array(self.values, self.type)
+        self.values.clear()
+        return arr
 
 
-def supports(body_include: set[str] | None) -> bool:
-    """True if a scan pruned to `body_include` can use the columnar path."""
-    return bool(body_include) and set(body_include) <= SUPPORTED_FIELDS
+class _Struct:
+    def __init__(self, k: int, typ: pa.StructType, children: dict, nullable: bool, env: dict):
+        self.k, self.type, self.children = k, typ, children
+        self.nulls = [] if nullable else None
+        if nullable:
+            env[f"_n{k}"] = self.nulls.append
+
+    def truncate(self, n: int) -> None:
+        if self.nulls is not None:
+            del self.nulls[n:]
+        for c in self.children.values():
+            if c is not None:
+                c.truncate(n)
+
+    def build(self, n: int) -> pa.Array:
+        arrays = [
+            pa.nulls(n, f.type) if c is None else c.build(n)
+            for f, c in zip(self.type, self.children.values())
+        ]
+        return pa.StructArray.from_arrays(arrays, fields=list(self.type), mask=_mask(self.nulls))
+
+
+class _ListNode:
+    def __init__(self, k: int, typ: pa.ListType, child, nullable: bool, env: dict):
+        self.k, self.type, self.child, self.offsets = k, typ, child, [0]
+        self.nulls = [] if nullable else None
+        env[f"_o{k}"], env[f"_p{k}"] = self.offsets, self.offsets.append
+        if nullable:
+            env[f"_n{k}"] = self.nulls.append
+
+    def truncate(self, n: int) -> None:
+        del self.offsets[n + 1:]
+        if self.nulls is not None:
+            del self.nulls[n:]
+        self.child.truncate(self.offsets[-1])
+
+    def build(self, n: int) -> pa.Array:
+        offsets = pa.array(self.offsets, pa.int32())
+        values = self.child.build(self.offsets[-1])
+        del self.offsets[1:]
+        return pa.ListArray.from_arrays(offsets, values, type=self.type, mask=_mask(self.nulls))
+
+
+def _ssz_paths(typ: SSZType, path: tuple, out: set) -> set:
+    out.add(path)
+    if isinstance(typ, Container):
+        for name, ft in typ.fields:
+            _ssz_paths(ft, path + (name,), out)
+    elif isinstance(typ, (List, Vector)):
+        _ssz_paths(typ.elem, path + ("[]",), out)
+    return out
+
+
+#: type paths every fork has; any other node can be null for some rows
+_ALWAYS = set.intersection(*(_ssz_paths(block_schema(f), (), set()) for f in BODY_SCHEMAS))
+
+
+def _tree(block_type: pa.StructType, include: frozenset | None, env: dict) -> _Struct:
+    """Column tree for `block_type`; binds each node's lists into `env`
+    under names derived from its depth-first number (`_a3`, `_o7`, ...)."""
+    ids = itertools.count()
+
+    def node(typ: pa.DataType, path: tuple):
+        k = next(ids)
+        if pa.types.is_struct(typ):
+            children = {
+                f.name: None
+                if path == _BODY_PATH and include is not None and f.name not in include
+                else node(f.type, path + (f.name,))
+                for f in typ
+            }
+            return _Struct(k, typ, children, path not in _ALWAYS, env)
+        if pa.types.is_list(typ):
+            child = node(typ.value_type, path + ("[]",))
+            return _ListNode(k, typ, child, path not in _ALWAYS, env)
+        return _Leaf(k, typ, env)
+
+    return node(block_type, ())
+
+
+# --- code generation ----------------------------------------------------------------
+
+
+def _at(base: str | None, off: int) -> str:
+    if base is None:
+        return str(off)
+    return f"{base} + {off}" if off else base
+
+
+def _leaf_expr(typ: SSZType, base: str | None, off: int) -> str:
+    """Value of a fixed-size leaf other than uint64 (that one is range-checked)."""
+    span = f"d[{_at(base, off)}:{_at(base, off + typ.fixed_size)}]"
+    if isinstance(typ, Uint):
+        if typ.bits > 64:  # Beacon API renders wide ints as decimal strings
+            return f"str(int.from_bytes({span}, 'little'))"
+        return f"int.from_bytes({span}, 'little')"
+    return f"'0x' + {span}.hex()"
+
+
+def _is_u64(typ: SSZType) -> bool:
+    return isinstance(typ, Uint) and typ.bits == 64
+
+
+def _range_check(names: list[str], out: list[str], pad: str) -> None:
+    if names:
+        out.append(f"{pad}if ({' | '.join(names)}) >> 63: raise {_RANGE_ERR}")
+
+
+class _Gen:
+    """Emits one fork's decoder: `_block(d)` appends one SignedBeaconBlock.
+    Each emitter appends the source lines for one row of one node to `out`."""
+
+    def __init__(self):
+        self.defs: list[str] = []
+        self.fns: dict[tuple[int, int], str] = {}
+        self.ids = itertools.count()
+
+    def fresh(self, prefix: str) -> str:
+        return f"{prefix}{next(self.ids)}"
+
+    def source(self, block: Container, root: _Struct) -> str:
+        top = self.function(block, root)
+        return "\n\n".join(self.defs) + f"\n\n_block = {top}\n"
+
+    @staticmethod
+    def present(node, out: list[str], pad: str) -> None:
+        if node.nulls is not None:
+            out.append(f"{pad}_n{node.k}(False)")
+
+    def null(self, node, out: list[str], pad: str) -> None:
+        """A field this fork lacks: one null row down the whole subtree."""
+        if isinstance(node, _Leaf):
+            out.append(f"{pad}_a{node.k}(None)")
+        elif node is not None:
+            out.append(f"{pad}_n{node.k}(True)")
+            if isinstance(node, _ListNode):
+                out.append(f"{pad}_p{node.k}(_o{node.k}[-1])")
+            else:
+                for c in node.children.values():
+                    self.null(c, out, pad)
+
+    def absent(self, c: Container, node: _Struct, out: list[str], pad: str) -> None:
+        have = {name for name, _ in c.fields}
+        for name, child in node.children.items():
+            if name not in have:
+                self.null(child, out, pad)
+
+    def fixed(self, typ, node, base, off, out, pad, u64s) -> None:
+        """One fixed-size value at d[base + off]."""
+        if _is_u64(typ):
+            t = self.fresh("t")
+            out += [f"{pad}{t} = _u64(d, {_at(base, off)})[0]", f"{pad}_a{node.k}({t})"]
+            u64s.append(t)
+        elif isinstance(typ, Container):
+            self.present(node, out, pad)
+            for name, ft in typ.fields:
+                self.fixed(ft, node.children[name], base, off, out, pad, u64s)
+                off += ft.fixed_size
+            self.absent(typ, node, out, pad)
+        elif isinstance(typ, Vector):
+            self.present(node, out, pad)
+            self.elements(typ.elem, node.child, _at(base, off), str(typ.length), out, pad)
+            out.append(f"{pad}_p{node.k}(_o{node.k}[-1] + {typ.length})")
+        else:
+            out.append(f"{pad}_a{node.k}({_leaf_expr(typ, base, off)})")
+
+    def elements(self, elem, node, start: str, count: str, out, pad) -> None:
+        """`count` fixed-size elements packed from d[start]."""
+        if _is_u64(elem):
+            v = self.fresh("v")
+            out += [
+                f"{pad}{v} = _unpack_from(f'<{{{count}}}Q', d, {start})",
+                f"{pad}if {v} and max({v}) >> 63: raise {_RANGE_ERR}",
+                f"{pad}_x{node.k}({v})",
+            ]
+            return
+        b, es = self.fresh("b"), elem.fixed_size
+        stop = f"{count} * {es}" if start == "0" else f"{start} + {count} * {es}"
+        if isinstance(elem, (Uint, ByteVector, Bitvector)):
+            expr = _leaf_expr(elem, b, 0)
+            out.append(f"{pad}_x{node.k}([{expr} for {b} in range({start}, {stop}, {es})])")
+            return
+        out.append(f"{pad}for {b} in range({start}, {stop}, {es}):")
+        u64s: list[str] = []
+        self.fixed(elem, node, b, 0, out, pad + "    ", u64s)
+        _range_check(u64s, out, pad + "    ")
+
+    def variable(self, typ, node, lo: str, hi: str, out, pad) -> None:
+        """One variable-size value spanning d[lo:hi]."""
+        if isinstance(typ, (ByteList, Bitlist)):
+            if isinstance(typ, Bitlist):
+                out.append(
+                    f"{pad}if {lo} == {hi}: raise SSZError('bitlist must contain the sentinel bit')"
+                )
+            out.append(f"{pad}_a{node.k}('0x' + d[{lo}:{hi}].hex())")
+        else:
+            out.append(f"{pad}{self.function(typ, node)}(d[{lo}:{hi}])")
+
+    def function(self, typ, node) -> str:
+        """One function per (variable-size type, node), appending d as a row."""
+        key = (id(typ), node.k)
+        if key not in self.fns:
+            name = self.fns[key] = self.fresh("_f")
+            out = [f"def {name}(d):", "    L = len(d)"]
+            if isinstance(typ, Container):
+                self.container_body(typ, node, out)
+            else:
+                self.list_body(typ, node, out)
+            self.defs.append("\n".join(out))
+        return self.fns[key]
+
+    def container_body(self, c: Container, node: _Struct, out: list[str]) -> None:
+        pad = "    "
+        fixed_len = sum(4 if t.fixed_size is None else t.fixed_size for _, t in c.fields)
+        out.append(f"{pad}if L < {fixed_len}: raise SSZError('{c.name}: fixed part truncated')")
+        pos, fixed, var = 0, [], []
+        for name, typ in c.fields:
+            if typ.fixed_size is None:
+                o = f"o{len(var)}"
+                var.append((name, typ, o))
+                out.append(f"{pad}{o} = _u32(d, {pos})[0]")
+                pos += 4
+            else:
+                fixed.append((name, typ, pos))
+                pos += typ.fixed_size
+        ends = [o for _, _, o in var[1:]] + ["L"]
+        if var:
+            chain = " <= ".join([var[0][2]] + ends)
+            out.append(f"{pad}if not ({chain}): raise SSZError('{c.name}: offsets out of order')")
+        self.present(node, out, pad)
+        u64s: list[str] = []
+        for name, typ, pos in fixed:
+            if node.children[name] is not None:
+                self.fixed(typ, node.children[name], None, pos, out, pad, u64s)
+        for (name, typ, lo), hi in zip(var, ends):
+            if node.children[name] is not None:
+                self.variable(typ, node.children[name], lo, hi, out, pad)
+        self.absent(c, node, out, pad)
+        _range_check(u64s, out, pad)
+
+    def list_body(self, lst: List, node: _ListNode, out: list[str]) -> None:
+        pad, p2 = "    ", "        "
+        self.present(node, out, pad)
+        if lst.elem.fixed_size is not None:
+            # a ragged tail is truncated, not an error
+            out.append(f"{pad}n = L // {lst.elem.fixed_size}")
+            self.elements(lst.elem, node.child, "0", "n", out, pad)
+        else:
+            out += [
+                f"{pad}n = 0",
+                f"{pad}if L:",
+                f"{p2}if L < 4: raise SSZError('list offset table truncated')",
+                f"{p2}n = _u32(d, 0)[0]",
+                f"{p2}if n % 4 or n > L: raise SSZError('bad list offset table head')",
+                f"{p2}n //= 4",
+                f"{p2}offs = _unpack_from(f'<{{n}}I', d)",
+                f"{p2}for a, b in zip(offs, offs[1:] + (L,)):",
+                f"{p2}    if b < a: raise SSZError('list item offsets out of order')",
+            ]
+            self.variable(lst.elem, node.child, "a", "b", out, p2 + "    ")
+        out.append(f"{pad}_p{node.k}(_o{node.k}[-1] + n)")
+
+
+#: compiled decoder per (fork, block type, body_include), built on first use
+_CODE: dict = {}
 
 
 class ColumnarBlockCollector:
-    """Accumulates decoded blocks column-wise; flush() emits the same Arrow
-    block struct the dict IR produces (absent body fields are null)."""
+    """Accumulates decoded blocks column-wise; `flush()` emits them as one
+    Arrow struct array of `block_type`.  `body_include=None` decodes every
+    body field; a set decodes only those (the rest flush as nulls)."""
 
-    def __init__(self, block_type: pa.DataType, body_include: set[str]):
+    def __init__(self, block_type: pa.StructType, body_include: set[str] | None = None):
         self.block_type = block_type
-        self.include = frozenset(body_include)
-        if not supports(body_include):
-            raise ValueError(f"unsupported body_include {body_include}")
-        self._want_att = "attestations" in self.include
-        self._want_randao = "randao_reveal" in self.include
-        self._want_eth1 = "eth1_data" in self.include
-        self._want_graffiti = "graffiti" in self.include
-        self._msg_t = block_type.field("message").type
-        self._body_t = self._msg_t.field("body").type
-        if self._want_att:
-            att_list_t = self._body_t.field("attestations").type
-            self._att_t = att_list_t.value_type
-            self._data_t = self._att_t.field("data").type
-            self._chk_t = self._data_t.field("source").type
-        if self._want_eth1:
-            self._eth1_t = self._body_t.field("eth1_data").type
-        self._reset()
-
-    def _reset(self) -> None:
+        self.include = None if body_include is None else frozenset(body_include)
+        self._env = dict(_BASE_ENV)
+        self._root = _tree(block_type, self.include, self._env)
+        self._fns: dict = {}
+        payload = self._root.children["message"].children["body"].children["execution_payload"]
+        self._ts = None if payload is None else payload.children["timestamp"].values
         self.n = 0
-        self.c_slot: list[int] = []
-        self.c_prop: list[int] = []
-        self.c_parent: list[str] = []
-        self.c_state: list[str] = []
-        self.c_sig: list[str] = []
-        self.c_randao: list[str] = []
-        self.c_graffiti: list[str] = []
-        self.c_dep_root: list[str] = []
-        self.c_dep_cnt: list[int] = []
-        self.c_blk_hash: list[str] = []
-        self.att_off: list[int] = [0]
-        self.a_bits: list[str] = []
-        self.a_slot: list[int] = []
-        self.a_index: list[int] = []
-        self.a_bbr: list[str] = []
-        self.a_sep: list[int] = []
-        self.a_sroot: list[str] = []
-        self.a_tep: list[int] = []
-        self.a_troot: list[str] = []
-        self.a_sig: list[str] = []
-        self.a_committee: list[str | None] = []
 
     def __len__(self) -> int:
         return self.n
 
-    def append(self, raw: bytes, fork: str) -> None:
-        """Decode one SignedBeaconBlock; atomic — commits columns only
-        after the whole block decoded cleanly."""
-        L = len(raw)
-        if L < 100:
-            raise SSZError("SignedBeaconBlock: fixed part truncated")
-        mv = memoryview(raw)
-        msg_off = _U32(raw, 0)[0]
-        if msg_off > L:
-            raise SSZError("SignedBeaconBlock: offsets out of order")
-        sig = "0x" + mv[4:100].hex()
-        msg = mv[msg_off:]
-        if len(msg) < 84:
-            raise SSZError("BeaconBlock: fixed part truncated")
-        slot = _U64(msg, 0)[0]
-        prop = _U64(msg, 8)[0]
-        parent = "0x" + msg[16:48].hex()
-        state = "0x" + msg[48:80].hex()
-        body_off = _U32(msg, 80)[0]
-        if body_off > len(msg):
-            raise SSZError("BeaconBlock: offsets out of order")
-        body = msg[body_off:]
-        nb = len(body)
-        if nb < _DEP_OFF_POS + 4:
-            raise SSZError("BeaconBlockBody: fixed part truncated")
+    def _decoder(self, fork: str):
+        key = (fork, self.block_type, self.include)
+        if key not in _CODE:
+            src = _Gen().source(block_schema(fork), self._root)
+            _CODE[key] = compile(src, f"<ssz-columnar:{fork}>", "exec")
+        env = dict(self._env)
+        exec(_CODE[key], env)
+        return env["_block"]
 
-        randao = graffiti = dep_root = blk_hash = ""
-        dep_cnt = 0
-        if self._want_randao:
-            randao = "0x" + body[0:96].hex()
-        if self._want_eth1:
-            dep_root = "0x" + body[96:128].hex()
-            dep_cnt = _U64(body, 128)[0]
-            blk_hash = "0x" + body[136:168].hex()
-        if self._want_graffiti:
-            graffiti = "0x" + body[168:200].hex()
-
-        n_new_att = 0
-        if self._want_att:
-            # explicit fork membership — an unknown (post-electra) fork
-            # must not fall through to the pre-electra layout (see
-            # UnsupportedForkError)
-            if fork in ELECTRA_LIKE_FORKS:
-                electra = True
-            elif fork in PRE_ELECTRA_FORKS:
-                electra = False
-            else:
-                raise UnsupportedForkError(
-                    f"no columnar attestation layout for fork {fork!r}; "
-                    f"rerun the scan with arrow_direct=False (dict IR)"
-                )
-            lo = _U32(body, _ATT_OFF_POS)[0]
-            hi = _U32(body, _DEP_OFF_POS)[0]
-            if not (lo <= hi <= nb):
-                raise SSZError("BeaconBlockBody: offsets out of order")
-            n_new_att = self._decode_attestations(bytes(body[lo:hi]), electra)
-
-        # ---- commit (nothing above mutated collector state) ----
-        self.c_slot.append(slot)
-        self.c_prop.append(prop)
-        self.c_parent.append(parent)
-        self.c_state.append(state)
-        self.c_sig.append(sig)
-        if self._want_randao:
-            self.c_randao.append(randao)
-        if self._want_eth1:
-            self.c_dep_root.append(dep_root)
-            self.c_dep_cnt.append(dep_cnt)
-            self.c_blk_hash.append(blk_hash)
-        if self._want_graffiti:
-            self.c_graffiti.append(graffiti)
-        if self._want_att:
-            self.att_off.append(self.att_off[-1] + n_new_att)
+    def append(self, raw: bytes, fork: str) -> int:
+        """Decode one SignedBeaconBlock of `fork`.  Returns its execution
+        payload timestamp, or 0 when it has none (pre-merge, pruned or
+        zero), so callers keep `derive_timestamp`'s slot-math fallback."""
+        fn = self._fns.get(fork)
+        if fn is None:
+            fn = self._fns[fork] = self._decoder(fork)
+        try:
+            fn(raw)
+        except BaseException:
+            self._root.truncate(self.n)
+            raise
         self.n += 1
-
-    def _decode_attestations(self, atts: bytes, electra: bool) -> int:
-        """Decode a List[Attestation] payload into LOCAL lists, then extend
-        the columns (so a malformed attestation leaves no partial state).
-        Mirrors List.decode's offset-table validation and the container
-        layouts: pre-electra [bits_off u32][data 128][sig 96][bits...],
-        electra appends committee_bits Bitvector[64] (8 bytes) at 228."""
-        if not atts:
-            return 0
-        n = len(atts)
-        if n < 4:
-            raise SSZError("list offset table truncated")
-        first = _U32(atts, 0)[0]
-        if first % 4 != 0 or first > n:
-            raise SSZError(f"bad list offset table head {first}")
-        count = first // 4
-        offs = struct.unpack_from(f"<{count}I", atts)
-        prev = first
-        for h in offs[1:]:
-            if h < prev or h > n:
-                raise SSZError("list item offsets out of order")
-            prev = h
-        bounds = offs[1:] + (n,)
-        fixed = 236 if electra else 228
-        l_bits: list[str] = []
-        l_slot: list[int] = []
-        l_index: list[int] = []
-        l_bbr: list[str] = []
-        l_sep: list[int] = []
-        l_sroot: list[str] = []
-        l_tep: list[int] = []
-        l_troot: list[str] = []
-        l_sig: list[str] = []
-        l_comm: list[str | None] = []
-        mv = memoryview(atts)
-        for i in range(count):
-            a = mv[offs[i] : bounds[i]]
-            na = len(a)
-            if na < fixed:
-                raise SSZError("Attestation: fixed part truncated")
-            o0 = _U32(a, 0)[0]
-            if o0 > na:
-                raise SSZError("Attestation: offsets out of order")
-            if o0 == na:
-                raise SSZError("bitlist must contain the sentinel bit")
-            l_bits.append("0x" + a[o0:].hex())
-            l_slot.append(_U64(a, 4)[0])
-            l_index.append(_U64(a, 12)[0])
-            l_bbr.append("0x" + a[20:52].hex())
-            l_sep.append(_U64(a, 52)[0])
-            l_sroot.append("0x" + a[60:92].hex())
-            l_tep.append(_U64(a, 92)[0])
-            l_troot.append("0x" + a[100:132].hex())
-            l_sig.append("0x" + a[132:228].hex())
-            l_comm.append("0x" + a[228:236].hex() if electra else None)
-        self.a_bits.extend(l_bits)
-        self.a_slot.extend(l_slot)
-        self.a_index.extend(l_index)
-        self.a_bbr.extend(l_bbr)
-        self.a_sep.extend(l_sep)
-        self.a_sroot.extend(l_sroot)
-        self.a_tep.extend(l_tep)
-        self.a_troot.extend(l_troot)
-        self.a_sig.extend(l_sig)
-        self.a_committee.extend(l_comm)
-        return count
-
-    @staticmethod
-    def _struct(typ: pa.StructType, children: dict, length: int) -> pa.StructArray:
-        arrs = [
-            children[f.name] if f.name in children else pa.nulls(length, f.type)
-            for f in typ
-        ]
-        return pa.StructArray.from_arrays(arrs, fields=list(typ))
+        return (self._ts[-1] or 0) if self._ts is not None else 0
 
     def flush(self) -> pa.StructArray:
-        i64, s = pa.int64(), pa.string()
-        n = self.n
-        body_children: dict = {}
-        if self._want_randao:
-            body_children["randao_reveal"] = pa.array(self.c_randao, s)
-        if self._want_eth1:
-            body_children["eth1_data"] = self._struct(
-                self._eth1_t,
-                {
-                    "deposit_root": pa.array(self.c_dep_root, s),
-                    "deposit_count": pa.array(self.c_dep_cnt, i64),
-                    "block_hash": pa.array(self.c_blk_hash, s),
-                },
-                n,
-            )
-        if self._want_graffiti:
-            body_children["graffiti"] = pa.array(self.c_graffiti, s)
-        if self._want_att:
-            n_att = len(self.a_slot)
-            src = self._struct(
-                self._chk_t,
-                {"epoch": pa.array(self.a_sep, i64), "root": pa.array(self.a_sroot, s)},
-                n_att,
-            )
-            tgt = self._struct(
-                self._chk_t,
-                {"epoch": pa.array(self.a_tep, i64), "root": pa.array(self.a_troot, s)},
-                n_att,
-            )
-            data = self._struct(
-                self._data_t,
-                {
-                    "slot": pa.array(self.a_slot, i64),
-                    "index": pa.array(self.a_index, i64),
-                    "beacon_block_root": pa.array(self.a_bbr, s),
-                    "source": src,
-                    "target": tgt,
-                },
-                n_att,
-            )
-            att_children = {
-                "aggregation_bits": pa.array(self.a_bits, s),
-                "data": data,
-                "signature": pa.array(self.a_sig, s),
-            }
-            if any(f.name == "committee_bits" for f in self._att_t):
-                att_children["committee_bits"] = pa.array(self.a_committee, s)
-            att = self._struct(self._att_t, att_children, n_att)
-            body_children["attestations"] = pa.ListArray.from_arrays(
-                pa.array(self.att_off, pa.int32()), att
-            )
-        body = self._struct(self._body_t, body_children, n)
-        msg = self._struct(
-            self._msg_t,
-            {
-                "slot": pa.array(self.c_slot, i64),
-                "proposer_index": pa.array(self.c_prop, i64),
-                "parent_root": pa.array(self.c_parent, s),
-                "state_root": pa.array(self.c_state, s),
-                "body": body,
-            },
-            n,
-        )
-        out = self._struct(
-            self.block_type, {"message": msg, "signature": pa.array(self.c_sig, s)}, n
-        )
-        self._reset()
+        out = self._root.build(self.n)
+        self.n = 0
         return out

@@ -15,7 +15,7 @@ pre-electra attestation parser (no committee_bits); we follow the spec.
 
 from __future__ import annotations
 
-from era_parser_spark.config.networks import fork_at_slot, network_config, slot_timestamp
+from era_parser_spark.config.networks import fork_at_slot, slot_timestamp
 from era_parser_spark.parsing import snappy
 from era_parser_spark.parsing.ssz import (
     Bitlist,
@@ -336,7 +336,6 @@ def stringify(obj):
     return obj
 
 
-# network_config re-exported for sources/; silences unused-import linters
 __all__ = [
     "BODY_SCHEMAS",
     "block_schema",
@@ -346,5 +345,4 @@ __all__ = [
     "peek_slot",
     "derive_timestamp",
     "stringify",
-    "network_config",
 ]

@@ -2,8 +2,10 @@
 
 Unlike the reference's hand-rolled per-field offset slicing
 (era_parser/parsing/ssz_utils.py, parsing/forks/*.py), this is a declarative
-type system: one schema drives both decode (production) and encode (test
-data generation), so round-trip tests pin the byte layout.
+type system: one schema drives the generic decode below (the oracle and the
+`block` CLI path), the columnar decoder generated from it for era scans
+(parsing/arrow_direct.py) and encode (test data generation), so round-trip
+tests pin the byte layout.
 
 Serialization rules (consensus-specs ssz/simple-serialize.md):
   * basic uintN: N/8 bytes little-endian
@@ -26,9 +28,7 @@ from __future__ import annotations
 
 import struct
 
-_U16 = struct.Struct("<H").unpack_from
 _U32 = struct.Struct("<I").unpack_from
-_U64 = struct.Struct("<Q").unpack_from
 
 
 class SSZError(ValueError):
@@ -153,10 +153,6 @@ class List(SSZType):
     def __init__(self, elem: SSZType, max_length: int):
         self.elem = elem
         self.max_length = max_length
-        # element-kind specializations for the hot decode loop
-        self._elem_is_u64 = isinstance(elem, Uint) and elem.bits == 64
-        self._elem_is_bytes = isinstance(elem, (ByteVector, Bitvector))
-        self._elem_is_hexlike = isinstance(elem, (ByteList, Bitlist))
 
     def decode(self, data: bytes):
         if not data:
@@ -165,10 +161,6 @@ class List(SSZType):
         if es is not None:
             # truncate a ragged tail instead of failing the whole list
             count = len(data) // es
-            if self._elem_is_u64:
-                return list(struct.unpack_from(f"<{count}Q", data))
-            if self._elem_is_bytes:
-                return ["0x" + data[i * es : (i + 1) * es].hex() for i in range(count)]
             return [self.elem.decode(data[i * es : (i + 1) * es]) for i in range(count)]
         if len(data) < 4:
             raise SSZError("list offset table truncated")
@@ -184,10 +176,6 @@ class List(SSZType):
                 raise SSZError("list item offsets out of order")
             prev = hi
         bounds = offsets[1:] + (n,)
-        if self._elem_is_hexlike and not isinstance(self.elem, Bitlist):
-            return [
-                "0x" + data[offsets[i] : bounds[i]].hex() for i in range(count)
-            ]
         dec = self.elem.decode
         return [dec(data[offsets[i] : bounds[i]]) for i in range(count)]
 
@@ -211,27 +199,17 @@ class Container(SSZType):
             self.fixed_size = sum(t.fixed_size for _, t in fields)
         else:
             self.fixed_size = None
-        self._compiled = None
 
     def decode(self, data: bytes, include: set[str] | None = None) -> dict:
-        """Decode; with `include`, only those top-level fields are decoded
-        (offsets are still walked — the skip saves the expensive payload
-        decode of big lists, which the reference cannot do: it always
-        parses every field, era_parser/core/processor.py:401-404).
+        """Generic walk; with `include`, only those top-level fields are
+        decoded (every offset is still read and checked — the skip saves
+        the payload decode of big lists, which the reference cannot do: it
+        always parses every field, era_parser/core/processor.py:401-404).
 
-        Full decodes run through a schema-compiled function (static field
-        offsets inlined, leaf fields with no per-field dispatch) — the hot
-        path of the era scan; the generic walk below stays as the pruned
-        path and the behavioral oracle the compiled form is tested against.
+        This walk is the behavioral oracle for the generated columnar
+        decoder the era scan runs (parsing/arrow_direct.py), and the
+        decoder behind the `block` CLI command.
         """
-        if include is None:
-            fn = self._compiled
-            if fn is None:
-                fn = self._compiled = _compile_container(self)
-            return fn(data)
-        return self.decode_generic(data, include)
-
-    def decode_generic(self, data: bytes, include: set[str] | None = None) -> dict:
         out: dict = {}
         variable: list[tuple[str, SSZType, int]] = []
         pos = 0
@@ -281,108 +259,3 @@ class Container(SSZType):
         for p in var_parts:
             out += p
         return bytes(out)
-
-
-def _bitlist_slice(data: bytes, lo: int, hi: int) -> str:
-    if hi == lo:
-        raise SSZError("bitlist must contain the sentinel bit")
-    return "0x" + data[lo:hi].hex()
-
-
-def _compile_container(c: Container):
-    """Build a specialized full-decode function for one container schema.
-
-    The schema is static, so every fixed field lands at a known offset:
-    the generated source inlines those slices (uints via prebound
-    struct.unpack_from, byte fields as hex, nested fixed containers as
-    dict literals) and reads each variable field's offset exactly once.
-    Equivalence with the generic walk is pinned by the round-trip and
-    Hypothesis suites (tests/test_parse_kernel.py, tests/test_property.py).
-    """
-    env = {"_u16": _U16, "_u32": _U32, "_u64": _U64, "SSZError": SSZError,
-           "_bitlist": _bitlist_slice}
-    n_closure = [0]
-
-    def closure(fn) -> str:
-        name = f"_c{n_closure[0]}"
-        n_closure[0] += 1
-        env[name] = fn
-        return name
-
-    def fixed_expr(typ: SSZType, lo: int) -> str:
-        size = typ.fixed_size
-        if isinstance(typ, Uint):
-            if typ.bits <= 64:
-                if size == 8:
-                    return f"_u64(data, {lo})[0]"
-                if size == 4:
-                    return f"_u32(data, {lo})[0]"
-                if size == 2:
-                    return f"_u16(data, {lo})[0]"
-                if size == 1:
-                    return f"data[{lo}]"
-                return f"int.from_bytes(data[{lo}:{lo + size}], 'little')"
-            return f"str(int.from_bytes(data[{lo}:{lo + size}], 'little'))"
-        if isinstance(typ, (ByteVector, Bitvector)):
-            return f"'0x' + data[{lo}:{lo + size}].hex()"
-        if isinstance(typ, Container):
-            parts = []
-            pos = lo
-            for name, ft in typ.fields:
-                parts.append(f"{name!r}: {fixed_expr(ft, pos)}")
-                pos += ft.fixed_size
-            return "{" + ", ".join(parts) + "}"
-        # Vector (or any other fixed composite): delegate to its decoder
-        return f"{closure(typ.decode)}(data[{lo}:{lo + size}])"
-
-    fixed_len = sum(
-        t.fixed_size if t.fixed_size is not None else 4 for _, t in c.fields
-    )
-    lines = ["def _dec(data):", "    L = len(data)"]
-    if c.fixed_size is not None:
-        lines.append(
-            f"    if L != {c.fixed_size}:"
-            f" raise SSZError('{c.name}: fixed part truncated')"
-        )
-    else:
-        lines.append(
-            f"    if L < {fixed_len}:"
-            f" raise SSZError('{c.name}: fixed part truncated')"
-        )
-    items: list[tuple[str, object]] = []
-    offs: list[str] = []
-    pos = 0
-    for name, typ in c.fields:
-        if typ.fixed_size is not None:
-            items.append((name, fixed_expr(typ, pos)))
-            pos += typ.fixed_size
-        else:
-            var_i = len(offs)
-            lines.append(f"    o{var_i} = _u32(data, {pos})[0]")
-            offs.append(f"o{var_i}")
-            items.append((name, (var_i, typ)))
-            pos += 4
-    if offs:
-        chain = " <= ".join(offs + ["L"])
-        lines.append(
-            f"    if not ({chain}):"
-            f" raise SSZError('{c.name}: offsets out of order')"
-        )
-    exprs = []
-    k = len(offs)
-    for name, item in items:
-        if isinstance(item, tuple):
-            i, typ = item
-            hi = f"o{i + 1}" if i + 1 < k else "L"
-            if isinstance(typ, ByteList):
-                e = f"'0x' + data[o{i}:{hi}].hex()"
-            elif isinstance(typ, Bitlist):
-                e = f"_bitlist(data, o{i}, {hi})"
-            else:
-                e = f"{closure(typ.decode)}(data[o{i}:{hi}])"
-            exprs.append(f"{name!r}: {e}")
-        else:
-            exprs.append(f"{name!r}: {item}")
-    lines.append("    return {" + ", ".join(exprs) + "}")
-    exec(compile("\n".join(lines), f"<ssz-compiled:{c.name}>", "exec"), env)
-    return env["_dec"]

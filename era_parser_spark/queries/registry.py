@@ -145,46 +145,49 @@ _FIRST_50 = [
     # st12.  Counted strictly — an entry in the module-order first 50 at
     # ANY commit of this file's package history counts as gated — 63 were
     # never gated before this swap and 51 remain.
+    # Generated-decoder rotation out: s11b, s14, t10, t13, t22, t26, p13,
+    # p18, x25, x26, st9, st15 (each gated in the two rotations above).
+    # In: never-gated s4, s6, t8, t9, t11, t12, p4, p6, x16, x17, st3, st5.
+    # Same strict count: 39 remain.
     # dedup flagship: full pipeline w/ quality keeper, ExactSubstr cut +
     # routed drop, multimodal pHash pairs
     "dd9c_fuzzy_dedup_quality_keeper",
     "dd19_exactsubstr_drop_routed",
     "dd20_exactsubstr_drop_refined",
     "mm9_image_phash_pairs",
-    # similarity / selection: PQ codes + residual IVF-PQ, kNN join, SQ8
-    # top-k
+    # similarity / selection: kNN join, PQ codes, label centroids, SRP
+    # LSH pairs
+    "s4_label_centroids",
     "s5_knn_join",
+    "s6_srp_lsh_pairs",
     "s10_pq_codes",
-    "s11b_ivf_pq_residual",
-    "s14_sq8_topk",
-    # text: PII redaction, n-gram top-k, hash embeddings, WordPiece
-    # train + count, BM25, suffix family
-    "t10_pii_redact",
-    "t13_ngram_topk",
-    "t22_bm25_topk",
-    "t26_hash_embed",
+    # text: rarity score, boilerplate strip, intra-doc dedup, text
+    # normalization, WordPiece train + count, suffix family
+    "t8_rarity_score",
+    "t9_boilerplate_strip",
+    "t11_intra_doc_dedup",
+    "t12_normalize_text",
     "t35_cross_doc_span",
     "t37_wordpiece_token_counts",
-    # curation pipelines: temperature mix, token budget cap, corpus
-    # report, chi2 drift, budget waterfill
+    # curation pipelines: stratified sample, temperature mix, domain
+    # filter, token budget cap, chi2 drift
+    "p4_stratified_sample",
     "p5_temperature_mix",
+    "p6_domain_filter",
     "p10_token_budget_cap",
-    "p13_corpus_report",
     "p17_source_drift_chi2",
-    "p18_budget_waterfill",
-    # analytics / graph: range-join bands, PageRank, label propagation,
-    # state durations, BFS landmarks
+    # analytics / graph: range-join bands, retention cohorts, time-weighted
+    # average, state durations, BFS landmarks
     "x6_range_join",
-    "x25_pagerank",
-    "x26_label_propagation",
+    "x16_retention_cohorts",
+    "x17_time_weighted_avg",
     "x41_state_durations",
     "x42_bfs_distances",
-    # streaming: near-dedup band monitor, robust-outlier monitor, exact
-    # dedup, window funnel
+    # streaming: sessionize, KMV distinct, exact dedup, window funnel
+    "st3_stream_sessionize",
     "st4_stream_exact_dedup",
-    "st9_stream_near_dedup",
+    "st5_stream_kmv_distinct",
     "st12_stream_window_funnel",
-    "st15_stream_mad_outlier_counts",
     # state management + TPC-H
     "d6_status_summary",
     "q5_local_supplier_volume",

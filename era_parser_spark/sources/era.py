@@ -2,9 +2,11 @@
 
 Pipeline (reference lifecycle §3.1, rebuilt Spark-shaped):
   spark.read.format("binaryFile")      one row per era file, one task per file
-    -> mapInArrow(parse kernel)        snappy + SSZ decode inside each task;
-                                       typed nested Arrow batches out — no
-                                       JSON round-trip, no pandas objects
+    -> mapInArrow(parse kernel)        snappy + SSZ decode inside each task,
+                                       straight into Arrow columns (the
+                                       decoder generated from the SSZ schema,
+                                       parsing/arrow_direct.py); typed nested
+                                       batches out, no per-block objects
     -> select(block.*)                 JVM-side column flattening only
 
 Scale model: one era file (= 8192 slots, hundreds of MB) is one task; a
@@ -37,10 +39,9 @@ from era_parser_spark.config.networks import (
     parse_era_filename,
     slot_timestamp,
 )
-from era_parser_spark.parsing import arrow_direct as _arrow_direct
 from era_parser_spark.parsing import ssz
-from era_parser_spark.parsing.beacon import BODY_SCHEMAS, block_schema
-from era_parser_spark.parsing.beacon import parse_block
+from era_parser_spark.parsing.arrow_direct import ColumnarBlockCollector
+from era_parser_spark.parsing.beacon import block_schema
 from era_parser_spark.session import rows_frame
 
 # body fields each normalized table needs (drives pruned decode)
@@ -79,8 +80,7 @@ def ssz_to_spark(t: ssz.SSZType) -> T.DataType:
     raise TypeError(f"no spark mapping for {type(t)}")
 
 
-# The electra body is the superset of every fork's fields.
-BODY_SPARK_SCHEMA: T.StructType = ssz_to_spark(BODY_SCHEMAS["electra"])
+# The electra block is the superset of every fork's fields.
 BLOCK_SPARK_SCHEMA: T.StructType = ssz_to_spark(block_schema("electra"))
 
 _PARSE_OUT_SCHEMA = T.StructType(
@@ -154,66 +154,55 @@ def _parser(
     batch_rows: int = 2048,
     slot_range: tuple[int, int] | None = None,
     error_counter=None,
-    arrow_direct: bool = True,
 ):
     """Arrow-native parse kernel: era bytes in, typed nested batches out.
 
-    The parsed block documents go straight into a pyarrow struct array (one
-    C-side conversion) instead of the old json.dumps -> from_json round-trip,
-    which serialized every block twice (Python json encode + JVM Jackson
-    parse) and moved the data as strings.
-
-    When the pruned `body_include` is covered by the columnar decoders
-    (parsing/arrow_direct.py — blocks-table fields + attestations), the
-    kernel skips the per-block dict IR entirely and decodes into flat
-    per-column lists (2.0-2.9x on the decode step; the dict IR's PyObject
-    churn is the measured DRAM ceiling, docs/PLANS.md).  `arrow_direct=
-    False` forces the dict IR (debug/differential path).
+    Every block, full or pruned to `body_include`, decodes through one
+    `ColumnarBlockCollector`: the decoder generated from the SSZ schema
+    appends each leaf straight into its column, and the block struct is
+    built bottom-up once per batch.  No per-block dict or JSON text exists.
     """
     out_schema = _PARSE_OUT_ARROW
     block_type = out_schema.field("block").type
-    use_columnar = arrow_direct and _arrow_direct.supports(body_include)
 
     def parse(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import gc
-        import sys
 
-        # The kernel allocates millions of small dicts/lists per era file;
-        # cyclic GC scans that live graph repeatedly and costs ~2-4x
-        # throughput.  Nothing here creates reference cycles (plain dicts,
-        # lists, scalars), so refcounting alone reclaims everything —
-        # disable the cycle collector for the duration of the task batch.
+        # The kernel allocates millions of small objects per era file (one
+        # str or int per leaf value); cyclic GC scans that live graph
+        # repeatedly and costs ~2-4x throughput.  Nothing here creates
+        # reference cycles (column lists of scalars), so refcounting alone
+        # reclaims everything — disable the cycle collector for the
+        # duration of the task batch.
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
-            yield from _parse_batches(it, sys.stderr)
+            yield from _parse_batches(it)
         finally:
             if gc_was_enabled:
                 gc.enable()
 
-    def _parse_batches(it: Iterator[pa.RecordBatch], stderr) -> Iterator[pa.RecordBatch]:
+    def _parse_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import sys
 
-        scalars: list[tuple] = []  # per-block metadata columns
-        blocks: list[dict] = []  # parsed block documents (dict-IR path)
-        collector = (
-            _arrow_direct.ColumnarBlockCollector(block_type, set(body_include))
-            if use_columnar
-            else None
+        from era_parser_spark.parsing import snappy as _snappy
+        from era_parser_spark.parsing.beacon import peek_slot as _peek
+        from era_parser_spark.parsing.e2store import (
+            TYPE_COMPRESSED_BLOCK as _TBLK,
+            iter_block_payloads,
+            iter_records,
         )
 
+        scalars: list[tuple] = []  # per-block metadata columns
+        collector = ColumnarBlockCollector(block_type, body_include)
+
         def flush() -> pa.RecordBatch:
-            nonlocal scalars, blocks
+            nonlocal scalars
             cols = list(zip(*scalars))
-            block_arr = (
-                collector.flush()
-                if collector is not None
-                else pa.array(blocks, type=block_type)
-            )
             arrays = [
                 pa.array(cols[i], type=out_schema.field(i).type) for i in range(8)
-            ] + [block_arr]
-            scalars, blocks = [], []
+            ] + [collector.flush()]
+            scalars = []
             return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
         for rb in it:
@@ -233,13 +222,23 @@ def _parser(
                 net = network or detect_network(path)
                 meta = parse_era_filename(path)
                 n_bad = 0
-                from era_parser_spark.parsing import snappy as _snappy
-                from era_parser_spark.parsing.beacon import peek_slot as _peek
-                from era_parser_spark.parsing.e2store import (
-                    TYPE_COMPRESSED_BLOCK as _TBLK,
-                    iter_block_payloads,
-                    iter_records,
-                )
+
+                def skip(exc: Exception, what: str) -> None:
+                    """Per-record error isolation (the reference defaults bad
+                    fields rather than failing the era): under 'skip' one
+                    corrupt block is counted and reported, and must not
+                    kill a 100 TB job; under 'fail' it surfaces."""
+                    nonlocal n_bad
+                    if on_error == "fail":
+                        raise exc
+                    n_bad += 1
+                    if error_counter is not None:
+                        error_counter.add(1)
+                    print(
+                        f"era_parser_spark: skipping {what} in {path}: "
+                        f"{type(exc).__name__}: {exc}",
+                        file=sys.stderr,
+                    )
 
                 # per-RECORD error isolation, not just per-parse: a payload
                 # that fails snappy or is too short for the slot peek must
@@ -247,7 +246,6 @@ def _parser(
                 # survive it (a generator that raises is dead, so the
                 # try sits inside the loop, around decompress+peek)
                 def robust_blocks():
-                    nonlocal n_bad
                     if slot_range is None:
                         source = (
                             (None, rec.payload)
@@ -271,17 +269,7 @@ def _parser(
                         except StopIteration:
                             break
                         except Exception as exc:  # noqa: BLE001
-                            if on_error == "fail":
-                                raise
-                            n_bad += 1
-                            if error_counter is not None:
-                                error_counter.add(1)
-                            print(
-                                f"era_parser_spark: truncated/corrupt era "
-                                f"record stream in {path}, skipping rest of "
-                                f"file: {type(exc).__name__}: {exc}",
-                                file=sys.stderr,
-                            )
+                            skip(exc, "the rest of a truncated/corrupt record stream")
                             break
                         try:
                             raw = _snappy.decompress(comp)
@@ -291,57 +279,16 @@ def _parser(
                                 raw,
                             )
                         except Exception as exc:  # noqa: BLE001
-                            if on_error == "fail":
-                                raise
-                            n_bad += 1
-                            if error_counter is not None:
-                                error_counter.add(1)
-                            print(
-                                f"era_parser_spark: skipping undecodable block "
-                                f"record in {path}: {type(exc).__name__}: {exc}",
-                                file=sys.stderr,
-                            )
+                            skip(exc, "an undecodable block record")
 
                 for slot, comp_size, raw in robust_blocks():
                     try:
-                        if collector is not None:
-                            # columnar fast path: pruned fields decode
-                            # straight into flat column lists; version and
-                            # timestamp come from the same slot math the
-                            # pruned dict path falls back to (payload is
-                            # never decoded here)
-                            version = fork_at_slot(slot, net)
-                            collector.append(raw, version)
-                            ts = slot_timestamp(slot, net)
-                            decomp = len(raw)
-                        else:
-                            parsed = parse_block(
-                                raw, net, is_compressed=False,
-                                body_include=body_include,
-                            )
-                            version = parsed["version"]
-                            ts = parsed["timestamp_utc"]
-                            decomp = parsed["metadata"]["decompressed_size"]
-                    except _arrow_direct.UnsupportedForkError:
-                        # a fork the columnar decoder doesn't know is NOT a
-                        # corrupt block — skipping would silently drop every
-                        # block of a new fork; fail loudly (the message
-                        # points at arrow_direct=False)
-                        raise
+                        version = fork_at_slot(slot, net)
+                        # payload timestamp when decoded and >0, else the
+                        # slot's wall clock (derive_timestamp's rule)
+                        ts = collector.append(raw, version) or slot_timestamp(slot, net)
                     except Exception as exc:  # noqa: BLE001
-                        # per-block error isolation (the reference defaults
-                        # bad fields rather than failing the era); one
-                        # corrupt block must not kill a 100 TB job
-                        if on_error == "fail":
-                            raise
-                        n_bad += 1
-                        if error_counter is not None:
-                            error_counter.add(1)
-                        print(
-                            f"era_parser_spark: skipping slot {slot} in {path}: "
-                            f"{type(exc).__name__}: {exc}",
-                            file=sys.stderr,
-                        )
+                        skip(exc, f"slot {slot}")
                         continue
                     scalars.append(
                         (
@@ -352,11 +299,9 @@ def _parser(
                             version,
                             ts,
                             comp_size,
-                            decomp,
+                            len(raw),
                         )
                     )
-                    if collector is None:
-                        blocks.append(parsed["data"])
                     if len(scalars) >= batch_rows:
                         yield flush()
                 if n_bad:
@@ -390,7 +335,6 @@ def read_era_blocks(
     partitions: int | None = None,
     error_counter=None,
     batch_rows: int = 2048,
-    arrow_direct: bool = True,
 ) -> DataFrame:
     """Era files -> blocks DataFrame (typed, fork-superset body struct).
 
@@ -408,10 +352,9 @@ def read_era_blocks(
     `error_counter` (from `parse_error_counter(spark)`) receives one task-
     side increment per skipped block, so an ops job can assert corruption
     rates without grepping executor stderr; read it AFTER an action.
-    `arrow_direct=True` (default) lets scans pruned to the blocks-table
-    fields and/or attestations decode columnar (parsing/arrow_direct.py,
-    2.0-2.9x on the decode step) — output is differential-tested identical
-    to the dict IR; pass False to force the dict path.
+    Every scan decodes through the columnar decoder generated from the SSZ
+    schema (parsing/arrow_direct.py); its output is differential-tested
+    equal to the generic SSZ walk on every fork.
     """
     from era_parser_spark.shipping import ensure_package_shipped
 
@@ -445,8 +388,7 @@ def read_era_blocks(
         src = src.repartition(partitions)
     parsed = src.mapInArrow(
         _parser(network, body_include, on_error, batch_rows=batch_rows,
-                slot_range=slot_range, error_counter=error_counter,
-                arrow_direct=arrow_direct),
+                slot_range=slot_range, error_counter=error_counter),
         _PARSE_OUT_SCHEMA,
     )
     block = F.col("block")

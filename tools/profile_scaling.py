@@ -1,9 +1,11 @@
 """Root-cause harness for the parse kernel's per-core scaling.
 
-Runs the SAME parse work (full era file: iter_records -> snappy ->
-parse_block) under plain multiprocessing at N=1/2/4/8/16/32 workers —
-no Spark, no Arrow, no shuffle — so the measured efficiency curve is the
-kernel + hardware alone.  Two control workloads separate the causes:
+Runs the SAME parse work as the scan kernel (full era file: iter_records
+-> snappy -> the generated columnar decoder, ColumnarBlockCollector, with
+one Arrow build per 2048 blocks) under plain multiprocessing at
+N=1/2/4/8/16/32 workers — no Spark, no shuffle — so the measured
+efficiency curve is the kernel + hardware alone.  Two control workloads
+separate the causes:
 
 - `alu`: a pure-register integer loop (no memory traffic beyond L1).
   If THIS scales sublinearly the host's vCPUs are contended/throttled
@@ -66,20 +68,28 @@ def _alloc(arg) -> float:
 def _parse(path: str) -> float:
     import gc
 
+    from era_parser_spark.config.networks import fork_at_slot
     from era_parser_spark.parsing import snappy as _snappy
-    from era_parser_spark.parsing.beacon import parse_block
+    from era_parser_spark.parsing.arrow_direct import ColumnarBlockCollector
+    from era_parser_spark.parsing.beacon import peek_slot
     from era_parser_spark.parsing.e2store import TYPE_COMPRESSED_BLOCK, iter_records
+    from era_parser_spark.sources.era import _PARSE_OUT_ARROW
 
     with open(path, "rb") as f:
         content = f.read()
+    collector = ColumnarBlockCollector(_PARSE_OUT_ARROW.field("block").type)
     gc.disable()
     t0 = time.perf_counter()
     n = 0
     for rec in iter_records(content):
         if rec.record_type != TYPE_COMPRESSED_BLOCK:
             continue
-        parse_block(_snappy.decompress(rec.payload), "gnosis", is_compressed=False)
+        raw = _snappy.decompress(rec.payload)
+        collector.append(raw, fork_at_slot(peek_slot(raw), "gnosis"))
         n += 1
+        if len(collector) >= 2048:
+            collector.flush()
+    collector.flush()
     dt = time.perf_counter() - t0
     gc.enable()
     return n / dt
