@@ -61,9 +61,9 @@ def cmd_parse(args) -> int:
     ).cache()
     if args.table == "blocks-wide":
         out_tables = {"blocks_wide": wide_blocks_table(blocks)}
-    elif args.separate or tables is None:
-        out_tables = all_tables(blocks, tables)
     else:
+        # --separate is accepted for the reference CLI's sake: every
+        # table is always written as its own dataset
         out_tables = all_tables(blocks, tables)
     counts = write_separate_datasets(out_tables, args.output, fmt=args.format)
     print(json.dumps({"written": counts, "output": args.output}))

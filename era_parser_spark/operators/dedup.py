@@ -834,8 +834,8 @@ def fuzzy_dedup(
     Scale shape: every stage is the sub-quadratic path proven by its
     standalone operator — candidates via band equi-join (never all
     pairs), exact verify only on broadcast-semi-joined candidates,
-    clustering via alternating large-star/small-star (O(log n) rounds for
-    any graph shape, no driver materialization).
+    clustering via connected_components (O(log n) star-contraction
+    rounds for any graph shape past its driver union-find gate).
 
     ``verify``: "exact" (default) scores candidate pairs by true hashed-
     shingle Jaccard via the PAIR-BOUNDED plan (`lsh_exact_pairs_bounded`)
@@ -850,10 +850,7 @@ def fuzzy_dedup(
     cheapest of all, with estimator noise ~2/sqrt(num_perm) around the
     threshold.
     """
-    from era_parser_spark.operators.graph import (
-        cluster_sizes,
-        connected_components_alternating,
-    )
+    from era_parser_spark.operators.graph import cluster_sizes, connected_components
 
     if verify not in ("exact", "exact_index", "estimate"):
         raise ValueError(
@@ -921,7 +918,7 @@ def fuzzy_dedup(
         ).select("doc_a", "doc_b")
 
     if not collapse_exact:
-        comps = connected_components_alternating(
+        comps = connected_components(
             df.select(id_col), _edges(df), id_col=id_col,
             src_col="doc_a", dst_col="doc_b",
         )
@@ -1021,7 +1018,7 @@ def fuzzy_dedup(
                 F.greatest("__ra", "__rb").alias("doc_b"),
             )
         )
-    comps = connected_components_alternating(
+    comps = connected_components(
         nodes, dedges, id_col=id_col, src_col="doc_a", dst_col="doc_b",
     )
     # re-attach clones: every doc takes its representative's cluster.  The

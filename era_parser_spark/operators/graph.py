@@ -3,26 +3,22 @@ deduplication (pair lists from MinHash-LSH / SimHash / Jaccard become
 transitive duplicate clusters; a curation pipeline then keeps one canonical
 document per cluster).
 
-Algorithm: hash-min label propagation.  Every node starts labeled with its
-own id; each round every node takes the min label among itself and its
-neighbors; at fixpoint the label is the min node id of the connected
-component.  Each round costs exactly one shuffle join (edges x labels) plus
-one min-aggregate — both map-side-combinable — and the round count equals
-the graph diameter.  Near-dup graphs are star/clique-shaped (tiny
-diameters), so this converges in 2-4 rounds at any corpus size; for
-adversarially chain-shaped graphs the same per-round primitive extends to
-large-star/small-star (Kiveris et al., "Connected Components in MapReduce
-and Beyond"), which converges in O(log n) rounds.
+Algorithm: one contract, min node id per component, computed two ways
+chosen by the input's size.  Edge lists up to SMALL_GRAPH_EDGE_THRESHOLD
+rows are collected and labeled by a driver union-find.  Bigger ones run
+the alternating large-star/small-star rounds (Kiveris et al., "Connected
+Components in MapReduce and Beyond"), which converge in O(log n) rounds
+for every graph shape: near-dup graphs (stars, cliques) and adversarial
+chains alike.
 
 Scale notes:
   * ``localCheckpoint(eager=True)`` after every round truncates lineage —
     without it the plan doubles per iteration and the driver OOMs compiling
     round ~20.
-  * the edge list is cached once and reused every round; labels are
-    re-checkpointed so each round reads a materialized, already-partitioned
-    frame.
-  * convergence is detected from a count on the frame just checkpointed
-    (no extra pass over the data).
+  * the input edge list is checkpointed once, before it is symmetrized, so
+    an expensive upstream pair pipeline is derived once.
+  * convergence is detected from an (edge count, hash sum) checksum on the
+    frame just checkpointed — one tiny aggregate per round.
 """
 
 from __future__ import annotations
@@ -85,62 +81,6 @@ def _smallgraph_labels(
     )
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Label every node with the min node id reachable from it.
-
-    Parameters: `nodes` has one row per node (`id_col`); `edges` is an
-    undirected edge list (`src_col`, `dst_col`).  Nodes with no edges keep
-    their own id (singleton clusters).  Returns (id_col, cluster_id).
-    """
-    # materialize the edge list BEFORE the symmetrize union: both union
-    # branches read the checkpoint instead of re-deriving the (potentially
-    # expensive — dd5: a full Jaccard self-join) upstream pipeline twice
-    base = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    if base.count() <= SMALL_GRAPH_EDGE_THRESHOLD:
-        return _smallgraph_labels(nodes, base, id_col)
-    sym = (
-        base.unionByName(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    ).localCheckpoint(eager=True)
-
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-                (F.coalesce("nbr_label", "label") < F.col("label")).alias("__lowered"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = stepped.filter(F.col("__lowered")).count()
-        labels = stepped.drop("__lowered")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-
-    return labels.select(F.col("node").alias(id_col), F.col("label").alias("cluster_id"))
-
-
 def _checksum(edges: DataFrame) -> tuple[int, int]:
     # decimal accumulator: a long sum of xxhash64 values overflows under
     # ANSI mode after a few thousand edges
@@ -153,7 +93,7 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def connected_components_alternating(
+def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
@@ -161,15 +101,18 @@ def connected_components_alternating(
     dst_col: str = "dst",
     max_iter: int = 60,
 ) -> DataFrame:
-    """Connected components in O(log n) rounds for ANY graph shape —
-    the alternating large-star/small-star algorithm (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14; public
-    algorithm, re-derived here for DataFrames).
+    """Label every node with the min node id reachable from it.
 
-    ``connected_components`` (hash-min) costs O(diameter) rounds: ideal for
-    near-dup graphs (stars/cliques, diameter 2-4) but pathological on
-    chain-shaped graphs — a 10k-link chain is 10k rounds.  The star
-    operations contract chains exponentially instead:
+    Parameters: `nodes` has one row per node (`id_col`); `edges` is an
+    undirected edge list (`src_col`, `dst_col`).  Nodes with no edges keep
+    their own id (singleton clusters).  Returns (id_col, cluster_id).
+
+    Edge lists up to SMALL_GRAPH_EDGE_THRESHOLD rows are labeled by a
+    driver union-find.  Bigger ones run the alternating large-star /
+    small-star rounds (Kiveris et al., "Connected Components in MapReduce
+    and Beyond", SoCC'14; public algorithm, re-derived here for
+    DataFrames), which take O(log n) rounds for ANY graph shape — a chain
+    contracts exponentially instead of costing one round per link:
 
     * large-star: every node points its LARGER neighbors at its minimum
       neighborhood member — `m(u) = min({u} ∪ Γ(u))`;
@@ -181,13 +124,13 @@ def connected_components_alternating(
     Convergence is detected by an (edge count, xxhash64 sum) checksum —
     one tiny aggregate, no driver-side edge materialization.
     """
+    # materialize the edge list BEFORE the symmetrize union: both union
+    # branches read the checkpoint instead of re-deriving the (potentially
+    # expensive — dd5: a full Jaccard self-join) upstream pipeline twice
     base = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)  # see connected_components: one derivation
+    ).localCheckpoint(eager=True)
     if base.count() <= SMALL_GRAPH_EDGE_THRESHOLD:
-        # identical labels, driver-side (see SMALL_GRAPH_EDGE_THRESHOLD);
-        # the star rounds below remain the path for big graphs — the
-        # O(log n) chain-contraction argument is about THOSE.
         return _smallgraph_labels(nodes, base, id_col)
     sym = (
         base.unionByName(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -235,7 +178,7 @@ def connected_components_alternating(
             break
         prev_sig = sig
     else:
-        raise RuntimeError(f"alternating CC did not converge in {max_iter} rounds")
+        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
     roots = cur.filter(F.col("dst") < F.col("src")).select(
         F.col("src").alias("node"), F.col("dst").alias("label")
@@ -291,7 +234,7 @@ def pagerank(
       * the dangling sum is a 1-row aggregate broadcast-crossed onto the
         rank frame (no driver round-trip inside the loop would be needed
         on a cluster; we fold it as a literal per round, which costs one
-        tiny job — same shape as connected_components' convergence count).
+        tiny job — same shape as connected_components' convergence checksum).
       * ``localCheckpoint`` after every round truncates lineage so the
         plan does not double per iteration.
 
@@ -526,8 +469,8 @@ def kcore(
     Wave count equals the graph's peel depth: O(1-3) on web-shaped
     graphs (cores are dense, peripheries shallow) but O(n) adversarially
     (a path at k=2 sheds only its two endpoints per wave) — ``max_iter``
-    guards the fixpoint loop the way connected_components guards
-    hash-min.  ``rounds`` runs a FIXED number of waves instead (the
+    guards the fixpoint loop the way it guards connected_components'
+    star rounds.  ``rounds`` runs a FIXED number of waves instead (the
     x25/x26 unrolled-oracle convention; identical to the fixpoint
     whenever the graph's peel depth <= rounds, which the registry entry
     pins at sf0.01) — early-stable waves are no-ops, so the loop still

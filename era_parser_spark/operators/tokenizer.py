@@ -14,6 +14,13 @@ executors with ``spark-submit --files`` on a real cluster.  The merge loop
 is the genuinely imperative per-word kernel Python UDFs exist for, and a
 per-batch word-level memo dedupes repeated words (natural text repeats
 most words), so the loop runs once per distinct word per batch.
+
+Training: `bpe_merges_distributed` and `wordpiece_merges_distributed` share
+one word-table build and one merge loop (`_train_merges`) and differ only
+in the per-round argmax (raw pair count vs the fixed-point likelihood
+score).  The loop's argmax and rewrite run on the driver for word tables
+up to SMALL_VOCAB_THRESHOLD rows and as Spark rounds above it.
+`learn_bpe_merges` is the BPE trainer's merges as a Python list.
 """
 
 from __future__ import annotations
@@ -155,56 +162,15 @@ def learn_bpe_merges(
     text_col: str,
     n_merges: int = 100,
     pattern: str = BPE_PATTERN,
-    max_vocab: int = 1_000_000,
 ) -> list[tuple[str, str]]:
-    """Learn a BPE merge table from the corpus itself.
-
-    The only corpus-size pass is distributed: one regexp pre-token explode
-    + word groupBy (map-side combined).  The merge loop then runs on the
-    collected (word, freq) table — which is how BPE is actually trained
-    (Sennrich et al. 2016 operate on the word-frequency dictionary, never
-    the raw stream), and the vocabulary is corpus-sublinear (Heaps' law):
-    a 100 TB web corpus has ~10^7 distinct pre-tokens, a driver-sized
-    table.  `max_vocab` bounds it hard (top frequency, ties on word).
-
-    Deterministic: pair ties break lexicographically smallest-first, so
-    the same corpus always yields the same merges.  Feed the result to
-    `save_merges` + `real_bpe_token_count_col` (same pre-token pattern,
-    so "what a word is" never changes between learn and apply).
-    """
-    rows = (
-        df.select(
-            F.explode(
-                F.regexp_extract_all(F.col(text_col), F.lit(pattern), 0)
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), "w")
-        .limit(max_vocab)
-        .collect()
-    )
-    vocab: dict[tuple[str, ...], int] = {}
-    for r in rows:
-        syms = tuple(str(r.w))
-        vocab[syms] = vocab.get(syms, 0) + int(r.freq)
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        counts: dict[tuple[str, str], int] = {}
-        for syms, fq in vocab.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + fq
-        if not counts:
-            break
-        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        new_vocab: dict[tuple[str, ...], int] = {}
-        for syms, fq in vocab.items():
-            m = _merge_word(syms, best)
-            new_vocab[m] = new_vocab.get(m, 0) + fq
-        vocab = new_vocab
-    return merges
+    """Learn a BPE merge table from the corpus itself: the (left, right)
+    pairs of `bpe_merges_distributed` in rank order, pre-tokenized with
+    `pattern` (default `text.BPE_PATTERN`, the encoder's own regex).
+    Feed the result to `save_merges` + `real_bpe_token_count_col` (same
+    pre-token pattern, so "what a word is" never changes between learn
+    and apply)."""
+    rows = bpe_merges_distributed(df, text_col, n_merges, pattern=pattern).collect()
+    return [(r["left"], r["right"]) for r in sorted(rows, key=lambda r: r["rank"])]
 
 
 def save_merges(merges: list[tuple[str, str]], path: str) -> None:
@@ -223,6 +189,41 @@ def save_merges(merges: list[tuple[str, str]], path: str) -> None:
 # bigints — exact for corpora up to ~10^19 tokens.
 WP_SCALE = 10**18
 
+# Word tables at or below this row count run the merge loop's argmax and
+# rewrite on the driver (round 12): 8 merge rounds were paying 2 Spark
+# jobs each (argmax collect + Arrow rewrite checkpoint) for a table the
+# driver folds in milliseconds, with bit-identical results (pinned on
+# both sides of the gate in tests/test_round8_ops.py,
+# tests/test_round9_ops.py and tests/test_round12_ops.py).  Same adaptive
+# convention as graph.SMALL_GRAPH_EDGE_THRESHOLD: the gate is the count
+# of the already-checkpointed word table — the quantity whose
+# corpus-sublinearity (Heaps' law) the trainer design itself argues —
+# never a core count; byte-noise corpora past the gate keep the
+# distributed rounds.  50k (word, freq) rows keeps the Python pair-count
+# fold well under a second per round.
+SMALL_VOCAB_THRESHOLD = 50_000
+
+_BPE_MERGES_DDL = "rank int, left string, right string, merged string, pair_count long"
+_WP_MERGES_DDL = _BPE_MERGES_DDL + ", left_count long, right_count long, score_q long"
+
+
+def _bpe_best_pair(vocab: dict[tuple[str, ...], int]) -> tuple[str, str, int] | None:
+    """Driver BPE argmax over a word-frequency dict: max pair count, ties
+    on the UTF-8 bytes of (left, right) ASC — the distributed round's
+    ORDER BY."""
+    counts: dict[tuple[str, str], int] = {}
+    for syms, fq in vocab.items():
+        for i in range(len(syms) - 1):
+            p = (syms[i], syms[i + 1])
+            counts[p] = counts.get(p, 0) + fq
+    if not counts:
+        return None
+    (a, b), c = min(
+        counts.items(),
+        key=lambda kv: (-kv[1], kv[0][0].encode("utf-8"), kv[0][1].encode("utf-8")),
+    )
+    return a, b, c
+
 
 def _wp_best_pair(
     vocab: dict[tuple[str, ...], int], min_pair_count: int = 1
@@ -230,7 +231,7 @@ def _wp_best_pair(
     """Exact-bigint WordPiece argmax over a word-frequency dict: the pair
     maximizing the quantized likelihood score, ties broken by pair count
     DESC then (left, right) UTF-8 bytes ASC — the same total order the
-    distributed trainer and the DuckDB oracle sort by."""
+    distributed round and the DuckDB oracle sort by."""
     pc: dict[tuple[str, str], int] = {}
     u: dict[str, int] = {}
     for syms, fq in vocab.items():
@@ -250,154 +251,78 @@ def _wp_best_pair(
     return None if best is None else best[1]
 
 
-def learn_wordpiece_merges(
-    df,
-    text_col: str,
-    n_merges: int = 8,
-    pattern: str = BPE_PATTERN,
-    max_vocab: int = 1_000_000,
-    min_pair_count: int = 1,
-) -> list[tuple[str, str]]:
-    """WordPiece merge training (Schuster & Nakajima 2012; the BERT
-    tokenizer's rule), driver-loop twin of `wordpiece_merges_distributed`
-    the way `learn_bpe_merges` twins `bpe_merges_distributed`: same
-    distributed word-count pass, then the merge loop on the collected
-    frequency table.  Differs from BPE ONLY in the selection rule — the
-    pair maximizing likelihood gain count(ab)/(count(a)*count(b)) instead
-    of raw count(ab) — computed as the exact fixed-point integer
-    (c*WP_SCALE)//(u_a*u_b) in Python bigints (never floats), ties on
-    count DESC then pair bytes ASC.  No ## continuation markers: symbols
-    are plain characters, the repo's no-marker convention, so merges feed
-    `save_merges`/`bpe_encode_word` directly."""
-    rows = (
-        df.select(
-            F.explode(
-                F.regexp_extract_all(F.col(text_col), F.lit(pattern), 0)
-            ).alias("w")
+def _pair_counts(cur):
+    """(l, r, c): adjacent-pair counts of a (w, freq, syms) word table."""
+    return (
+        cur.filter(F.size("syms") >= 2)
+        .select(
+            "freq",
+            F.expr(
+                "explode(transform(sequence(0, size(syms)-2),"
+                " i -> struct(syms[i] AS l, syms[i+1] AS r)))"
+            ).alias("p"),
         )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), "w")
-        .limit(max_vocab)
-        .collect()
+        .groupBy("p.l", "p.r")
+        .agg(F.sum("freq").alias("c"))
     )
-    vocab: dict[tuple[str, ...], int] = {}
-    for r in rows:
-        syms = tuple(str(r.w))
-        vocab[syms] = vocab.get(syms, 0) + int(r.freq)
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        info = _wp_best_pair(vocab, min_pair_count)
-        if info is None:
-            break
-        a, b = info[0], info[1]
-        merges.append((a, b))
-        new_vocab: dict[tuple[str, ...], int] = {}
-        for syms, fq in vocab.items():
-            m = _merge_word(syms, (a, b))
-            new_vocab[m] = new_vocab.get(m, 0) + fq
-        vocab = new_vocab
-    return merges
 
 
-# Word tables at or below this row count take the exact driver merge
-# loop inside the distributed trainers (round 12): 8 merge rounds were
-# paying 2 Spark jobs each (argmax collect + Arrow rewrite checkpoint)
-# for a table the driver folds in milliseconds, with bit-identical
-# results — the driver-loop twins (learn_bpe_merges /
-# learn_wordpiece_merges) are already differentially pinned against the
-# distributed rounds (tests/test_round9_ops.py).  Same adaptive
-# convention as graph.SMALL_GRAPH_EDGE_THRESHOLD: the gate is the count
-# of the already-checkpointed word table — the quantity whose
-# corpus-sublinearity (Heaps' law) the trainer design itself argues —
-# never a core count; byte-noise corpora past the gate keep the
-# distributed rounds unchanged.  50k (word, freq) rows keeps the Python
-# pair-count fold well under a second per round.
-SMALL_VOCAB_THRESHOLD = 50_000
-
-
-def _driver_merge_loop(
-    spark,
-    words_ckpt,
-    n_merges: int,
-    return_vocab: bool,
-    wordpiece: bool,
-    min_pair_count: int = 1,
-):
-    """The distributed trainers' small-vocab fast path: collect the
-    (w, freq) table once, run the merge loop on the driver with EXACTLY
-    the distributed argmax semantics (BPE: max pair count, ties on
-    UTF-8 bytes of (left, right) ASC; WordPiece: the exact fixed-point
-    likelihood argmax of `_wp_best_pair`), and rebuild the same output
-    frames — including the re-minted-token ValueError the distributed
-    rounds raise."""
-    rows = words_ckpt.select("w", "freq").collect()
-    vocab: dict[tuple[str, ...], int] = {
-        tuple(str(r["w"])): int(r["freq"]) for r in rows
-    }
-    out_rows: list[tuple] = []
-    seen_merged: set[str] = set()
-    for rank in range(1, n_merges + 1):
-        if wordpiece:
-            info = _wp_best_pair(vocab, min_pair_count)
-            if info is None:
-                break
-            a, b, c, lu, ru, q = info
-        else:
-            counts: dict[tuple[str, str], int] = {}
-            for syms, fq in vocab.items():
-                for i in range(len(syms) - 1):
-                    p = (syms[i], syms[i + 1])
-                    counts[p] = counts.get(p, 0) + fq
-            if not counts:
-                break
-            (a, b), c = min(
-                counts.items(),
-                key=lambda kv: (
-                    -kv[1],
-                    kv[0][0].encode("utf-8"),
-                    kv[0][1].encode("utf-8"),
-                ),
-            )
-        if a + b in seen_merged:
-            raise ValueError(
-                f"{'WordPiece' if wordpiece else 'BPE'} merge round {rank} "
-                f"re-mints merged token {a + b!r} (two distinct merges "
-                "produce the same string); the word-table segmentation "
-                "would diverge from bpe_encode_word on this corpus — "
-                "reduce n_merges or encode with the vocab table "
-                "(return_vocab=True) instead"
-            )
-        seen_merged.add(a + b)
-        if wordpiece:
-            out_rows.append((rank, a, b, a + b, c, lu, ru, q))
-        else:
-            out_rows.append((rank, a, b, a + b, c))
-        # greedy left-to-right rewrite, the _merge_word semantics
-        new_vocab: dict[tuple[str, ...], int] = {}
-        for syms, fq in vocab.items():
-            m = _merge_word(syms, (a, b))
-            new_vocab[m] = new_vocab.get(m, 0) + fq
-        vocab = new_vocab
-    schema = (
-        "rank int, left string, right string, merged string,"
-        " pair_count long, left_count long, right_count long, score_q long"
-        if wordpiece
-        else "rank int, left string, right string, merged string,"
-        " pair_count long"
+def _first(ranked) -> tuple | None:
+    """The top row of an ordered frame as plain Python values."""
+    best = ranked.limit(1).collect()
+    return None if not best else tuple(
+        v if isinstance(v, str) else int(v) for v in best[0]
     )
-    merges_df = rows_frame(spark, out_rows, schema)
-    if return_vocab:
-        # the final per-word segmentation, same (w, freq, syms) shape as
-        # the distributed word table after all merges.  Words are
-        # distinct, so the syms key maps back to exactly one word.
-        vocab_df = rows_frame(
-            spark,
-            [("".join(syms), fq, list(syms)) for syms, fq in vocab.items()],
-            "w string, freq long, syms array<string>",
+
+
+def _bpe_best_row(cur) -> tuple[str, str, int] | None:
+    """Distributed BPE argmax: max count, then the UTF-8 BYTES of (l, r)
+    ASC.  Spark compares strings by UTF-16 code units, DuckDB/Python by
+    code point / UTF-8 binary — these diverge for supplementary-plane
+    characters (emoji), so the order is on a binary-stable key to keep
+    trainer / oracle / pure-python reference identical on any corpus.
+    The oracle's `ORDER BY l ASC, r ASC` IS UTF-8 binary order (DuckDB's
+    default collation)."""
+    return _first(
+        _pair_counts(cur).orderBy(
+            F.desc("c"), F.asc(F.encode("l", "utf-8")), F.asc(F.encode("r", "utf-8"))
         )
-        return merges_df, vocab_df
-    return merges_df
+    )
+
+
+def _wp_best_row(cur, min_pair_count: int) -> tuple[str, str, int, int, int, int] | None:
+    """Distributed WordPiece argmax: unigram and pair counts over the word
+    table, two symbol-keyed joins of those small frames, the fixed-point
+    score, then `_bpe_best_row`'s binary-stable ties behind score and
+    count."""
+    uni = (
+        cur.select("freq", F.explode("syms").alias("s"))
+        .groupBy("s")
+        .agg(F.sum("freq").alias("u"))
+    )
+    return _first(
+        _pair_counts(cur)
+        .filter(F.col("c") >= int(min_pair_count))
+        .join(uni.select(F.col("s").alias("l"), F.col("u").alias("lu")), "l")
+        .join(uni.select(F.col("s").alias("r"), F.col("u").alias("ru")), "r")
+        .select(
+            "l",
+            "r",
+            "c",
+            "lu",
+            "ru",
+            F.expr(
+                f"CAST(c AS DECIMAL(38,0)) * {WP_SCALE}"
+                " div (CAST(lu AS DECIMAL(38,0)) * ru)"
+            ).alias("score_q"),
+        )
+        .orderBy(
+            F.desc("score_q"),
+            F.desc("c"),
+            F.asc(F.encode("l", "utf-8")),
+            F.asc(F.encode("r", "utf-8")),
+        )
+    )
 
 
 def _apply_merge_kernel(a: str, b: str):
@@ -424,6 +349,103 @@ def _apply_merge_kernel(a: str, b: str):
     return fn
 
 
+def _train_merges(
+    df,
+    text_col: str,
+    n_merges: int,
+    return_vocab: bool,
+    pattern: str | None,
+    name: str,
+    merges_ddl: str,
+    driver_best,
+    spark_best,
+):
+    """The merge loop both trainers share; they differ only in the argmax.
+
+    One corpus-size pass builds the distinct-word table (w, freq, syms).
+    Each round then picks the winning pair — `driver_best(vocab)` on a
+    driver dict when the table is at or below SMALL_VOCAB_THRESHOLD rows,
+    else `spark_best(word_table)` as a LIMIT-1 Spark query — and rewrites
+    every word greedily left-to-right (`_merge_word` on the driver, the
+    Arrow kernel `_apply_merge_kernel` on Spark, checkpointed per round).
+    An argmax returns (left, right, *merge-row extras) or None when no
+    pair qualifies, which ends the loop."""
+    from era_parser_spark.operators.dedup import tokens_col
+
+    spark = df.sparkSession
+    pre_tok = (
+        tokens_col(F.col(text_col))
+        if pattern is None
+        else F.regexp_extract_all(F.col(text_col), F.lit(pattern), 0)
+    )
+    cur = (
+        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
+        .select(F.explode(pre_tok).alias("w"))
+        .filter(F.length("w") > 0)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("freq"))
+        .select(
+            "w",
+            "freq",
+            F.expr(
+                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
+            ).alias("syms"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    vocab = None
+    if cur.count() <= SMALL_VOCAB_THRESHOLD:
+        vocab = {
+            tuple(str(r["w"])): int(r["freq"])
+            for r in cur.select("w", "freq").collect()
+        }
+    out_rows: list[tuple] = []
+    seen_merged: set[str] = set()
+    for rank in range(1, n_merges + 1):
+        best = driver_best(vocab) if vocab is not None else spark_best(cur)
+        if best is None:
+            break
+        a, b = best[0], best[1]
+        # The t32 relational-encode equivalence ("rank-order application
+        # never creates an earlier-rank pair") argues by symbol IDENTITY,
+        # but bpe_encode_word keys ranks by symbol STRINGS: if two
+        # different merges mint the same merged string (e.g. 'abc' via
+        # (ab,c) and via (a,bc)), the encoder can see an "earlier-rank"
+        # string pair the trainer's argument excludes and silently
+        # diverge.  Refuse such corpora loudly (round-8 advice).
+        if a + b in seen_merged:
+            raise ValueError(
+                f"{name} merge round {rank} re-mints merged token {a + b!r} "
+                "(two distinct merges produce the same string); the "
+                "word-table segmentation would diverge from bpe_encode_word "
+                "on this corpus — reduce n_merges or encode with the vocab "
+                "table (return_vocab=True) instead"
+            )
+        seen_merged.add(a + b)
+        out_rows.append((rank, a, b, a + b, *best[2:]))
+        if vocab is not None:
+            merged: dict[tuple[str, ...], int] = {}
+            for syms, fq in vocab.items():
+                m = _merge_word(syms, (a, b))
+                merged[m] = merged.get(m, 0) + fq
+            vocab = merged
+        else:
+            cur = cur.mapInPandas(
+                _apply_merge_kernel(a, b), cur.schema
+            ).localCheckpoint(eager=True)
+    merges_df = rows_frame(spark, out_rows, merges_ddl)
+    if not return_vocab:
+        return merges_df
+    if vocab is not None:
+        # words are distinct, so each syms key maps back to one word
+        cur = rows_frame(
+            spark,
+            [("".join(syms), fq, list(syms)) for syms, fq in vocab.items()],
+            "w string, freq long, syms array<string>",
+        )
+    return merges_df, cur
+
+
 def bpe_merges_distributed(
     df,
     text_col: str,
@@ -431,10 +453,10 @@ def bpe_merges_distributed(
     return_vocab: bool = False,
     pattern: str | None = None,
 ):
-    """BPE merge training with the merge LOOP distributed — the exact
-    upgrade of `learn_bpe_merges` for corpora whose pre-token vocabulary
-    does not fit a driver (byte-noise multilingual web text at 100 TB can
-    reach 1e8-1e9 distinct words; Heaps' law only bounds CLEAN corpora).
+    """BPE merge training (Sennrich et al. 2016) with the merge LOOP able
+    to run distributed, for corpora whose pre-token vocabulary does not
+    fit a driver (byte-noise multilingual web text at 100 TB can reach
+    1e8-1e9 distinct words; Heaps' law only bounds CLEAN corpora).
 
     One corpus-size pass builds the distinct-word frequency table
     (explode + map-side-combined groupBy — the only stage that sees
@@ -442,11 +464,12 @@ def bpe_merges_distributed(
     table: an adjacent-pair count (integer sum of word freqs), a
     deterministic argmax (max count, then lexicographically smallest
     (left, right) — UTF-8 binary order, identical in Spark / DuckDB /
-    Python), and an Arrow-batched greedy left-to-right rewrite.  Only the
-    single winning pair is ever collected per round (the s16
-    tiny-artifact convention); the word table is localCheckpoint'ed per
-    round so round r+1 does not recompute rounds 1..r (the CC-edges
-    precedent).
+    Python), and a greedy left-to-right rewrite.  Past
+    SMALL_VOCAB_THRESHOLD words only the single winning pair is ever
+    collected per round (the s16 tiny-artifact convention) and the word
+    table is localCheckpoint'ed per round so round r+1 does not recompute
+    rounds 1..r; at or below it the rounds run on the collected table
+    (`_train_merges`).
 
     Tokenization defaults to the suite's whitespace/lowercase convention
     (`tokens_col`, the oracle path); pass ``pattern=`` (e.g.
@@ -471,101 +494,13 @@ def bpe_merges_distributed(
     under the learned ranks (applying merges in rank order can never
     create an instance of an earlier-rank pair, since every pair created
     by merge r involves the symbol merge r minted; pinned differentially
-    against bpe_encode_word in tests/test_round8_ops.py).
+    against bpe_encode_word in tests/test_round8_ops.py).  A corpus on
+    which two merges mint the same string raises ValueError.
     """
-    from pyspark.sql import functions as F
-
-    from era_parser_spark.operators.dedup import tokens_col
-
-    spark = df.sparkSession
-    pre_tok = (
-        tokens_col(F.col(text_col))
-        if pattern is None
-        else F.regexp_extract_all(F.col(text_col), F.lit(pattern), 0)
+    return _train_merges(
+        df, text_col, n_merges, return_vocab, pattern,
+        "BPE", _BPE_MERGES_DDL, _bpe_best_pair, _bpe_best_row,
     )
-    words = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(F.explode(pre_tok).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(
-            "w",
-            "freq",
-            F.expr(
-                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-            ).alias("syms"),
-        )
-    )
-    cur = words.localCheckpoint(eager=True)
-    if cur.count() <= SMALL_VOCAB_THRESHOLD:
-        # small-vocab fast path: identical merges/vocab off the driver
-        # loop (see SMALL_VOCAB_THRESHOLD); the distributed rounds below
-        # remain the byte-noise-corpus path the 100 TB argument is about
-        return _driver_merge_loop(
-            spark, cur, n_merges, return_vocab, wordpiece=False
-        )
-    out_rows: list[tuple] = []
-    seen_merged: set[str] = set()
-    for rank in range(1, n_merges + 1):
-        best = (
-            cur.filter(F.size("syms") >= 2)
-            .select(
-                "freq",
-                F.expr(
-                    "explode(transform(sequence(0, size(syms)-2),"
-                    " i -> struct(syms[i] AS l, syms[i+1] AS r)))"
-                ).alias("p"),
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("c"))
-            # tie-break on the UTF-8 BYTES of (l, r): Spark compares
-            # strings by UTF-16 code units, DuckDB/Python by code point /
-            # UTF-8 binary — these diverge for supplementary-plane
-            # characters (emoji), so the argmax must order on a
-            # binary-stable key to keep trainer / oracle / pure-python
-            # reference identical on any corpus (round-8 advice).  The
-            # oracle's `ORDER BY l ASC, r ASC` IS UTF-8 binary order
-            # (DuckDB's default collation), so only this side changes.
-            .orderBy(
-                F.desc("c"),
-                F.asc(F.encode("l", "utf-8")),
-                F.asc(F.encode("r", "utf-8")),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        a, b, c = best[0]["l"], best[0]["r"], int(best[0]["c"])
-        # The t32 relational-encode equivalence ("rank-order application
-        # never creates an earlier-rank pair") argues by symbol IDENTITY,
-        # but bpe_encode_word keys ranks by symbol STRINGS: if two
-        # different merges mint the same merged string (e.g. 'abc' via
-        # (ab,c) and via (a,bc)), the encoder can see an "earlier-rank"
-        # string pair the trainer's argument excludes and silently
-        # diverge.  Refuse such corpora loudly (round-8 advice).
-        if a + b in seen_merged:
-            raise ValueError(
-                f"BPE merge round {rank} re-mints merged token {a + b!r} "
-                "(two distinct merges produce the same string); the "
-                "trainer's word-table segmentation would diverge from "
-                "bpe_encode_word on this corpus — reduce n_merges or "
-                "encode with the vocab table (return_vocab=True) instead"
-            )
-        seen_merged.add(a + b)
-        out_rows.append((rank, a, b, a + b, c))
-        cur = cur.mapInPandas(
-            _apply_merge_kernel(a, b), cur.schema
-        ).localCheckpoint(eager=True)
-    merges_df = rows_frame(
-        spark,
-        out_rows,
-        "rank int, left string, right string, merged string, pair_count long",
-    )
-    if return_vocab:
-        return merges_df, cur
-    return merges_df
 
 
 def wordpiece_merges_distributed(
@@ -576,33 +511,32 @@ def wordpiece_merges_distributed(
     pattern: str | None = None,
     min_pair_count: int = 1,
 ):
-    """WordPiece merge training (Schuster & Nakajima 2012, the BERT rule)
-    with the merge loop distributed — `bpe_merges_distributed` with the
-    likelihood selection rule: each round picks the pair maximizing
-    count(ab) / (count(a) * count(b)), the greedy unigram-LM-likelihood
-    gain, instead of BPE's raw count(ab).  Rare-but-always-together
-    symbol pairs win over frequent-but-independent ones — the property
-    that gives BERT-style vocabularies their morpheme bias.
+    """WordPiece merge training (Schuster & Nakajima 2012, the BERT rule):
+    `bpe_merges_distributed` with the likelihood selection rule — each
+    round picks the pair maximizing count(ab) / (count(a) * count(b)),
+    the greedy unigram-LM-likelihood gain, instead of BPE's raw
+    count(ab).  Rare-but-always-together symbol pairs win over
+    frequent-but-independent ones — the property that gives BERT-style
+    vocabularies their morpheme bias.
 
     The score is the exact fixed-point integer
     ``(c * 10^18) intdiv (u_left * u_right)``: numerator and denominator
     products run in DECIMAL(38,0) (Spark's IntegralDivide on decimals is
     exact and returns BIGINT — verified equal to DuckDB's HUGEINT ``//``
     and Python's ``//``), and since c <= min(u_left, u_right) the
-    quotient is <= 10^18, always a BIGINT.  No floats anywhere, so
-    trainer / DuckDB oracle / `learn_wordpiece_merges` (the driver-loop
-    twin) agree bit-for-bit on any corpus up to ~10^19 tokens.  Score
+    quotient is <= 10^18, always a BIGINT.  No floats anywhere, so the
+    distributed round, the driver argmax `_wp_best_pair` and the DuckDB
+    oracle agree bit-for-bit on any corpus up to ~10^19 tokens.  Score
     collisions below the 1e-18 quantum fall to the deterministic
     tie-break (count DESC, then pair UTF-8 bytes ASC) — the documented
     house fixed-point convention (t17/p16), not float argmax.
 
-    Per round the work stays O(word table), never O(corpus): one
-    unigram count + one adjacent-pair count over the distinct-word
+    Per distributed round the work stays O(word table), never O(corpus):
+    one unigram count + one adjacent-pair count over the distinct-word
     frequency table (both map-side combined), two symbol-keyed joins of
-    those two SMALL frames, a LIMIT-1 argmax, and the same Arrow-batched
-    greedy rewrite as BPE — only the winning row is collected, the word
-    table is localCheckpoint'ed per round, and the 8x rehearsal's
-    volume-independence argument for t31 carries over unchanged.
+    those two SMALL frames, a LIMIT-1 argmax, and the same greedy rewrite
+    as BPE — the 8x rehearsal's volume-independence argument for t31
+    carries over unchanged.
 
     ``min_pair_count`` mirrors production WordPiece frequency cutoffs
     (a pair seen once with singleton symbols would score a perfect
@@ -616,120 +550,12 @@ def wordpiece_merges_distributed(
     word table (w, freq, syms) — the trainer's per-word segmentation,
     the same relational-counting artifact t32 uses.
     """
-    from pyspark.sql import functions as F
-
-    from era_parser_spark.operators.dedup import tokens_col
-
-    spark = df.sparkSession
-    pre_tok = (
-        tokens_col(F.col(text_col))
-        if pattern is None
-        else F.regexp_extract_all(F.col(text_col), F.lit(pattern), 0)
+    return _train_merges(
+        df, text_col, n_merges, return_vocab, pattern,
+        "WordPiece", _WP_MERGES_DDL,
+        lambda vocab: _wp_best_pair(vocab, min_pair_count),
+        lambda cur: _wp_best_row(cur, min_pair_count),
     )
-    words = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(F.explode(pre_tok).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(
-            "w",
-            "freq",
-            F.expr(
-                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-            ).alias("syms"),
-        )
-    )
-    cur = words.localCheckpoint(eager=True)
-    if cur.count() <= SMALL_VOCAB_THRESHOLD:
-        # small-vocab fast path, WordPiece flavor — the exact integer
-        # likelihood argmax of _wp_best_pair IS the distributed round's
-        # (same fixed-point score, same count-then-UTF-8-bytes ties)
-        return _driver_merge_loop(
-            spark,
-            cur,
-            n_merges,
-            return_vocab,
-            wordpiece=True,
-            min_pair_count=min_pair_count,
-        )
-    out_rows: list[tuple] = []
-    seen_merged: set[str] = set()
-    for rank in range(1, n_merges + 1):
-        uni = (
-            cur.select("freq", F.explode("syms").alias("s"))
-            .groupBy("s")
-            .agg(F.sum("freq").alias("u"))
-        )
-        pairs = (
-            cur.filter(F.size("syms") >= 2)
-            .select(
-                "freq",
-                F.expr(
-                    "explode(transform(sequence(0, size(syms)-2),"
-                    " i -> struct(syms[i] AS l, syms[i+1] AS r)))"
-                ).alias("p"),
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("c"))
-        )
-        best = (
-            pairs.filter(F.col("c") >= int(min_pair_count))
-            .join(uni.select(F.col("s").alias("l"), F.col("u").alias("lu")), "l")
-            .join(uni.select(F.col("s").alias("r"), F.col("u").alias("ru")), "r")
-            .select(
-                "l",
-                "r",
-                "c",
-                "lu",
-                "ru",
-                F.expr(
-                    f"CAST(c AS DECIMAL(38,0)) * {WP_SCALE}"
-                    " div (CAST(lu AS DECIMAL(38,0)) * ru)"
-                ).alias("score_q"),
-            )
-            # same binary-stable tie order as BPE (UTF-16 vs UTF-8 trap)
-            .orderBy(
-                F.desc("score_q"),
-                F.desc("c"),
-                F.asc(F.encode("l", "utf-8")),
-                F.asc(F.encode("r", "utf-8")),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        row = best[0]
-        a, b = row["l"], row["r"]
-        if a + b in seen_merged:
-            raise ValueError(
-                f"WordPiece merge round {rank} re-mints merged token "
-                f"{a + b!r} (two distinct merges produce the same string); "
-                "the word-table segmentation would diverge from "
-                "bpe_encode_word on this corpus — reduce n_merges or "
-                "encode with the vocab table (return_vocab=True) instead"
-            )
-        seen_merged.add(a + b)
-        out_rows.append(
-            (
-                rank, a, b, a + b,
-                int(row["c"]), int(row["lu"]), int(row["ru"]),
-                int(row["score_q"]),
-            )
-        )
-        cur = cur.mapInPandas(
-            _apply_merge_kernel(a, b), cur.schema
-        ).localCheckpoint(eager=True)
-    merges_df = rows_frame(
-        spark,
-        out_rows,
-        "rank int, left string, right string, merged string,"
-        " pair_count long, left_count long, right_count long, score_q long",
-    )
-    if return_vocab:
-        return merges_df, cur
-    return merges_df
 
 
 def wordpiece_greedy_counts(words_df, pieces: list[str]):

@@ -223,11 +223,7 @@ def write_era(block_ssz_payloads: list[bytes], state: bytes | None = None) -> by
         rel = [0] * count
         for slot, pos in positions:
             rel[slot - start] = pos - index_start
-        index = (
-            struct.pack("<q", start)
-            + b"".join(struct.pack("<q", r) for r in rel)
-            + struct.pack("<q", count)
-        )
+        index = struct.pack(f"<q{count}qq", start, *rel, count)
         out += _record(TYPE_SLOT_INDEX, index)
     return bytes(out)
 

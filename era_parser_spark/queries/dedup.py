@@ -125,7 +125,8 @@ def dd2_ngram_jaccard_topk(spark, sf_dir):
 )
 def dd5_dup_clusters(spark, sf_dir):
     # Near-dup pairs (3-gram Jaccard >= 0.5) -> transitive duplicate
-    # clusters via distributed hash-min connected components.
+    # clusters via connected_components (driver union-find below its edge
+    # gate, star-contraction rounds above it).
     from era_parser_spark.operators.graph import cluster_sizes, connected_components
 
     docs = table(spark, sf_dir, "documents")
@@ -179,9 +180,8 @@ def dd3_minhash_lsh(spark, sf_dir):
 
 @register(
     "dd6_dup_clusters_alternating",
-    # Same clusters as dd5, same recursive-CTE oracle - but computed by the
-    # O(log n) alternating large-star/small-star algorithm instead of
-    # O(diameter) hash-min, proving the adversarial-shape path end-to-end.
+    # dd5 under a second registry name that callers use: same clusters,
+    # same recursive-CTE oracle, same plan.
     oracle=f"""
     WITH RECURSIVE
     sh AS (SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents),
@@ -213,15 +213,11 @@ def dd3_minhash_lsh(spark, sf_dir):
     """,
 )
 def dd6_dup_clusters_alternating(spark, sf_dir):
-    # dd5's clusters via the O(log n) star-contraction algorithm.
-    from era_parser_spark.operators.graph import (
-        cluster_sizes,
-        connected_components_alternating,
-    )
+    from era_parser_spark.operators.graph import cluster_sizes, connected_components
 
     docs = table(spark, sf_dir, "documents")
     edges = ngram_jaccard_pairs(docs, "doc_id", "text", n=3).filter(F.col("jaccard") >= 0.5)
-    comps = connected_components_alternating(
+    comps = connected_components(
         docs.select("doc_id"), edges, id_col="doc_id", src_col="doc_a", dst_col="doc_b"
     )
     return cluster_sizes(comps, id_col="doc_id")
@@ -1590,9 +1586,9 @@ def _mm10_oracle() -> str:
 def mm10_phash_dup_clusters(spark, sf_dir):
     """Image near-dup CLUSTERS with a keeper policy — mm9's pHash banded
     pairs promoted to the full dedup decision (the dd5 shape on the
-    multimodal tier): transitive clusters via distributed hash-min
-    connected components over the hamming<=8 edges, cluster sizes, and
-    kept = the min-media-id member of each cluster (the deterministic
+    multimodal tier): transitive clusters via connected_components
+    (union-find below its edge gate, star contraction above) over the
+    hamming<=8 edges, cluster sizes, and kept = the min-media-id member of each cluster (the deterministic
     survivor rule; singletons keep themselves).  Same augmented corpus
     as mm9 (every 10th doc gets a one-char twin), so real multi-member
     clusters exist.  Output: (media_id, cluster_id, cluster_sz, kept)."""

@@ -1574,9 +1574,9 @@ def _t32_oracle(k: int) -> str:
 def t31_bpe_merges(spark, sf_dir):
     """Distributed BPE merge training (Sennrich et al. 2016, the in-repo
     no-end-marker convention): 8 exact-integer merge rounds over the
-    word-frequency table, the merge loop itself distributed — the word
-    table never collects to the driver (operators/tokenizer.py's
-    `learn_bpe_merges` is the driver-loop twin for driver-sized vocabs)."""
+    word-frequency table; past SMALL_VOCAB_THRESHOLD words the merge loop
+    runs as Spark rounds and the word table never collects to the
+    driver, at or below it the same loop runs on the collected table."""
     from era_parser_spark.operators.tokenizer import bpe_merges_distributed
 
     docs = table(spark, sf_dir, "documents")

@@ -24,6 +24,25 @@ from pyspark.sql.pandas.types import to_arrow_schema
 CODEGEN_CACHE_MAX_ENTRIES = 2000
 
 
+def _mem_total_kb() -> int | None:
+    """The host's MemTotal in KiB, or None where /proc/meminfo is absent."""
+    try:
+        with open("/proc/meminfo") as fh:
+            return next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return None
+
+
+def _driver_memory(mem_total_kb: int | None) -> str:
+    """Default `spark.driver.memory`: a quarter of the host's RAM, between
+    1 and 4 GiB (2g when RAM is unknown) — the benchmark's rule.  A fixed
+    16g let the driver JVM of a local session grow past half of a 15 GB
+    host and get OOM-killed beside a second Spark process."""
+    if mem_total_kb is None:
+        return "2g"
+    return f"{max(1, min(4, mem_total_kb // (4 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "era_parser_spark",
     master: str | None = None,
@@ -57,7 +76,10 @@ def get_spark(
         # Static conf: takes effect only when this call creates the session.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory(_mem_total_kb()),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

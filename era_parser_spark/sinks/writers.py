@@ -11,8 +11,9 @@ DataFrameWriter plan:
   `#` comment headers (which break parallel readers).
 * single-document JSON (A9): exact reference shape, driver-assembled —
   documented as a per-era export (<= 8192 rows), not a big-data path.
-* ClickHouse (A14): JDBC writer config with the reference's batch size;
-  gated so environments without the driver jar fail with a clear message.
+* ClickHouse (A14): `write_clickhouse`, a per-partition streaming insert
+  through a client factory, in the reference's 100k batches with its
+  retry/backoff.
 """
 
 from __future__ import annotations
@@ -208,31 +209,6 @@ def write_clickhouse(
             )
 
     df.foreachPartition(_load)
-
-
-def clickhouse_writer(
-    df: DataFrame,
-    url: str,
-    table: str,
-    user: str = "default",
-    password: str = "",
-    batchsize: int = CLICKHOUSE_BATCH,
-):
-    """A14: ClickHouse via JDBC (needs the clickhouse-jdbc jar on the
-    classpath).  Returns the configured writer; .save() executes.  The
-    reference's retry/backoff (clickhouse_service.py:139-162) maps to Spark
-    task retries; its 100k insert batching maps to `batchsize`."""
-    return (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("user", user)
-        .option("password", password)
-        .option("driver", "com.clickhouse.jdbc.ClickHouseDriver")
-        .option("batchsize", str(batchsize))
-        .option("isolationLevel", "NONE")
-        .mode("append")
-    )
 
 
 def write_bucketed(

@@ -136,6 +136,31 @@ def _url_rows(spark: SparkSession, urls: list, glob: str | None) -> DataFrame:
     return rows_frame(spark, keep, "path string").repartition(len(keep) or 1)
 
 
+def _source_rows(spark: SparkSession, paths: str | list[str], glob: str | None) -> DataFrame:
+    """One row per era file, in one of three shapes chosen from the input
+    path strings (no Spark job to probe the data):
+
+    * local files -> binaryFile listing, `path` only; the task opens its
+      own file so era bytes never cross the JVM->Arrow boundary;
+    * http(s) URLs (A8) -> plain `path` rows, one per task; the task
+      fetches with urllib (the driver never downloads);
+    * other remote schemes (s3a/hdfs/...) -> binaryFile `path` + `content`:
+      the JVM filesystem layer owns credentials and retries there.
+
+    Task-side readers use `content` when the row has it, else
+    `_fetch_era_bytes(path)`."""
+    in_paths = [paths] if isinstance(paths, str) else list(paths)
+    if all(str(p).startswith(("http://", "https://")) for p in in_paths):
+        return _url_rows(spark, in_paths, glob)
+    reader = spark.read.format("binaryFile")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    binary = reader.load(paths)
+    if all(_local_path(str(p)) is not None for p in in_paths):
+        return binary.select("path")
+    return binary.select("path", "content")
+
+
 def _era_path_filter(slot_range: tuple[int, int]) -> F.Column:
     """File-level pruning predicate: drop era files whose slot span
     [era*8192, era*8192+8191] cannot intersect the requested range.  Paths
@@ -363,25 +388,7 @@ def read_era_blocks(
         body_include = set()
         for t in tables:
             body_include |= TABLE_BODY_FIELDS[t]
-    # Three source shapes, chosen from the input path strings (no Spark
-    # job to probe the data):
-    #  * local files -> binaryFile listing, paths only; the task opens its
-    #    own file so era bytes never cross the JVM->Arrow boundary
-    #  * http(s) URLs (A8) -> plain path rows, one per task; the kernel
-    #    fetches with urllib inside the task (the driver never downloads)
-    #  * other remote schemes (s3a/hdfs/...) -> binaryFile with content:
-    #    the JVM filesystem layer owns credentials/retries there
-    in_paths = [paths] if isinstance(paths, str) else list(paths)
-    is_http = all(str(p).startswith(("http://", "https://")) for p in in_paths)
-    if is_http:
-        src = _url_rows(spark, in_paths, glob)
-    else:
-        reader = spark.read.format("binaryFile")
-        if glob:
-            reader = reader.option("pathGlobFilter", glob)
-        binary = reader.load(paths)
-        local = all(_local_path(str(p)) is not None for p in in_paths)
-        src = binary.select("path") if local else binary.select("path", "content")
+    src = _source_rows(spark, paths, glob)
     if slot_range is not None:
         src = src.filter(_era_path_filter(slot_range))
     if partitions is not None:
@@ -458,22 +465,16 @@ def validate_era_files(
 ) -> DataFrame:
     """Distributed strict integrity check: one validate_era report per file.
 
-    Same source shapes as read_era_blocks (local binaryFile listing /
-    http(s) URL rows), bytes read task-side — validating a 100 TB archive
-    is one map over the file listing.
+    Same source rows as read_era_blocks (`_source_rows`): local and
+    http(s) bytes are read task-side, other schemes' bytes arrive in the
+    `content` column — validating a 100 TB archive is one map over the
+    file listing.
     """
     from era_parser_spark.parsing.e2store import validate_era
     from era_parser_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    in_paths = [paths] if isinstance(paths, str) else list(paths)
-    if all(str(p).startswith(("http://", "https://")) for p in in_paths):
-        src = _url_rows(spark, in_paths, glob)
-    else:
-        reader = spark.read.format("binaryFile")
-        if glob:
-            reader = reader.option("pathGlobFilter", glob)
-        src = reader.load(paths).select("path")
+    src = _source_rows(spark, paths, glob)
 
     out_schema = (
         "path string, ok boolean, n_records long, n_blocks long, bad_crc long, "
@@ -486,8 +487,12 @@ def validate_era_files(
 
         for pdf in it:
             rows = []
-            for path in pdf["path"]:
-                rep = validate_era(_fetch_era_bytes(str(path)))
+            for i, path in enumerate(pdf["path"]):
+                data = (
+                    pdf["content"].iloc[i] if "content" in pdf
+                    else _fetch_era_bytes(str(path))
+                )
+                rep = validate_era(data)
                 rep["path"] = str(path)
                 rows.append(rep)
             yield pd.DataFrame(rows)

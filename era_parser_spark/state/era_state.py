@@ -17,7 +17,7 @@ exactly its own partitions.
 
 Concurrency contract: the log is SINGLE-DRIVER.  Appends are plain parquet
 file adds (safe to interleave — readers see a union), but `compact_log`'s
-rewrite-and-swap and the read-plan-write cycle of a batch run are not
+rewrite and the read-plan-write cycle of a batch run are not
 serialized by any commit protocol, matching the reference's one-process
 model (its ClickHouse table has no cross-run transaction either; it runs
 OPTIMIZE between runs).  Deployments that might run two drivers against
@@ -295,22 +295,36 @@ class EraStateStore:
 
         Long-running deployments accrete one small file per recorded
         batch; at 100k eras that is filesystem-metadata pressure on
-        every latest_state() read.  Compaction is a rewrite-and-swap
-        (not atomic vs concurrent writers — run it between batches, as
-        the reference runs OPTIMIZE TABLE ... FINAL between runs,
-        era_state_manager.py optimize_tables).  Returns rows kept.
-        """
-        df = self.log()
+        every latest_state() read.  Compaction writes the log's distinct
+        rows beside it, moves the new files into the log directory, and
+        only then deletes the files listed before the rewrite.  A driver
+        that dies midway leaves the old files, or old and new side by
+        side; either way the log never goes missing, and exact-duplicate
+        rows change no status (latest_state and era_summary take
+        argmax(insert_version), and a duplicate carries the same status)
+        and are dropped by the next compaction.  Not serialized against
+        concurrent writers — run it between batches, as the reference
+        runs OPTIMIZE TABLE ... FINAL between runs (era_state_manager.py
+        optimize_tables).  Returns rows kept."""
+        if not self._log_exists():
+            return 0
+        fs, log_dir, jvm = self._fs_and_path(self.path)
+        # checksum files (.crc) go with their data file on delete
+        old = [
+            st.getPath() for st in fs.listStatus(log_dir)
+            if not st.getPath().getName().startswith(".")
+        ]
+        df = self.log().distinct()
         n = df.count()
-        tmp = self.path.rstrip("/") + ".__compact__"
-        df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        src = jvm.org.apache.hadoop.fs.Path(tmp)
-        dst = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = dst.getFileSystem(conf)
-        fs.delete(dst, True)
-        fs.rename(src, dst)
+        tmp = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + ".__compact__")
+        df.coalesce(target_files).write.mode("overwrite").parquet(tmp.toString())
+        for st in fs.listStatus(tmp):
+            name = st.getPath().getName()
+            if name.startswith("part-"):  # write-job-unique names
+                fs.rename(st.getPath(), jvm.org.apache.hadoop.fs.Path(log_dir, name))
+        for p in old:
+            fs.delete(p, True)
+        fs.delete(tmp, True)
         return int(n)
 
     # -- planning (D1) ---------------------------------------------------------

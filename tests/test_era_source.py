@@ -401,6 +401,36 @@ def test_validate_era_files_and_corruption(spark, tmp_path):
     assert cli_main(["validate", str(d)]) == 1
 
 
+def test_validate_reads_content_for_remote_schemes(spark, tmp_path, monkeypatch):
+    """Sources that are neither local nor http(s) (s3a, hdfs) hand the
+    bytes over in binaryFile's `content` column; validate must check
+    those bytes, not try a task-side fetch.  Emulated by making the
+    driver see every path as non-local."""
+    import era_parser_spark.sources.era as era
+    from era_parser_spark.testing.era_gen import era_filename, write_synthetic_era
+
+    d = tmp_path / "remote_eras"
+    d.mkdir()
+    for era_no in (1510, 1511):
+        write_synthetic_era(str(d / era_filename("gnosis", era_no)), era_no,
+                            "gnosis", blocks=6)
+    f = d / era_filename("gnosis", 1511)
+    f.write_bytes(f.read_bytes()[:-13])  # one report must say not ok
+
+    def reports():
+        return {
+            r.path.rsplit("/", 1)[-1]: r.asDict()
+            for r in era.validate_era_files(spark, str(d)).collect()
+        }
+
+    by_path = reports()
+    monkeypatch.setattr(era, "_local_path", lambda path: None)
+    assert era._source_rows(spark, str(d), "*.era").columns == ["path", "content"]
+    assert reports() == by_path
+    assert by_path[era_filename("gnosis", 1510)]["ok"]
+    assert by_path[era_filename("gnosis", 1511)]["truncated"]
+
+
 def test_parse_error_counter_accumulator(spark, tmp_path):
     """on_error='skip' + error_counter: corrupt SSZ blocks count task-side
     without failing the scan (CRC intact, body undecodable)."""

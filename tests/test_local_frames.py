@@ -120,3 +120,15 @@ def test_create_dataframe_only_inside_rows_frame():
                 offenders.append(os.path.relpath(path, PKG))
     assert offenders == []
     assert in_helper == 1
+
+
+def test_driver_memory_default_is_a_quarter_of_ram():
+    """get_spark's default driver heap: a quarter of MemTotal, clamped to
+    1-4 GiB, 2g when MemTotal is unknown (no session is started)."""
+    from era_parser_spark.session import _driver_memory
+
+    gib = 1024 * 1024  # KiB
+    assert _driver_memory(15 * gib) == "3g"
+    assert _driver_memory(2 * gib) == "1g"
+    assert _driver_memory(64 * gib) == "4g"
+    assert _driver_memory(None) == "2g"

@@ -144,6 +144,34 @@ def test_e2store_roundtrip_and_stats():
     assert stats["record_counts"] == {"version": 1, "block": 3, "state": 1, "slot_index": 1}
 
 
+def test_slot_index_bytes_match_per_slot_packing():
+    """write_era packs the SlotIndex payload in one call; its bytes equal
+    the per-slot form: start slot, one signed little-endian offset per
+    slot (relative to the index record, 0 for an empty slot), count."""
+    import struct
+
+    from era_parser_spark.parsing.e2store import (
+        TYPE_COMPRESSED_BLOCK,
+        TYPE_SLOT_INDEX,
+        iter_records,
+    )
+
+    slots = (300, 301, 303)
+    payloads = [encode_signed_block(make_block_doc(s, "gnosis"), "phase0") for s in slots]
+    recs = list(iter_records(write_era(payloads, state=b"state-bytes")))
+    blocks = [r.offset for r in recs if r.record_type == TYPE_COMPRESSED_BLOCK]
+    (index,) = [r for r in recs if r.record_type == TYPE_SLOT_INDEX]
+    rel = [0] * 4
+    for slot, off in zip(slots, blocks):
+        rel[slot - 300] = off - index.offset
+    want = (
+        struct.pack("<q", 300)
+        + b"".join(struct.pack("<q", r) for r in rel)
+        + struct.pack("<q", 4)
+    )
+    assert bytes(index.payload) == want
+
+
 def test_slot_index_pushdown_skips_decompression(monkeypatch):
     """slot_range over a real index must not snappy-decompress non-matches."""
     from era_parser_spark.parsing import e2store

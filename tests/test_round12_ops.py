@@ -337,18 +337,16 @@ def test_smallgraph_cc_matches_distributed_rounds(spark, monkeypatch):
             (r["id"], r["cluster_id"]) for r in fn(nodes, e, id_col="id").collect()
         }
 
-    fast_alt = labels(gr.connected_components_alternating)
-    fast_hashmin = labels(gr.connected_components)
+    fast = labels(gr.connected_components)
     monkeypatch.setattr(gr, "SMALL_GRAPH_EDGE_THRESHOLD", 0)
-    slow_alt = labels(gr.connected_components_alternating)
-    slow_hashmin = labels(gr.connected_components)
+    slow = labels(gr.connected_components)
     want = {
         (1, 1), (2, 1), (3, 1), (4, 1), (5, 1),
         (10, 10), (11, 10), (12, 10),
         (20, 20), (21, 20), (22, 20), (23, 20),
         (99, 99),
     }
-    assert fast_alt == slow_alt == fast_hashmin == slow_hashmin == want
+    assert fast == slow == want
 
     # string ids: UTF-8 binary min must match Python's code-point min
     se = spark.createDataFrame([("b", "a"), ("b", "c")], "src string, dst string")

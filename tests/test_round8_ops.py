@@ -207,10 +207,11 @@ def _ref_bpe(words_freq: dict, k: int):
     return merges
 
 
-def test_bpe_merges_distributed_matches_reference(spark):
+def test_bpe_merges_distributed_matches_reference(spark, monkeypatch):
     """Differential pin incl. the greedy-overlap cases (aaa/aaaa under
-    merge (a,a)), a unicode word, and tie-breaking."""
-    from era_parser_spark.operators.tokenizer import bpe_merges_distributed
+    merge (a,a)), a unicode word, and tie-breaking, on both sides of the
+    small-vocab gate."""
+    import era_parser_spark.operators.tokenizer as tk
 
     corpus = [
         "aaa abab low lower lowest low low",
@@ -223,16 +224,19 @@ def test_bpe_merges_distributed_matches_reference(spark):
         for w in doc.lower().split():
             wf[w] = wf.get(w, 0) + 1
     want = _ref_bpe(wf, 6)
-    got = [
-        (r["left"], r["right"], r.pair_count)
-        for r in bpe_merges_distributed(df, "text", n_merges=6)
-        .orderBy("rank")
-        .collect()
-    ]
-    assert got == want
     # overlap semantics really exercised: round 1 must be (a,a) with
     # count 2*2 (two 'aaa') + 3 (one 'aaaa') = 7
-    assert got[0] == ("a", "a", 7)
+    assert want[0] == ("a", "a", 7)
+    # the driver merge loop, then the Spark rounds
+    for thr in (tk.SMALL_VOCAB_THRESHOLD, -1):
+        monkeypatch.setattr(tk, "SMALL_VOCAB_THRESHOLD", thr)
+        got = [
+            (r["left"], r["right"], r.pair_count)
+            for r in tk.bpe_merges_distributed(df, "text", n_merges=6)
+            .orderBy("rank")
+            .collect()
+        ]
+        assert got == want, thr
 
 
 def test_bpe_merges_vocab_exhaustion_stops_early(spark):
@@ -298,12 +302,12 @@ def test_bpe_vocab_segmentation_equals_encoder(spark):
 
 
 @pytest.mark.parametrize("seed", [7, 1234, 987654])
-def test_bpe_merges_random_corpora_match_reference(spark, seed):
+def test_bpe_merges_random_corpora_match_reference(spark, monkeypatch, seed):
     """Seeded random corpora over a tiny alphabet — maximal tie and
     overlap pressure on the argmax order and the greedy rewrite."""
     import random
 
-    from era_parser_spark.operators.tokenizer import bpe_merges_distributed
+    import era_parser_spark.operators.tokenizer as tk
 
     rng = random.Random(seed)
     words = [
@@ -317,13 +321,16 @@ def test_bpe_merges_random_corpora_match_reference(spark, seed):
         for w in doc.lower().split():
             wf[w] = wf.get(w, 0) + 1
     want = _ref_bpe(wf, 5)
-    got = [
-        (r["left"], r["right"], r.pair_count)
-        for r in bpe_merges_distributed(df, "text", n_merges=5)
-        .orderBy("rank")
-        .collect()
-    ]
-    assert got == want
+    # the driver merge loop, then the Spark rounds
+    for thr in (tk.SMALL_VOCAB_THRESHOLD, -1):
+        monkeypatch.setattr(tk, "SMALL_VOCAB_THRESHOLD", thr)
+        got = [
+            (r["left"], r["right"], r.pair_count)
+            for r in tk.bpe_merges_distributed(df, "text", n_merges=5)
+            .orderBy("rank")
+            .collect()
+        ]
+        assert got == want, thr
 
 
 # ------------------------------------------------------------- t33 suffix

@@ -244,11 +244,15 @@ def test_adjacent_pairs_match_sorted_zip(spark):
 # --- BPE: real pre-tokenizer passthrough --------------------------------------
 
 
-def test_bpe_pattern_passthrough_train_apply_parity(spark, tmp_path):
+def test_bpe_pattern_passthrough_train_apply_parity(spark, tmp_path, monkeypatch):
     """Train with the byte-level pre-tokenizer, apply with the SAME
     pattern: the trainer's word-table segmentation must equal the
-    encoder's counts, and the distributed trainer must equal the
-    driver-loop twin (learn_bpe_merges) merge-for-merge."""
+    encoder's counts, its merges must equal the pure-python reference
+    over the same regex's word table on both sides of the small-vocab
+    gate, and learn_bpe_merges must return them as a list."""
+    import re
+
+    import era_parser_spark.operators.tokenizer as tk
     from era_parser_spark.operators.text import BPE_PATTERN
     from era_parser_spark.operators.tokenizer import (
         bpe_merges_distributed,
@@ -256,6 +260,7 @@ def test_bpe_pattern_passthrough_train_apply_parity(spark, tmp_path):
         real_bpe_token_count_col,
         save_merges,
     )
+    from tests.test_round8_ops import _ref_bpe
 
     rows = [
         (1, "Hello, world! The lower-case world says hello."),
@@ -263,11 +268,19 @@ def test_bpe_pattern_passthrough_train_apply_parity(spark, tmp_path):
         (3, "Punctuation-heavy: (hello); [world] {the} end."),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    merges_df, vocab = bpe_merges_distributed(
-        df, "text", n_merges=10, return_vocab=True, pattern=BPE_PATTERN
-    )
-    merges = [(r["left"], r["right"]) for r in merges_df.orderBy("rank").collect()]
-    assert merges == learn_bpe_merges(df, "text", n_merges=10, pattern=BPE_PATTERN)
+    wf: dict = {}
+    for _, t in rows:
+        for w in re.findall(BPE_PATTERN, t):
+            wf[w] = wf.get(w, 0) + 1
+    want = [(a, b) for a, b, _ in _ref_bpe(wf, 10)]
+    for thr in (tk.SMALL_VOCAB_THRESHOLD, -1):
+        monkeypatch.setattr(tk, "SMALL_VOCAB_THRESHOLD", thr)
+        merges_df, vocab = bpe_merges_distributed(
+            df, "text", n_merges=10, return_vocab=True, pattern=BPE_PATTERN
+        )
+        merges = [(r["left"], r["right"]) for r in merges_df.orderBy("rank").collect()]
+        assert merges == want, thr
+    assert learn_bpe_merges(df, "text", n_merges=10, pattern=BPE_PATTERN) == want
 
     path = str(tmp_path / "merges.txt")
     save_merges(merges, path)
@@ -312,46 +325,65 @@ def test_bpe_merged_string_uniqueness_holds(spark):
 
 def _wp_python_reference(rows, n_merges, min_pair_count=1):
     """Pure-python WordPiece loop over the whitespace/lowercase word
-    table — the same quantized rule as the trainer.  Returns one tuple
-    per merge: (left, right, pair_count, left_count, right_count,
+    table, written apart from the trainer: each round counts unigrams and
+    adjacent pairs, scores a pair (c * 10**18) // (u_left * u_right),
+    takes the max score, then the max count, then the smallest (left,
+    right), and rewrites every word greedily left to right.  Returns one
+    tuple per merge: (left, right, pair_count, left_count, right_count,
     score_q)."""
-    from era_parser_spark.operators.tokenizer import _merge_word, _wp_best_pair
-
-    vocab: dict[tuple[str, ...], int] = {}
+    freq: dict[str, int] = {}
     for _, t in rows:
-        if not t or not t.strip():
-            continue
-        for w in t.strip().lower().split():
-            syms = tuple(w)
-            vocab[syms] = vocab.get(syms, 0) + 1
+        for w in (t or "").lower().split():
+            freq[w] = freq.get(w, 0) + 1
+    segs = {w: list(w) for w in freq}
     out = []
     for _ in range(n_merges):
-        info = _wp_best_pair(vocab, min_pair_count)
-        if info is None:
+        uni: dict[str, int] = {}
+        pairs: dict[tuple[str, str], int] = {}
+        for w, s in segs.items():
+            for x in s:
+                uni[x] = uni.get(x, 0) + freq[w]
+            for p in zip(s, s[1:]):
+                pairs[p] = pairs.get(p, 0) + freq[w]
+        scored = sorted(
+            (-(c * 10**18 // (uni[a] * uni[b])), -c, a, b)
+            for (a, b), c in pairs.items()
+            if c >= min_pair_count
+        )
+        if not scored:
             break
-        a, b = info[0], info[1]
-        out.append(info)
-        rebuilt: dict[tuple[str, ...], int] = {}
-        for syms, fq in vocab.items():
-            m = _merge_word(syms, (a, b))
-            rebuilt[m] = rebuilt.get(m, 0) + fq
-        vocab = rebuilt
+        neg_q, neg_c, a, b = scored[0]
+        out.append((a, b, -neg_c, uni[a], uni[b], -neg_q))
+        for w, s in segs.items():
+            merged, i = [], 0
+            while i < len(s):
+                if s[i : i + 2] == [a, b]:
+                    merged.append(a + b)
+                    i += 2
+                else:
+                    merged.append(s[i])
+                    i += 1
+            segs[w] = merged
     return out
 
 
 @pytest.mark.parametrize("seed", [11, 12])
-def test_wordpiece_distributed_matches_python(spark, seed):
-    from era_parser_spark.operators.tokenizer import wordpiece_merges_distributed
+def test_wordpiece_distributed_matches_python(spark, monkeypatch, seed):
+    import era_parser_spark.operators.tokenizer as tk
 
     rows = _rand_corpus(seed, n_docs=30, vocab=40, max_len=12)
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = [
-        (r["left"], r["right"], r["pair_count"], r["left_count"],
-         r["right_count"], r["score_q"])
-        for r in wordpiece_merges_distributed(df, "text", n_merges=6)
-        .orderBy("rank").collect()
-    ]
-    assert got == _wp_python_reference(rows, 6)
+    want = _wp_python_reference(rows, 6)
+    # the driver merge loop, then the Spark rounds
+    for thr in (tk.SMALL_VOCAB_THRESHOLD, -1):
+        monkeypatch.setattr(tk, "SMALL_VOCAB_THRESHOLD", thr)
+        got = [
+            (r["left"], r["right"], r["pair_count"], r["left_count"],
+             r["right_count"], r["score_q"])
+            for r in tk.wordpiece_merges_distributed(df, "text", n_merges=6)
+            .orderBy("rank").collect()
+        ]
+        assert got == want, thr
 
 
 def test_wordpiece_prefers_cohesive_over_frequent(spark):

@@ -231,6 +231,67 @@ def test_clean_failed_cli_and_compact(spark, era_dir, tmp_path_factory):
     assert files_after == 1
 
 
+class _CrashingFs:
+    """A Hadoop FileSystem handle whose `method` raises: a driver that
+    dies at that call."""
+
+    def __init__(self, fs, method):
+        self._fs, self._method = fs, method
+
+    def __getattr__(self, name):
+        if name == self._method:
+            def crash(*args):
+                raise RuntimeError(f"injected crash in {name}")
+
+            return crash
+        return getattr(self._fs, name)
+
+
+@pytest.mark.parametrize("crash_in", ["rename", "delete"])
+def test_compact_log_survives_crash(spark, tmp_path, monkeypatch, crash_in):
+    """A crash before the compacted files land ("rename") or after they
+    land but before the old files go ("delete") leaves latest_state and
+    plan_pending unchanged, and the next compaction returns the original
+    row count."""
+    from era_parser_spark.state.era_state import EraStateStore
+
+    store = EraStateStore(spark, str(tmp_path / "state"))
+    store.record_many([{"network": "gnosis", "era_number": e, "status": "processing"}
+                       for e in (1, 2, 3)])
+    store.record_many([{"network": "gnosis", "era_number": e, "status": "completed",
+                        "total_records": 5} for e in (1, 2)])
+    store.record_many([{"network": "gnosis", "era_number": 3, "status": "failed",
+                        "error_message": "boom", "retry_count": 1}])
+    found = [(e, f"/eras/gnosis-{e:05d}-00000000.era") for e in (1, 2, 3, 4)]
+
+    def snapshot():
+        latest = sorted(
+            (r.era_number, r.status, r.retry_count, r.insert_version)
+            for r in store.latest_state().collect()
+        )
+        return latest, store.plan_pending(found, "gnosis")
+
+    before = snapshot()
+    assert before[1] == [(3, found[2][1], 1), (4, found[3][1], 0)]
+    n = store.log().count()
+    real = store._fs_and_path
+
+    def crashing(p):
+        fs, hp, jvm = real(p)
+        return _CrashingFs(fs, crash_in), hp, jvm
+
+    with monkeypatch.context() as m:
+        m.setattr(store, "_fs_and_path", crashing)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            store.compact_log()
+    assert snapshot() == before
+    # old and compacted files side by side, or the old files alone
+    assert store.log().count() == (2 * n if crash_in == "delete" else n)
+    assert store.compact_log() == n
+    assert snapshot() == before
+    assert store.log().count() == n
+
+
 def test_record_many_batches_one_file(spark, tmp_path_factory):
     from era_parser_spark.state.era_state import EraStateStore
 
