@@ -786,7 +786,6 @@ def fuzzy_dedup(
     bands: int = 8,
     shingle_n: int = 3,
     verify: str = "exact",
-    collapse_exact: bool = True,
     keeper: str | tuple = "min_id",
 ) -> DataFrame:
     """End-to-end fuzzy deduplication — the composition a production
@@ -817,8 +816,9 @@ def fuzzy_dedup(
     clone group is provably one near-dup cluster with its min id as
     representative; running LSH/verify on distinct texts only and
     re-attaching clones afterwards yields the identical output frame
-    (pinned by tests/test_round7_ops.py's differential vs
-    ``collapse_exact=False``).  Clones never reach shingling, the
+    (pinned by tests/test_round7_ops.py's differential against the
+    uncollapsed composition `minhash_lsh_dedup_pairs` ->
+    `connected_components` -> `cluster_sizes`).  Clones never reach shingling, the
     signature aggregate, or the pair index, in EITHER verify mode (a
     clone group of size k would otherwise contribute k(k-1)/2 candidate
     pairs even under "estimate").  Cost (round-8 digest-keyed plan): text
@@ -828,8 +828,7 @@ def fuzzy_dedup(
     ids only.  Clones are re-shingled in the scan stage (linear CPU — the
     deliberate trade; round 7's text-collapse variant shuffled one copy
     of every distinct text and measured ~45% over the uncollapsed plan on
-    a clone-FREE corpus).  ``collapse_exact=False`` forces the
-    uncollapsed plan (differential / debug path).
+    a clone-FREE corpus).
 
     Scale shape: every stage is the sub-quadratic path proven by its
     standalone operator — candidates via band equi-join (never all
@@ -841,21 +840,17 @@ def fuzzy_dedup(
     shingle Jaccard via the PAIR-BOUNDED plan (`lsh_exact_pairs_bounded`)
     — shuffle O(candidates x doc size), no sum(df^2) term, so near-dup
     clone structure (8 tail-variant replicas per doc, the rehearsal
-    corpus) cannot blow it up; "exact_index" forces the inverted-index
-    verification (`minhash_lsh_dedup_pairs`, the round-6 plan — ships
-    only SHARED shingles per pair, so it wins when candidates are mostly
-    low-similarity false positives, but pays sum(df^2): 3.9 GB vs the
-    138 MB corpus at 8x cloning, docs/PLANS.md); "estimate" scores by
+    corpus) cannot blow it up (the inverted-index verification of
+    `minhash_lsh_dedup_pairs` pays sum(df^2): 3.9 GB vs the 138 MB
+    corpus at 8x cloning, docs/PLANS.md); "estimate" scores by
     min-hash agreement (`lsh_estimate_pairs`) — O(candidates) shuffle,
     cheapest of all, with estimator noise ~2/sqrt(num_perm) around the
     threshold.
     """
     from era_parser_spark.operators.graph import cluster_sizes, connected_components
 
-    if verify not in ("exact", "exact_index", "estimate"):
-        raise ValueError(
-            f"verify must be 'exact', 'exact_index' or 'estimate', got {verify!r}"
-        )
+    if verify not in ("exact", "estimate"):
+        raise ValueError(f"verify must be 'exact' or 'estimate', got {verify!r}")
     if keeper != "min_id" and not (
         isinstance(keeper, tuple)
         and len(keeper) == 2
@@ -898,32 +893,6 @@ def fuzzy_dedup(
             (rn == 1).alias("kept"),
         )
 
-    def _edges(docs: DataFrame) -> DataFrame:
-        if verify == "exact":
-            # pair-bounded exact verification: same jaccard values as the
-            # index plan, shuffle O(candidate pairs x doc size) instead of
-            # sum(df^2) (see lsh_exact_pairs_bounded)
-            return lsh_exact_pairs_bounded(
-                docs, id_col, text_col, threshold=threshold, num_perm=num_perm,
-                bands=bands, shingle_n=shingle_n,
-            ).select("doc_a", "doc_b")
-        if verify == "exact_index":
-            return minhash_lsh_dedup_pairs(
-                docs, id_col, text_col, num_perm=num_perm, bands=bands,
-                threshold=threshold, shingle_n=shingle_n,
-            ).select("doc_a", "doc_b")
-        return lsh_estimate_pairs(
-            docs, id_col, text_col, threshold=threshold, num_perm=num_perm,
-            bands=bands, shingle_n=shingle_n,
-        ).select("doc_a", "doc_b")
-
-    if not collapse_exact:
-        comps = connected_components(
-            df.select(id_col), _edges(df), id_col=id_col,
-            src_col="doc_a", dst_col="doc_b",
-        )
-        return _finish(comps)
-
     # -- collapse bit-identical texts to their min id (exact: J(t,t)=1) --
     # Only texts that produce >= 1 shingle collapse; shorter texts have no
     # signature either way and must stay singletons exactly like the
@@ -942,7 +911,7 @@ def fuzzy_dedup(
         F.when(shingleable, F.md5(F.col(text_col))).alias("__dig"),
     )
     collapsible = keyed.filter(F.col("__dig").isNotNull())
-    passthrough = keyed.filter(F.col("__dig").isNull()).select(id_col, text_col)
+    passthrough = keyed.filter(F.col("__dig").isNull()).select(id_col)
     # digest -> representative id; ids + digests only (text never rides it).
     # Cached: it feeds FOUR plan branches (mapping, nodes, and the two
     # pair-rekeying joins) and each uncached branch re-runs the corpus
@@ -960,64 +929,51 @@ def fuzzy_dedup(
     nodes = reps.select(F.col("__rep").alias(id_col)).unionByName(
         passthrough.select(id_col)
     )
-    if verify == "exact_index":
-        # the index verifier needs a per-doc (id, text) frame; collapse
-        # texts the round-7 way — one copy of each distinct text per input
-        # partition through the aggregate's map-side combine.  Differential
-        # / debug path only; the default paths below never shuffle text.
-        rep_docs = (
-            collapsible.groupBy("__dig")
-            .agg(F.min(id_col).alias(id_col), F.first(text_col).alias(text_col))
-            .select(id_col, text_col)
-            .unionByName(passthrough)
-        )
-        dedges = _edges(rep_docs)
+    # digest-keyed LSH (round-8): shingles are keyed by the md5 digest
+    # — computable narrowly per row — so clone copies collapse in the
+    # map-side combine of the signature aggregate and raw text NEVER
+    # rides a shuffle (the round-7 text collapse cost ~45% extra on a
+    # clone-FREE corpus because every distinct text shuffled once for
+    # nothing; verdict r7).  Clones are re-shingled (linear CPU, the
+    # scan stage) — the deliberate trade: shuffle is the scarce
+    # resource at scale, not per-row hashing.  Signatures / candidate
+    # pairs / verification are digest-keyed and identical in value to
+    # the doc-keyed ones (xxhash64 permutations depend only on the
+    # shingle hash); the verified pairs — pairs only, never corpus —
+    # map back to representative ids at the end.
+    hashed_d = doc_shingles(
+        collapsible, "__dig", text_col, shingle_n, id_type="string"
+    ).select(F.col("__dig"), F.xxhash64("shingle").alias("__sh"))
+    if verify == "exact":
+        hashed_d = hashed_d.cache()
+    aggs = [
+        F.min(F.xxhash64(F.lit(i), F.col("__sh"))).alias(f"h{i}")
+        for i in range(num_perm)
+    ]
+    # cached in BOTH verify modes (round 12): the banding self-join
+    # reads the signature frame on both sides, so uncached the
+    # 32-perm aggregate over the shingle frame ran twice.  One row
+    # per distinct digest, 32 longs — bounded like the estimate
+    # path's existing cache.
+    sigs_d = hashed_d.groupBy("__dig").agg(*aggs).cache()
+    cands_d = lsh_candidate_pairs(sigs_d, "__dig", bands, num_perm // bands)
+    if verify == "exact":
+        pairs_d = verify_candidate_pairs(hashed_d, cands_d, "__dig", threshold)
     else:
-        # digest-keyed LSH (round-8): shingles are keyed by the md5 digest
-        # — computable narrowly per row — so clone copies collapse in the
-        # map-side combine of the signature aggregate and raw text NEVER
-        # rides a shuffle (the round-7 text collapse cost ~45% extra on a
-        # clone-FREE corpus because every distinct text shuffled once for
-        # nothing; verdict r7).  Clones are re-shingled (linear CPU, the
-        # scan stage) — the deliberate trade: shuffle is the scarce
-        # resource at scale, not per-row hashing.  Signatures / candidate
-        # pairs / verification are digest-keyed and identical in value to
-        # the doc-keyed ones (xxhash64 permutations depend only on the
-        # shingle hash); the verified pairs — pairs only, never corpus —
-        # map back to representative ids at the end.
-        hashed_d = doc_shingles(
-            collapsible, "__dig", text_col, shingle_n, id_type="string"
-        ).select(F.col("__dig"), F.xxhash64("shingle").alias("__sh"))
-        if verify == "exact":
-            hashed_d = hashed_d.cache()
-        aggs = [
-            F.min(F.xxhash64(F.lit(i), F.col("__sh"))).alias(f"h{i}")
-            for i in range(num_perm)
-        ]
-        # cached in BOTH verify modes (round 12): the banding self-join
-        # reads the signature frame on both sides, so uncached the
-        # 32-perm aggregate over the shingle frame ran twice.  One row
-        # per distinct digest, 32 longs — bounded like the estimate
-        # path's existing cache.
-        sigs_d = hashed_d.groupBy("__dig").agg(*aggs).cache()
-        cands_d = lsh_candidate_pairs(sigs_d, "__dig", bands, num_perm // bands)
-        if verify == "exact":
-            pairs_d = verify_candidate_pairs(hashed_d, cands_d, "__dig", threshold)
-        else:
-            pairs_d = estimate_pairs_from_sigs(
-                sigs_d, cands_d, "__dig", num_perm, threshold
-            )
-        ra = reps.select(F.col("__dig").alias("doc_a"), F.col("__rep").alias("__ra"))
-        rb = reps.select(F.col("__dig").alias("doc_b"), F.col("__rep").alias("__rb"))
-        dedges = (
-            pairs_d.select("doc_a", "doc_b")
-            .join(ra, "doc_a")
-            .join(rb, "doc_b")
-            .select(
-                F.least("__ra", "__rb").alias("doc_a"),
-                F.greatest("__ra", "__rb").alias("doc_b"),
-            )
+        pairs_d = estimate_pairs_from_sigs(
+            sigs_d, cands_d, "__dig", num_perm, threshold
         )
+    ra = reps.select(F.col("__dig").alias("doc_a"), F.col("__rep").alias("__ra"))
+    rb = reps.select(F.col("__dig").alias("doc_b"), F.col("__rep").alias("__rb"))
+    dedges = (
+        pairs_d.select("doc_a", "doc_b")
+        .join(ra, "doc_a")
+        .join(rb, "doc_b")
+        .select(
+            F.least("__ra", "__rb").alias("doc_a"),
+            F.greatest("__ra", "__rb").alias("doc_b"),
+        )
+    )
     comps = connected_components(
         nodes, dedges, id_col=id_col, src_col="doc_a", dst_col="doc_b",
     )

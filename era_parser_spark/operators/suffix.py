@@ -6,24 +6,27 @@ Why it exists: dd10/dd16 approximate substring dedup with fixed-l grams;
 a suffix array is the EXACT substring index those methods approximate
 (Lee et al.'s deduplication pipeline builds one).  Prefix doubling is
 the construction that survives distribution: every round is one
-position-arithmetic EQUI-join plus one per-document window rank — no
-suffix strings are ever materialized or compared, only integer rank
-pairs, so a round's shuffle carries (doc, pos, rank) longs regardless of
-token sizes.
+position-arithmetic lead window plus one rank — no suffix strings are
+ever materialized or compared, only integer rank tuples, so a round's
+shuffle carries (doc, pos, rank) longs regardless of token sizes.
 
-Round k upgrades ranks from 2^k-token prefixes to 2^(k+1): each
-position pairs its rank with the rank 2^k ahead — `lead(r, 2^k)` over
-the document's position order, NOT a self-join: the lead shares the
-dense_rank window's partitioning, so a round is two in-partition sorts
-and zero extra exchanges (the join formulation re-shuffled on (doc,
-pos) every round).  A missing lead (suffix end) becomes -1, which
-orders a shorter suffix before any extension — exactly lexicographic
-suffix order.  ceil(log2(max doc tokens)) rounds make every rank
-distinct; the result is the suffix array as (doc, pos, suffix_rank)
-with suffix_rank = 1..n_tokens per doc.
+A round upgrades ranks from off-token prefixes to 2^f * off: each
+position pairs its rank with the ranks off, 2*off, ... ahead — `lead(r,
+k*off)` over the document's position order, NOT a self-join: the lead
+shares the document window's partitioning, so it costs one in-partition
+sort and zero extra exchanges.  A missing lead (suffix end) becomes -1,
+which orders a shorter suffix before any extension — exactly
+lexicographic suffix order.  After ceil(log2(max doc tokens)) levels
+every rank is distinct; the result is the suffix array as (doc, pos,
+suffix_rank) with suffix_rank = 1..n_tokens per doc.
 
-The per-round frame is localCheckpoint'ed (the CC-edges precedent) so
-round k+1 does not recompute rounds 1..k.
+Both loops — `suffix_ranks` (ranks per document) and
+`global_suffix_ranks` (ranks over the corpus) — run ONE round body,
+`_doubling_round`: f = min(3, doublings still needed) levels off one lead
+window pass, the intermediate levels as lazy int64 composites, the last
+one ranked once.  The rank frame of every round is localCheckpoint'ed, or
+projects a checkpointed lead frame (the CC-edges precedent), so round k+1
+does not recompute rounds 1..k.
 """
 
 from __future__ import annotations
@@ -37,10 +40,132 @@ from era_parser_spark.session import rows_frame
 
 # Pair count above which the LCP walks switch from the lazy single-job
 # chain to the level-skip + per-level-checkpoint strategy (see
-# `longest_cross_doc_span`'s walk note).  Module-level so tests can
-# force the big walk on a small fixture and pin strategy equivalence
-# (tests/test_round11_ops.py monkeypatches it to 0).
+# `_lcp_walk`).  Module-level so tests can force the big walk on a small
+# fixture and pin strategy equivalence (tests/test_round11_ops.py
+# monkeypatches it to 0).
 BIG_WALK_PAIR_THRESHOLD = 1_000_000
+
+# Exclusive upper bound on the int64 composite rank r*K + (r2+1), K = max
+# dense rank + 2: composite levels and the terminal composite are taken
+# only while K*K is below it (per-doc K is the longest document; global K
+# is the corpus position count, so the bound binds past ~3e9 positions).
+# Past it every round is a one-level round.  Module-level so tests can
+# force that path on a small fixture (tests/test_suffix.py sets it to 0).
+COMPOSITE_BOUND = (1 << 63) - 1
+
+
+def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, __t) for every document with at least one token — the suffix
+    tier's one document filter (`tokens_col` tokenization)."""
+    return (
+        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
+        .select(F.col(id_col), tokens_col(F.col(text_col)).alias("__t"))
+        .filter(F.size("__t") >= 1)
+    )
+
+
+def _with_docs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    per_doc: DataFrame,
+    col: str,
+    max_doc_tokens: int | None,
+    routed: bool = False,
+) -> DataFrame:
+    """Every tokenizable document of df with its ``col`` value from
+    per_doc, 0 where per_doc has none.  Documents over ``max_doc_tokens``
+    report NULL (skipped — never a silently-wrong 0), or, with
+    ``routed=True``, keep their value and gain a ``routed`` flag (they
+    went through chunking)."""
+    sizes = _tokenized(df, id_col, text_col).select(
+        id_col, F.size("__t").alias("__sz")
+    )
+    over = (
+        F.col("__sz") > max_doc_tokens if max_doc_tokens is not None else F.lit(False)
+    )
+    value = F.coalesce(col, F.lit(0))
+    if not routed:
+        value = F.when(over, F.lit(None)).otherwise(value)
+    cols = [value.cast("long").alias(col)] + ([over.alias("routed")] if routed else [])
+    return sizes.join(per_doc, id_col, "left").select(F.col(id_col), *cols)
+
+
+def _composite(keys: list[str], comp_k: int):
+    """Order-preserving int64 rank of the tuple ``keys`` (dense ranks
+    < comp_k - 1, or the -1 sentinel): a pair is r*K + (r2+1), so
+    composite equality <=> tuple equality.  A 4-tuple is a STRUCT of two
+    pair composites (K^4 overflows one int64; the LCP walk tests
+    equality only, and struct equality <=> 4-tuple equality)."""
+    pairs = [
+        F.col(a) * F.lit(comp_k) + F.col(b) + F.lit(1)
+        for a, b in zip(keys[::2], keys[1::2])
+    ]
+    if len(pairs) == 1:
+        return pairs[0]
+    return F.struct(*[p.alias(f"c{i}") for i, p in enumerate(pairs)])
+
+
+def _doubling_round(cur, id_col, off, max_len, comp_k, composite_final, rank):
+    """One prefix-doubling round over ``cur`` = (id, pos, r), ranks of
+    off-token prefixes — the one round body of both loops.
+
+    f = min(3, doublings still needed to reach max_len) levels run off
+    ONE lead window pass: leads at off .. (2^f - 1)*off give the rank of
+    the 2^j*off-token prefix as the 2^j-tuple (r, r2, ...) (nested
+    pairing identities; -1 sentinels compose, a shorter suffix's (-1, ..)
+    tail orders before any continuation).  The intermediate levels j < f
+    enter the history as lazy `_composite` projections of the lead frame
+    (the walks need equality only); the 2^f-tuple is ranked once by
+    ``rank(paired, keys, materialized) -> (frame, n_classes)``.  Per
+    three levels that is one window sort, one rank and one early-stop
+    check instead of three — fused rounds cut t35's construction shuffle
+    at 8x from 457 to 313 MB (docs/PLANS.md round 10).  f = 2 only
+    replaces a 3-level round that would overshoot max_len, so the round
+    count is that of the 3-level loop.
+
+    Terminal composite (``composite_final``, for history-mode callers):
+    when one level is left, the composite r*K + (r2+1) is not only
+    equality-exact but ORDER-preserving, so it IS the final rank table —
+    the last rank (window sort or range shuffle + offsets collect) is
+    skipped.  Callers that need dense 1..n ranks (t33's contract) leave
+    it off.
+
+    Where K^2 reaches COMPOSITE_BOUND, f is 1 and the terminal composite
+    is off.  The lead frame is checkpointed exactly when a lazy projection
+    of it enters the history.  Returns (levels, n_classes): the history
+    entries [(L, (id, pos, r))] this round adds, the last one the new
+    rank frame, and rank's class count (None for a terminal composite)."""
+    fits = comp_k * comp_k < COMPOSITE_BOUND
+    f = 1
+    while fits and f < 3 and off << f < max_len:
+        f += 1
+    terminal = composite_final and fits and f == 1
+    w = Window.partitionBy(id_col).orderBy("pos")
+    keys = ["r"] + [f"r{k + 1}" for k in range(1, 1 << f)]
+    paired = cur.select(
+        id_col,
+        "pos",
+        "r",
+        *[
+            F.coalesce(F.lead("r", k * off).over(w), F.lit(-1)).alias(f"r{k + 1}")
+            for k in range(1, 1 << f)
+        ],
+    )
+    materialized = f > 1 or terminal
+    if materialized:
+        paired = paired.localCheckpoint(eager=True)
+    levels = [
+        (
+            off << j,
+            paired.select(id_col, "pos", _composite(keys[: 1 << j], comp_k).alias("r")),
+        )
+        for j in range(1, f + terminal)
+    ]
+    if terminal:
+        return levels, None
+    ranked, n_classes = rank(paired, keys, materialized)
+    return levels + [(off << f, ranked)], n_classes
 
 
 def suffix_ranks(
@@ -49,8 +174,6 @@ def suffix_ranks(
     text_col: str,
     return_history: bool = False,
     max_doc_tokens: int | None = None,
-    fuse: bool = True,
-    final_dense: bool = True,
 ):
     """(id, pos, suffix_rank): rank of the token-level suffix starting at
     1-based position pos within its document, 1 = lexicographically
@@ -58,6 +181,13 @@ def suffix_ranks(
     order compares TOKEN SEQUENCES element-wise (shorter prefix first) —
     the DuckDB oracle's list-slice ordering, ties impossible (suffixes
     of one document have distinct lengths).
+
+    ``return_history=True`` returns (out, history, n_rows): history is
+    [(L, (id, pos, r))], ranks of exactly L-token prefixes for L = 1, 2,
+    4, ... — the binary-decomposition tables the LCP walk consumes — and
+    n_rows the position count.  A last round with one level left is then
+    a terminal composite (see `_doubling_round`), so suffix_rank orders
+    suffixes but need not be dense.
 
     Scale guard: `Window.partitionBy(id_col)` serializes each document
     into ONE task — a pathological 10M-token document stalls the stage
@@ -68,11 +198,7 @@ def suffix_ranks(
     chunked / l-gram fallback (dd10, t29) instead.  Web-scale corpora
     should set this (e.g. 1_000_000); the registry entries leave it off
     because the testdata is bounded."""
-    toks = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(F.col(id_col), tokens_col(F.col(text_col)).alias("__t"))
-        .filter(F.size("__t") >= 1)
-    )
+    toks = _tokenized(df, id_col, text_col)
     if max_doc_tokens is not None:
         toks = toks.filter(F.size("__t") <= max_doc_tokens)
     pos = toks.select(
@@ -80,22 +206,27 @@ def suffix_ranks(
         F.posexplode("__t").alias("__i0", "__tok"),
     ).select(id_col, (F.col("__i0") + 1).alias("pos"), "__tok")
     w = Window.partitionBy(id_col)
-    # __n rides NO loop frame (round 10): it was pure dead weight in every
-    # per-round shuffle — max_len comes from a tiny doc-length aggregate
-    # instead, and the early stop compares max(r) to max(pos) directly.
+    # no doc length rides a loop frame: both loop bounds come from one
+    # tiny aggregate, and the early stop compares max(r) to max(pos)
     cur = pos.select(
         id_col,
         "pos",
         F.dense_rank().over(w.orderBy("__tok")).alias("r"),
     ).localCheckpoint(eager=True)
-    max_len = int(
-        toks.agg(F.max(F.size("__t"))).first()[0] or 1
-    )
+    agg = toks.agg(
+        F.sum(F.size("__t")).alias("__s"), F.max(F.size("__t")).alias("__m")
+    ).first()
+    n_rows = int(agg["__s"] or 0)
+    max_len = int(agg["__m"] or 1)
+
+    def rank(paired, keys, _materialized):
+        ranked = paired.select(
+            id_col, "pos", F.dense_rank().over(w.orderBy(*keys)).alias("r")
+        ).localCheckpoint(eager=True)
+        return ranked, None
+
     history = [(1, cur)]
     off = 1
-    comp_k = max_len + 2  # composite base: per-doc dense ranks <= doc length
-    # fuse=False forces the round-9 one-level loop (differential/debug)
-    fuse_ok = fuse and comp_k * comp_k < (1 << 63) - 1
     while off < max_len:
         # early stop: when every document's ranks are already distinct
         # (dense-rank max == n), the suffix order is fully determined and
@@ -112,101 +243,18 @@ def suffix_ranks(
         )
         if all_distinct == 1:
             break
-        if fuse_ok and not final_dense and 2 * off >= max_len:
-            # terminal composite round — the global_suffix_ranks round-12
-            # optimization in per-doc form: r*K + (r2+1) is order-
-            # preserving (K = max_len + 2 bounds per-doc dense ranks), so
-            # when the caller needs order + equality only (the LCP walk,
-            # final_dense=False) the last dense_rank window sort is
-            # replaced by a lazy projection over the checkpointed lead
-            # frame.  The default keeps the 1..n dense suffix_rank
-            # contract (t33's oracle pins it).
-            paired = cur.select(
-                id_col,
-                "pos",
-                "r",
-                F.coalesce(
-                    F.lead("r", off).over(w.orderBy("pos")), F.lit(-1)
-                ).alias("r2"),
-            ).localCheckpoint(eager=True)
-            cur = paired.select(
-                id_col,
-                "pos",
-                (F.col("r") * F.lit(comp_k) + F.col("r2") + F.lit(1)).alias("r"),
-            )
-            history.append((off * 2, cur))
-            off *= 2
-            break
-        if not fuse_ok or 2 * off >= max_len:
-            # classic one-level round (the final level, and the absurd
-            # >3e9-token-document overflow fallback)
-            paired = cur.select(
-                id_col,
-                "pos",
-                "r",
-                F.coalesce(
-                    F.lead("r", off).over(w.orderBy("pos")), F.lit(-1)
-                ).alias("r2"),
-            )
-            cur = paired.select(
-                id_col,
-                "pos",
-                F.dense_rank().over(w.orderBy("r", "r2")).alias("r"),
-            ).localCheckpoint(eager=True)
-            history.append((off * 2, cur))
-            off *= 2
-            continue
-        # WIDE fused super-round — three levels off ONE lead window pass
-        # (the global_suffix_ranks round-12 fusion, per-doc flavor):
-        # ranks need order/equality only, so the 2*off level is the
-        # COMPOSITE int64 r*K + (r2+1), the 4*off level a STRUCT of two
-        # composites (the LCP walk tests equality only; K^4 overflows a
-        # single int64), and the 8*off level one dense_rank over the
-        # 8-tuple — a third of the per-level window sorts and
-        # all_distinct actions.
-        paired = cur.select(
-            id_col,
-            "pos",
-            "r",
-            *[
-                F.coalesce(
-                    F.lead("r", k * off).over(w.orderBy("pos")), F.lit(-1)
-                ).alias(f"r{k + 1}")
-                for k in range(1, 8)
-            ],
-        ).localCheckpoint(eager=True)
-        c12 = F.col("r") * F.lit(comp_k) + F.col("r2") + F.lit(1)
-        c34 = F.col("r3") * F.lit(comp_k) + F.col("r4") + F.lit(1)
-        history.append((2 * off, paired.select(id_col, "pos", c12.alias("r"))))
-        history.append(
-            (
-                4 * off,
-                paired.select(
-                    id_col,
-                    "pos",
-                    F.struct(c12.alias("a"), c34.alias("b")).alias("r"),
-                ),
-            )
+        levels, _ = _doubling_round(
+            cur, id_col, off, max_len, max_len + 2, return_history, rank
         )
-        cur = paired.select(
-            id_col,
-            "pos",
-            F.dense_rank()
-            .over(w.orderBy("r", "r2", "r3", "r4", "r5", "r6", "r7", "r8"))
-            .alias("r"),
-        ).localCheckpoint(eager=True)
-        history.append((8 * off, cur))
-        off *= 8
+        history += levels
+        off, cur = levels[-1]
     out = cur.select(
         F.col(id_col),
         F.col("pos").cast("long").alias("pos"),
         F.col("r").cast("long").alias("suffix_rank"),
     )
     if return_history:
-        # [(L, (id, pos, r))]: ranks reflecting exactly L-token prefixes,
-        # L = 1, 2, 4, ... >= max_len — the binary-decomposition tables
-        # the LCP walk consumes.
-        return out, history
+        return out, history, n_rows
     return out
 
 
@@ -222,43 +270,29 @@ def longest_repeated_span(
     Suffix-array theory: the longest repeated substring is the maximum
     LCP over RANK-ADJACENT suffix pairs (any repeated span is a common
     prefix of two suffixes, and the closest pair in suffix order
-    maximizes it).  The LCP of each adjacent pair is computed by the
-    classic binary decomposition over the prefix-doubling rank tables:
-    for L = 2^k descending, if the L-prefix ranks at the pair's current
-    offsets are equal, add L and advance both offsets — O(log n) rounds,
-    each ONE equi-join per side against the L-rank table on (doc,
-    pos = start + lcp), shuffling (doc, pos, rank) longs only.  Token
-    text never rides any shuffle, same as the construction.
+    maximizes it).  The LCP of each adjacent pair comes from `_lcp_walk`
+    over the prefix-doubling rank tables, with the document id as both
+    sides' rank-table key.  Token text never rides any shuffle, same as
+    the construction.  Same-doc suffixes have distinct lengths and
+    distinct final ranks, so every pair is one the walk handles exactly.
 
     Output: (id, longest_repeat) for every tokenizable document, 0 when
     nothing repeats (incl. single-token docs); NULL for documents skipped
     by ``max_doc_tokens`` (see `suffix_ranks` — route those to dd10/t29's
     l-gram approximations instead).
     """
-    ranks, history = suffix_ranks(
-        df,
-        id_col,
-        text_col,
-        return_history=True,
-        max_doc_tokens=max_doc_tokens,
-        # order + equality suffice for the pair window and the walk —
-        # take the terminal-composite construction (one window sort and
-        # one materialization fewer; see suffix_ranks)
-        final_dense=False,
+    ranks, history, n_rows = suffix_ranks(
+        df, id_col, text_col, return_history=True, max_doc_tokens=max_doc_tokens
     )
     w = Window.partitionBy(id_col)
-    # rank-adjacent pairs: (start_i, start_j) of consecutive suffixes;
-    # per-pair remaining lengths ride along (max pos over the same
-    # partition shares the lead's exchange) so each walk level can skip
-    # pairs that provably can't match it — see the cross-doc walk's
-    # level-skip note (same-doc suffixes have distinct lengths, so the
-    # both-short equality case is impossible outright)
+    # rank-adjacent pairs (i, j) of consecutive suffixes; remaining
+    # lengths ride along for the big walk's level skip (max pos over the
+    # same partition shares the lead's exchange)
     pairs = ranks.select(
         id_col,
         F.col("pos").alias("i"),
         F.lead("pos").over(w.orderBy("suffix_rank")).alias("j"),
         F.max("pos").over(w).alias("__n"),
-        F.lit(0).cast("long").alias("lcp"),
     ).filter(F.col("j").isNotNull())
     pairs = pairs.select(
         id_col,
@@ -266,106 +300,13 @@ def longest_repeated_span(
         "j",
         (F.col("__n") - F.col("i") + 1).alias("rem_a"),
         (F.col("__n") - F.col("j") + 1).alias("rem_b"),
-        "lcp",
+        F.lit(0).cast("long").alias("lcp"),
     )
-    pair_cols = [id_col, "i", "j", "rem_a", "rem_b", "lcp"]
-    # same walk-strategy split as longest_cross_doc_span (pair count ~
-    # position count; ranks projects a checkpointed frame, the count is
-    # one cheap job): lazy single-job chain small, level-skip +
-    # per-level checkpoint large
-    big_walk = ranks.count() > BIG_WALK_PAIR_THRESHOLD
-    # Top-level skip (round 12), the _lcp_walk argument in per-doc form:
-    # the top history table is the exit-round `cur` whose per-doc ranks
-    # are the FINAL suffix ranks; rank-adjacent pairs have distinct
-    # final ranks (per-doc ranks are a permutation), so the first
-    # (highest) level's probe at lcp == 0 compares those very ranks and
-    # never updates — two joins saved, identical results.
-    for L, rk in sorted(history, key=lambda t: -t[0])[1:]:
-        if big_walk:
-            can = F.col("lcp") + F.lit(L) <= F.least(
-                F.col("rem_a"), F.col("rem_b")
-            )
-            probe = pairs.filter(can)
-            rest = pairs.filter(~can).select(*pair_cols)
-        else:
-            probe = pairs
-            rest = None
-        ra = rk.select(
-            F.col(id_col).alias("__ida"),
-            F.col("pos").alias("__pa"),
-            F.col("r").alias("__ra"),
-        )
-        rb = rk.select(
-            F.col(id_col).alias("__idb"),
-            F.col("pos").alias("__pb"),
-            F.col("r").alias("__rb"),
-        )
-        if not big_walk:
-            # same small-walk broadcast as _lcp_walk — and here the gate
-            # (ranks.count(), i.e. total positions) IS the rank-table row
-            # count, so small walk directly implies broadcast-safe tables
-            ra, rb = F.broadcast(ra), F.broadcast(rb)
-        probed = (
-            probe.join(
-                ra,
-                (F.col(id_col) == F.col("__ida"))
-                & (F.col("__pa") == F.col("i") + F.col("lcp")),
-                "left",
-            )
-            .join(
-                rb,
-                (F.col(id_col) == F.col("__idb"))
-                & (F.col("__pb") == F.col("j") + F.col("lcp")),
-                "left",
-            )
-            .select(
-                id_col,
-                "i",
-                "j",
-                "rem_a",
-                "rem_b",
-                F.when(
-                    F.col("__ra").isNotNull() & (F.col("__ra") == F.col("__rb")),
-                    F.col("lcp") + L,
-                )
-                .otherwise(F.col("lcp"))
-                .alias("lcp"),
-            )
-            # NO per-level checkpoint: every rk in the history is already
-            # materialized and the pair chain has a single consumer, so
-            # the whole walk compiles into ONE job (2 joins per level)
-            # instead of one job per level — the per-level eager
-            # checkpoints were pure fixed overhead (t34 at sf0.1:
-            # 5.55 -> 4.29 s; t35, whose walk runs all ~14 levels with
-            # no early stop: 49.6 -> 31.2 s — same host window,
-            # identical results)
-        )
-        # big walk: checkpoint the re-united frame (the probe/rest split
-        # references `pairs` twice — without materialization the lazy
-        # plan tree doubles per level, the multi-branch trap)
-        if big_walk:
-            pairs = probed.unionByName(rest).localCheckpoint(eager=True)
-        else:
-            pairs = probed
+    cols = [id_col, "i", "j", "rem_a", "rem_b", "lcp"]
+    pairs = _lcp_walk(pairs, cols, history, id_col, id_col, id_col, n_rows)
     per_doc = pairs.groupBy(id_col).agg(F.max("lcp").alias("longest_repeat"))
-    # single-token docs have no adjacent pair; they still report 0.
-    # Docs skipped by the max_doc_tokens guard aren't in `ranks` at all —
-    # they report NULL (skip + flag, never a silently-wrong 0).
-    all_docs = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(id_col, F.size(tokens_col(F.col(text_col))).alias("__sz"))
-        .filter(F.col("__sz") >= 1)
-    )
-    skipped = (
-        F.col("__sz") > max_doc_tokens if max_doc_tokens is not None else F.lit(False)
-    )
-    return all_docs.join(per_doc, id_col, "left").select(
-        F.col(id_col),
-        F.when(skipped, F.lit(None))
-        .otherwise(F.coalesce("longest_repeat", F.lit(0)))
-        .cast("long")
-        .alias("longest_repeat"),
-    )
+    # single-token docs have no adjacent pair; they still report 0
+    return _with_docs(df, id_col, text_col, per_doc, "longest_repeat", max_doc_tokens)
 
 
 # --- Cross-document (global) suffix machinery --------------------------------
@@ -541,7 +482,6 @@ def global_suffix_ranks(
     n_parts: int | None = None,
     max_doc_tokens: int | None = None,
     return_history: bool = False,
-    fuse: bool | None = None,
 ):
     """(id, pos, r, __n): GLOBAL suffix ranks over the whole corpus — the
     rank compares token suffixes ACROSS documents (each document's suffix
@@ -550,47 +490,40 @@ def global_suffix_ranks(
     `suffix_ranks`, ranks are dense over the corpus and TIE exactly when
     two (necessarily cross-doc, equal-length) suffixes are identical.
 
-    Same prefix doubling as `suffix_ranks`, with the per-doc dense-rank
-    window replaced by `global_dense_rank` — per round: one doc-window
-    lead (shuffle on doc id) + one range shuffle, both carrying (doc,
-    pos, rank) longs only; token text rides exactly one shuffle total
-    (the initial token ranking).  Early stop at the CLASS FIXED POINT
-    (the class count stops growing): per-doc all-distinct never happens
-    when identical cross-doc suffixes exist, but once no class splits,
-    no later level can split one either (rank refinement is monotone),
-    and at the fixed point rank-equal <=> suffixes identical — which is
-    what `longest_cross_doc_span`'s equal-rank shortcut relies on.
+    Same prefix doubling and the same round body (`_doubling_round`) as
+    `suffix_ranks`, with the per-doc dense-rank window replaced by
+    `global_dense_rank` — per round: one doc-window lead (shuffle on doc
+    id) + one range shuffle, both carrying (doc, pos, rank) longs only;
+    token text rides exactly one shuffle total (the initial token
+    ranking).  The composite base K is n_rows + 2 (dense ranks are <=
+    n_rows), so fused and terminal-composite rounds stop past ~3e9
+    positions per call (COMPOSITE_BOUND) and the loop degrades to
+    one-level rounds instead of overflowing.  Checkpointing the lead
+    frame before a fused round's range shuffle also stops the
+    RangePartitioner's sampling pass from re-executing the window
+    subtree.
 
-    Fused super-rounds (round 10): ranks only need ORDER and EQUALITY,
-    not density — density is only what keeps values bounded.  So two
-    levels run off ONE doc-window pass: leads at off, 2*off, 3*off give
-    rank_2off = (r, r2) and rank_4off = (r, r2, r3, r4) (two nested
-    applications of the pairing identity, -1 sentinels compose — a
-    shorter suffix's (-1, -1) tail orders before any continuation
-    exactly like the scalar sentinel).  The 2*off level enters the
-    history as a COMPOSITE int64 `r*K + (r2+1)` (K = n_rows + 2; the
-    LCP walk tests only equality, and composite equality <=> (r, r2)
-    equality), a free lazy projection over the checkpointed lead frame;
-    the 4*off level is ONE `global_dense_rank` over the 4-tuple.  Per
-    two levels this halves the range shuffles, offset collects, and
-    checkpoint materializations — and checkpointing the lead frame
-    before the range shuffle stops the RangePartitioner's sampling pass
-    from re-executing the window subtree.  The composite fits int64
-    only while (n_rows + 2)^2 < 2^63 (~3e9 positions per job); beyond
-    that the loop falls back to the classic one-level round, so the
-    100 TB path degrades to round-9 behavior instead of overflowing.
+    Early stop at the CLASS FIXED POINT (the class count stops growing):
+    per-doc all-distinct never happens when identical cross-doc suffixes
+    exist, but once no class splits, no later level can split one either
+    (rank refinement is monotone), and at the fixed point rank-equal <=>
+    suffixes identical — which is what `longest_cross_doc_span`'s
+    equal-rank shortcut relies on.  A fixed-point round adds nothing to
+    the history (a fixed point at 2^f*off implies it at every level in
+    between) and the previous rank frame stays final.
+
+    ``return_history=True`` returns (out, history, n_rows) and takes a
+    last one-level round as a terminal composite: the walks and the adjacency
+    need order + equality only, and composite equality at a level >=
+    max_len <=> identical suffixes, the eq-pair contract.  The default
+    output keeps dense suffix_rank values (pinned in
+    tests/test_round9_ops.py).
     """
-    toks = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(F.col(id_col), tokens_col(F.col(text_col)).alias("__t"))
-        .filter(F.size("__t") >= 1)
-    )
+    toks = _tokenized(df, id_col, text_col)
     if max_doc_tokens is not None:
         toks = toks.filter(F.size("__t") <= max_doc_tokens)
-    # __n rides NO loop frame (round 10): doc lengths re-attach at the end
-    # via a join (AQE broadcasts the tiny per-doc frame when it fits) —
-    # carrying the constant column through every per-round shuffle was
-    # pure dead weight.
+    # doc lengths ride no loop frame: they re-attach at the end via a
+    # join (AQE broadcasts the tiny per-doc frame when it fits)
     doc_lens = toks.select(
         F.col(id_col), F.size("__t").cast("long").alias("__n")
     )
@@ -598,10 +531,7 @@ def global_suffix_ranks(
         F.col(id_col),
         F.posexplode("__t").alias("__i0", "__tok"),
     ).select(id_col, (F.col("__i0") + 1).cast("long").alias("pos"), "__tok")
-    # ONE action for both loop bounds (round 12): total positions ==
-    # sum of doc lengths (what cur.count() measured) and max_len off the
-    # same tiny aggregate — was two separate jobs (a count over the
-    # ranked frame + a max over doc_lens).
+    # ONE action for both loop bounds: total positions and max_len
     agg = doc_lens.agg(
         F.sum("__n").alias("__s"), F.max("__n").alias("__m")
     ).first()
@@ -609,133 +539,30 @@ def global_suffix_ranks(
     max_len = int(agg["__m"] or 1)
     ranked, n_classes = global_dense_rank(pos, ["__tok"], n_parts)
     cur = ranked.select(id_col, "pos", F.col("__gr").alias("r"))
-    history = [(1, cur)]
-    w = Window.partitionBy(id_col).orderBy("pos")
-    off = 1
-    comp_k = n_rows + 2  # composite base: dense ranks are <= n_rows
-    # fuse=None (default) fuses: the REST shuffle counters show fused
-    # construction strictly cheaper at both measured scales — 313 vs
-    # 457 MB and 15.8 vs 23.5 s on the 2.4M-position 8x clone corpus
-    # (same session, level-skip walk), 13 vs 31 s at 270k positions —
-    # halving the range-shuffle rounds outweighs the wider 4-lead rows.
-    # (An earlier single-window A/B read classic as faster; the stable
-    # byte counters and a clean re-measure showed that was host noise —
-    # docs/PLANS.md round 10.)  The only hard fallback is the int64
-    # composite bound (~3e9 positions per job); fuse=False forces the
-    # one-level loop for differentials.
-    if fuse is None:
-        fuse = True
-    fuse_ok = fuse and comp_k * comp_k < (1 << 63) - 1
-    while off < max_len and n_classes < n_rows:
-        if fuse_ok and return_history and 2 * off >= max_len:
-            # TERMINAL COMPOSITE round (round 12): the last round only
-            # exists to refine ranks past max_len, and the composite
-            # r*K + (r2+1) is not merely equality-exact but ORDER-
-            # PRESERVING ((r, r2) lexicographic: r2+1 in [0, K)), so the
-            # final rank table can be this lazy projection over the one
-            # checkpointed lead frame — the whole terminal
-            # global_dense_rank (sampling + shuffle/sort/Arrow
-            # materialization + offsets collect) disappears.  Sound for
-            # every history-mode consumer: the walks and the adjacency
-            # need order + equality only, and composite equality at
-            # level 2*off >= max_len <=> identical suffixes (both
-            # suffixes are shorter than the refined prefix), which is
-            # exactly the eq-pair contract.  The non-history path keeps
-            # the dense terminal round — its suffix_rank output contract
-            # IS dense ranks (pinned in tests/test_round9_ops.py).
-            paired = cur.select(
-                id_col,
-                "pos",
-                "r",
-                F.coalesce(F.lead("r", off).over(w), F.lit(-1)).alias("r2"),
-            ).localCheckpoint(eager=True)
-            cur = paired.select(
-                id_col,
-                "pos",
-                (F.col("r") * F.lit(comp_k) + F.col("r2") + F.lit(1)).alias("r"),
-            )
-            off *= 2
-            history.append((off, cur))
-            break
-        if not fuse_ok or 2 * off >= max_len:
-            # classic one-level round: the final level (no point ranking
-            # past max_len) and the > ~3e9-positions overflow fallback
-            paired = cur.select(
-                id_col,
-                "pos",
-                "r",
-                F.coalesce(F.lead("r", off).over(w), F.lit(-1)).alias("r2"),
-            )
-            ranked, new_classes = global_dense_rank(paired, ["r", "r2"], n_parts)
-            if new_classes == n_classes:
-                # class fixed point: (r, r2) split nothing, so no later
-                # level can split anything — and the new dense ranks equal
-                # the old (classes ordered by r alone); keep the old frame.
-                break
-            cur = ranked.select(id_col, "pos", F.col("__gr").alias("r"))
-            n_classes = new_classes
-            off *= 2
-            history.append((off, cur))
-            continue
-        # WIDE fused super-round (round 12): THREE levels off ONE window
-        # pass — leads at off..7*off give rank_2off = (r, r2) as the
-        # int64 composite, rank_4off = ((r, r2), (r3, r4)) as a STRUCT
-        # of two composites (the walk tests equality only, and struct
-        # equality <=> 4-tuple equality; a single int64 can't hold a
-        # 4-tuple — K^4 overflows — but two can), and rank_8off as ONE
-        # global_dense_rank over the 8-tuple.  Per three levels this is
-        # one range shuffle + one offsets collect + two checkpoint
-        # materializations, vs three of each in the classic loop and
-        # 1.5x each in the round-10 two-level fusion.
-        paired = cur.select(
-            id_col,
-            "pos",
-            "r",
-            *[
-                F.coalesce(F.lead("r", k * off).over(w), F.lit(-1)).alias(
-                    f"r{k + 1}"
-                )
-                for k in range(1, 8)
-            ],
-        ).localCheckpoint(eager=True)
-        c12 = F.col("r") * F.lit(comp_k) + F.col("r2") + F.lit(1)
-        c34 = F.col("r3") * F.lit(comp_k) + F.col("r4") + F.lit(1)
-        history.append((2 * off, paired.select(id_col, "pos", c12.alias("r"))))
-        history.append(
-            (
-                4 * off,
-                paired.select(
-                    id_col,
-                    "pos",
-                    F.struct(c12.alias("a"), c34.alias("b")).alias("r"),
-                ),
-            )
+
+    def rank(paired, keys, materialized):
+        gr, n = global_dense_rank(
+            paired, keys, n_parts, input_materialized=materialized
         )
-        ranked, new_classes = global_dense_rank(
-            paired,
-            ["r", "r2", "r3", "r4", "r5", "r6", "r7", "r8"],
-            n_parts,
-            input_materialized=True,
+        return gr.select(id_col, "pos", F.col("__gr").alias("r")), n
+
+    history = [(1, cur)]
+    off = 1
+    # a terminal composite ends the loop: it is taken only when one
+    # doubling is left, so off >= max_len after it
+    while off < max_len and n_classes < n_rows:
+        levels, new_classes = _doubling_round(
+            cur, id_col, off, max_len, n_rows + 2, return_history, rank
         )
         if new_classes == n_classes:
-            # fixed point three levels out implies it at 2*off and 4*off
-            # too (class refinement is monotone) — drop the no-op
-            # composite entries and keep the old frame, exactly the
-            # classic-path semantics
-            history.pop()
-            history.pop()
             break
-        cur = ranked.select(id_col, "pos", F.col("__gr").alias("r"))
+        history += levels
+        off, cur = levels[-1]
         n_classes = new_classes
-        off *= 8
-        history.append((off, cur))
     out = cur.join(doc_lens, id_col)
     if return_history:
-        # n_rows (total positions == rank-table rows) rides along so the
-        # LCP walks can decide whether the history frames are broadcast-
-        # safe WITHOUT re-counting (and without conflating pair count
-        # with rank-table size — a corpus can have few cross-doc pairs
-        # but arbitrarily many positions).
+        # n_rows (total positions == rank-table rows) lets the LCP walks
+        # decide broadcast safety without re-counting
         return out, history, n_rows
     return out.select(
         F.col(id_col),
@@ -751,7 +578,6 @@ def longest_cross_doc_span(
     text_col: str,
     n_parts: int | None = None,
     max_doc_tokens: int | None = None,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """EXACT longest token span each document shares VERBATIM with any
     OTHER document — the quantity dd10/dd16's fixed-l grams approximate
@@ -767,8 +593,8 @@ def longest_cross_doc_span(
     involving p's own document (take the LAST suffix of p's doc before
     q), so even the PER-DOC max over adjacent cross-doc pairs is exact.
 
-    Adjacent-pair LCPs come from the prefix-doubling rank history, binary
-    decomposition exactly as `longest_repeated_span` — except suffixes
+    Adjacent-pair LCPs come from `_lcp_walk` over the prefix-doubling
+    rank history, as in `longest_repeated_span` — except suffixes
     from DIFFERENT docs can be fully identical (equal final rank at the
     class fixed point), where the level walk under-counts (the history
     stops at the fixed point, below the true common length): those pairs
@@ -783,28 +609,9 @@ def longest_cross_doc_span(
     `longest_cross_doc_span_chunked` to keep them in the tier).
     """
     per_doc = _cross_group_spans(
-        df,
-        id_col,
-        text_col,
-        n_parts=n_parts,
-        max_doc_tokens=max_doc_tokens,
-        fuse=fuse,
+        df, id_col, text_col, n_parts=n_parts, max_doc_tokens=max_doc_tokens
     )
-    all_docs = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(id_col, F.size(tokens_col(F.col(text_col))).alias("__sz"))
-        .filter(F.col("__sz") >= 1)
-    )
-    skipped = (
-        F.col("__sz") > max_doc_tokens if max_doc_tokens is not None else F.lit(False)
-    )
-    return all_docs.join(per_doc, id_col, "left").select(
-        F.col(id_col),
-        F.when(skipped, F.lit(None))
-        .otherwise(F.coalesce("longest_shared", F.lit(0)))
-        .cast("long")
-        .alias("longest_shared"),
-    )
+    return _with_docs(df, id_col, text_col, per_doc, "longest_shared", max_doc_tokens)
 
 
 def _lcp_walk(
@@ -814,19 +621,25 @@ def _lcp_walk(
     rank_id_col: str,
     a_id: str,
     b_id: str,
-    pair_count: int,
     rank_rows: int,
 ) -> DataFrame:
-    """Binary-decomposition LCP walk over rank-DISTINCT suffix pairs,
-    shared by the cross-group (t35/t39) and chunked-repeat (t40) paths.
+    """Binary-decomposition LCP walk over rank-DISTINCT suffix pairs —
+    the one walk of the per-doc (t34), cross-group (t35/t39) and
+    chunked-repeat (t40) paths: for L = 2^k descending, if the L-prefix
+    ranks at the pair's current offsets are equal, add L — O(log n)
+    levels, each ONE equi-join per side against the L-rank table on
+    (id, pos = start + lcp), shuffling (id, pos, rank) longs only.
 
     ``ne`` carries (a_id, i, b_id, j, rem_a, rem_b, lcp=0, *extras) with
     (a_id, i) / (b_id, j) the unit-local (rank-table id, position) of
-    each suffix; extras ride untouched.  ``history`` is the
+    each suffix; extras ride untouched.  Same-document pairs pass the
+    one id column as both a_id and b_id.  ``history`` is the
     prefix-doubling rank-table list [(L, (rank_id_col, pos, r))].
 
-    Walk strategy (round 10), picked by pair count (callers count an
-    already-checkpointed frame — one cheap job):
+    Walk strategy (round 10), picked by ``rank_rows``, the position
+    count: it is the size of every history rank table AND bounds the
+    pair count (adjacent pairs over n positions are < n + n_parts), so
+    no caller runs a counting job:
     * SMALL (bench-scale) corpora: the round-9 lazy single-job chain —
       per-level materializations are pure fixed overhead there
       (measured 13 vs 25 s at sf0.1).
@@ -844,14 +657,9 @@ def _lcp_walk(
     """
     fixed = {a_id, "i", b_id, "j", "rem_a", "rem_b", "lcp"}
     extras = [c for c in ne_cols if c not in fixed]
-    big_walk = pair_count > BIG_WALK_PAIR_THRESHOLD
-    # Broadcast eligibility is a SEPARATE decision from walk strategy:
-    # pair count bounds the probe frame, but the build sides are the
-    # history rank tables — one row per corpus POSITION (rank_rows),
-    # which can far exceed the pair count (many positions, few cross-doc
-    # adjacencies).  Only hint broadcast when the rank tables themselves
-    # are small; ~1M (id, pos, r) long rows is a few MB serialized.
-    bcast_ranks = not big_walk and rank_rows <= BIG_WALK_PAIR_THRESHOLD
+    # the small walk broadcasts the rank tables: ~1M (id, pos, r) long
+    # rows is a few MB serialized
+    big_walk = rank_rows > BIG_WALK_PAIR_THRESHOLD
     # The TOP history level is a GUARANTEED no-op for rank-distinct
     # pairs and is skipped outright (round 12): its rank table is the
     # FINAL table (every construction path's last history entry is the
@@ -883,7 +691,7 @@ def _lcp_walk(
             F.col("pos").alias("__pb"),
             F.col("r").alias("__rb"),
         )
-        if bcast_ranks:
+        if not big_walk:
             # Small walk over small rank tables: broadcast the build
             # sides.  Size estimates on the lazy history projections run
             # past the 10 MB auto threshold, so without the hint each
@@ -909,10 +717,8 @@ def _lcp_walk(
                 "left",
             )
             .select(
-                a_id,
-                "i",
-                b_id,
-                "j",
+                # dict.fromkeys: a_id == b_id for same-document pairs
+                *dict.fromkeys([a_id, "i", b_id, "j"]),
                 "rem_a",
                 "rem_b",
                 F.when(
@@ -923,9 +729,11 @@ def _lcp_walk(
                 .alias("lcp"),
                 *[F.col(c) for c in extras],
             )
-            # lazy chain, same argument as longest_repeated_span's walk:
-            # history frames are materialized, single consumer — one job
-            # for the whole walk instead of one per level
+            # NO per-level checkpoint in the small walk: the history
+            # frames are materialized (or lazy projections of
+            # checkpoints) and the pair chain has a single consumer, so
+            # the whole walk is ONE job instead of one per level (t35
+            # at sf0.1: 49.6 -> 31.2 s)
         )
         # the probe/rest split references ne twice, so the big walk MUST
         # materialize per level (multi-branch plan-explosion trap); the
@@ -943,7 +751,6 @@ def _cross_group_spans(
     text_col: str,
     n_parts: int | None = None,
     max_doc_tokens: int | None = None,
-    fuse: bool | None = None,
     group_map: DataFrame | None = None,
 ) -> DataFrame:
     """Core of the cross-doc span machinery: per-GROUP max LCP over
@@ -977,7 +784,6 @@ def _cross_group_spans(
         n_parts=n_parts,
         max_doc_tokens=max_doc_tokens,
         return_history=True,
-        fuse=fuse,
     )
     grouped = group_map is not None
     if grouped:
@@ -1006,14 +812,7 @@ def _cross_group_spans(
         *[F.col(c) for c in grp_extra],
     )
     ne_cols = [a_id, "i", b_id, "j", "rem_a", "rem_b", "lcp", *grp_extra]
-    # rank_rows bounds the pair count (adjacent pairs over n positions
-    # are < n + n_parts), so the walk-strategy gate keys on it directly
-    # — the cross.count() action this replaces was one more job per
-    # query for a number the bound already decides (round 12); both
-    # walk gates now key on the same size measure.
-    ne = _lcp_walk(
-        ne, ne_cols, history, id_col, a_id, b_id, rank_rows, rank_rows
-    )
+    ne = _lcp_walk(ne, ne_cols, history, id_col, a_id, b_id, rank_rows)
     ne_final = ne.select(
         a_g,
         b_g,
@@ -1035,7 +834,6 @@ def longest_cross_doc_span_chunked(
     max_doc_tokens: int,
     chunk_overlap: int | None = None,
     n_parts: int | None = None,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """`longest_cross_doc_span` with CHUNKED ROUTING for oversized
     documents — the scale path where `max_doc_tokens` alone would SKIP a
@@ -1086,19 +884,11 @@ def longest_cross_doc_span_chunked(
         "__uid",
         "__text",
         n_parts=n_parts,
-        fuse=fuse,
         group_map=units.select("__uid", "__g"),
     )
     per_doc = per_grp.select(F.col("__g").alias(id_col), "longest_shared")
-    all_docs = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(id_col, F.size(tokens_col(F.col(text_col))).alias("__sz"))
-        .filter(F.col("__sz") >= 1)
-    )
-    return all_docs.join(per_doc, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce("longest_shared", F.lit(0)).cast("long").alias("longest_shared"),
-        (F.col("__sz") > max_doc_tokens).alias("routed"),
+    return _with_docs(
+        df, id_col, text_col, per_doc, "longest_shared", max_doc_tokens, routed=True
     )
 
 
@@ -1109,7 +899,6 @@ def longest_cross_doc_span_refined(
     max_doc_tokens: int,
     chunk_overlap: int | None = None,
     n_parts: int | None = None,
-    fuse: bool | None = None,
     max_rounds: int = 40,
 ) -> DataFrame:
     """FULLY EXACT cross-doc spans at ANY span length through the chunked
@@ -1151,7 +940,6 @@ def longest_cross_doc_span_refined(
         max_doc_tokens=max_doc_tokens,
         chunk_overlap=chunk_overlap,
         n_parts=n_parts,
-        fuse=fuse,
     ).localCheckpoint(eager=True)
     c_sz = max_doc_tokens
     v_sz = chunk_overlap if chunk_overlap is not None else max_doc_tokens // 2
@@ -1168,8 +956,7 @@ def longest_cross_doc_span_refined(
             max_doc_tokens=c_sz,
             chunk_overlap=v_sz,
             n_parts=n_parts,
-            fuse=fuse,
-        ).localCheckpoint(eager=True)
+            ).localCheckpoint(eager=True)
         new = sub_res.select(
             F.col(id_col),
             F.col("longest_shared").alias("__new"),
@@ -1219,11 +1006,8 @@ def _chunk_units(
         raise ValueError("need 1 <= chunk_overlap < max_doc_tokens")
     c_sz, v_sz = max_doc_tokens, chunk_overlap
     stride = c_sz - v_sz
-    base = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(F.col(id_col), tokens_col(F.col(text_col)).alias("__t"))
-        .filter(F.size("__t") >= 1)
-        .select(id_col, "__t", F.size("__t").alias("__sz"))
+    base = _tokenized(df, id_col, text_col).select(
+        id_col, "__t", F.size("__t").alias("__sz")
     )
     small = base.filter(F.col("__sz") <= c_sz).select(
         F.col(id_col).alias("__g"),
@@ -1263,7 +1047,6 @@ def longest_repeated_span_chunked(
     max_doc_tokens: int,
     chunk_overlap: int | None = None,
     n_parts: int | None = None,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """`longest_repeated_span` with CHUNKED ROUTING — the within-doc twin
     of `longest_cross_doc_span_chunked`, closing the suffix family's
@@ -1316,7 +1099,6 @@ def longest_repeated_span_chunked(
         "__text",
         n_parts=n_parts,
         return_history=True,
-        fuse=fuse,
     )
     rk = ranks.join(units.select("__uid", "__g", "__start"), "__uid").select(
         "__uid",
@@ -1359,11 +1141,7 @@ def longest_repeated_span_chunked(
         "__g",
     )
     ne_cols = ["__ua", "i", "__ub", "j", "rem_a", "rem_b", "lcp", "__g"]
-    # rank_rows bounds the pair count — same one-job saving as
-    # _cross_group_spans (round 12)
-    ne = _lcp_walk(
-        ne, ne_cols, history, "__uid", "__ua", "__ub", rank_rows, rank_rows
-    )
+    ne = _lcp_walk(ne, ne_cols, history, "__uid", "__ua", "__ub", rank_rows)
     contrib = eq.unionByName(
         ne.select(
             "__g", F.least("lcp", "rem_a", "rem_b").cast("long").alias("lcp")
@@ -1371,13 +1149,6 @@ def longest_repeated_span_chunked(
     )
     per_doc = contrib.groupBy("__g").agg(F.max("lcp").alias("longest_repeat"))
     per_doc = per_doc.select(F.col("__g").alias(id_col), "longest_repeat")
-    all_docs = (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(id_col, F.size(tokens_col(F.col(text_col))).alias("__sz"))
-        .filter(F.col("__sz") >= 1)
-    )
-    return all_docs.join(per_doc, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce("longest_repeat", F.lit(0)).cast("long").alias("longest_repeat"),
-        (F.col("__sz") > max_doc_tokens).alias("routed"),
+    return _with_docs(
+        df, id_col, text_col, per_doc, "longest_repeat", max_doc_tokens, routed=True
     )

@@ -86,14 +86,12 @@ def dd2_ngram_jaccard_topk(spark, sf_dir):
     )
 
 
-@register(
-    "dd5_dup_clusters",
-    # Connected components re-derived in SQL: same thresholded Jaccard edge
-    # list, then a recursive CTE propagating min reachable doc_id (UNION
-    # dedups rows, so the recursion terminates at the transitive closure).
-    # The edge CTE is MATERIALIZED: the recursion re-reads it every round
-    # and DuckDB inlines plain CTEs, re-running the shingle self-join.
-    oracle=f"""
+# Connected components re-derived in SQL (dd5, dd6): same thresholded
+# Jaccard edge list, then a recursive CTE propagating min reachable doc_id
+# (UNION dedups rows, so the recursion terminates at the transitive
+# closure).  The edge CTE is MATERIALIZED: the recursion re-reads it every
+# round and DuckDB inlines plain CTEs, re-running the shingle self-join.
+_DUP_CLUSTERS_ORACLE = f"""
     WITH RECURSIVE
     sh AS (SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents),
     sizes AS (SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id),
@@ -121,8 +119,10 @@ def dd2_ngram_jaccard_topk(spark, sf_dir):
     csz AS (SELECT cluster_id, count(*) AS cluster_sz FROM labels GROUP BY cluster_id)
     SELECT doc_id, labels.cluster_id, cluster_sz
     FROM labels JOIN csz ON labels.cluster_id = csz.cluster_id
-    """,
-)
+"""
+
+
+@register("dd5_dup_clusters", oracle=_DUP_CLUSTERS_ORACLE)
 def dd5_dup_clusters(spark, sf_dir):
     # Near-dup pairs (3-gram Jaccard >= 0.5) -> transitive duplicate
     # clusters via connected_components (driver union-find below its edge
@@ -178,49 +178,11 @@ def dd3_minhash_lsh(spark, sf_dir):
     )
 
 
-@register(
-    "dd6_dup_clusters_alternating",
-    # dd5 under a second registry name that callers use: same clusters,
-    # same recursive-CTE oracle, same plan.
-    oracle=f"""
-    WITH RECURSIVE
-    sh AS (SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents),
-    sizes AS (SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id),
-    raw_pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    dup_edges AS (
-      SELECT doc_a, doc_b FROM raw_pairs
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.nsh + sb.nsh - inter) >= 0.5
-    ),
-    edges AS MATERIALIZED (
-      SELECT doc_a AS src, doc_b AS dst FROM dup_edges
-      UNION ALL SELECT doc_b, doc_a FROM dup_edges
-    ),
-    reach(node, label) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    labels AS (SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node),
-    csz AS (SELECT cluster_id, count(*) AS cluster_sz FROM labels GROUP BY cluster_id)
-    SELECT doc_id, labels.cluster_id, cluster_sz
-    FROM labels JOIN csz ON labels.cluster_id = csz.cluster_id
-    """,
+# dd5 under a second registry name that callers use: same builder,
+# same oracle.
+register("dd6_dup_clusters_alternating", oracle=_DUP_CLUSTERS_ORACLE)(
+    dd5_dup_clusters
 )
-def dd6_dup_clusters_alternating(spark, sf_dir):
-    from era_parser_spark.operators.graph import cluster_sizes, connected_components
-
-    docs = table(spark, sf_dir, "documents")
-    edges = ngram_jaccard_pairs(docs, "doc_id", "text", n=3).filter(F.col("jaccard") >= 0.5)
-    comps = connected_components(
-        docs.select("doc_id"), edges, id_col="doc_id", src_col="doc_a", dst_col="doc_b"
-    )
-    return cluster_sizes(comps, id_col="doc_id")
 
 
 @register("dd4_simhash")  # engine-specific hashing -> rows-only check

@@ -27,8 +27,9 @@ def rows_multiset(cols: list[str], rows) -> list[tuple]:
     return sorted(tuple(normalize_value(r[i]) for i in order) for r in rows)
 
 
-def compare_spark_duckdb(sdf, duck_con, sql: str, label: str = "") -> None:
-    """Assert exact (order-insensitive) equality of result multisets."""
+def compare_spark_duckdb(sdf, duck_con, sql: str, label: str = "") -> int:
+    """Assert exact (order-insensitive) equality of result multisets;
+    returns the row count."""
     spark_cols = [c.lower() for c in sdf.columns]
     spark_rows = [tuple(r) for r in sdf.collect()]
     res = duck_con.execute(sql)
@@ -45,3 +46,4 @@ def compare_spark_duckdb(sdf, duck_con, sql: str, label: str = "") -> None:
     if s != d:
         diffs = [(a, b) for a, b in zip(s, d) if a != b][:5]
         raise AssertionError(f"{label}: value mismatch, first diffs: {diffs}")
+    return len(s)

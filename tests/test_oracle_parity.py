@@ -8,35 +8,9 @@ mismatch, so equality is asserted bitwise (no tolerance).
 
 from __future__ import annotations
 
-import datetime
-import math
-
 import pytest
 
 from tests.conftest import SF_MED, register_duck_views
-
-
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    if isinstance(v, bool):
-        return bool(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
-
-
-def _rows_multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        tuple(repr(_norm(r[i])) for i in order) for r in rows
-    )
 
 
 def _query_names():
@@ -49,27 +23,10 @@ def _query_names():
 @pytest.mark.parametrize("name", _query_names())
 def test_oracle_parity(spark, duck, name):
     from era_parser_spark.queries import ORACLES, QUERIES
-
-    sdf = QUERIES[name](spark, SF_MED)
-    spark_cols = [c.lower() for c in sdf.columns]
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    from era_parser_spark.testing.oracle import compare_spark_duckdb
 
     register_duck_views(duck, SF_MED)
-    res = duck.execute(ORACLES[name])
-    duck_cols = [d[0].lower() for d in res.description]
-    duck_rows = res.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column names differ: spark={spark_cols} duck={duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count differs: spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    s = _rows_multiset(spark_cols, spark_rows)
-    d = _rows_multiset(duck_cols, duck_rows)
-    if s != d:
-        diffs = [(a, b) for a, b in zip(s, d) if a != b][:5]
-        raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+    compare_spark_duckdb(QUERIES[name](spark, SF_MED), duck, ORACLES[name], name)
 
 
 def test_rows_only_queries_run(spark):

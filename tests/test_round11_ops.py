@@ -1,8 +1,5 @@
 """Round-11 pins: the round-10 advice items + the chunked suffix routing.
 
-- suffix fuse differential: fuse=True vs fuse=False must be result-identical
-  (the classic one-level loop is the silent >3e9-position overflow fallback;
-  it had no automated differential).
 - big-walk strategy equivalence: BIG_WALK_PAIR_THRESHOLD is a module
   constant so the level-skip + per-level-checkpoint walk — behaviorally a
   different code path — is forceable on a small fixture.
@@ -29,52 +26,6 @@ def _docs(spark, rows):
 
 def _spans(df) -> dict:
     return {r["doc_id"]: r["longest_shared"] for r in df.collect()}
-
-
-# --- fuse=True vs fuse=False differential -------------------------------------
-
-
-def test_suffix_fuse_differential_per_doc(spark):
-    from era_parser_spark.operators.suffix import suffix_ranks
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(40)
-    fused = {
-        (r["doc_id"], r["pos"]): r["suffix_rank"]
-        for r in suffix_ranks(docs, "doc_id", "text", fuse=True).collect()
-    }
-    classic = {
-        (r["doc_id"], r["pos"]): r["suffix_rank"]
-        for r in suffix_ranks(docs, "doc_id", "text", fuse=False).collect()
-    }
-    assert fused == classic and len(fused) > 0
-
-
-def test_suffix_fuse_differential_global_and_cross_doc(spark):
-    from era_parser_spark.operators.suffix import (
-        global_suffix_ranks,
-        longest_cross_doc_span,
-    )
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "a quick brown fox ran far away from the dog"),
-        (3, "the quick brown fox jumps over the lazy dog again and again"),
-        (4, "zeta eta theta iota kappa"),
-        (5, "single"),
-    ]
-    docs = _docs(spark, rows)
-    g_fused = {
-        (r["doc_id"], r["pos"]): r["suffix_rank"]
-        for r in global_suffix_ranks(docs, "doc_id", "text", fuse=True).collect()
-    }
-    g_classic = {
-        (r["doc_id"], r["pos"]): r["suffix_rank"]
-        for r in global_suffix_ranks(docs, "doc_id", "text", fuse=False).collect()
-    }
-    assert g_fused == g_classic and len(g_fused) > 0
-    assert _spans(longest_cross_doc_span(docs, "doc_id", "text", fuse=True)) == _spans(
-        longest_cross_doc_span(docs, "doc_id", "text", fuse=False)
-    )
 
 
 # --- big-walk strategy equivalence on a small fixture -------------------------

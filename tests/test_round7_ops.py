@@ -38,21 +38,18 @@ def _clone_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-@pytest.mark.parametrize("verify", ["exact", "exact_index", "estimate"])
+@pytest.mark.parametrize("verify", ["exact", "estimate"])
 def test_fuzzy_dedup_collapse_is_output_identical(spark, verify):
     """The clone-safe default must produce the SAME output frame (same
     keepers, same clusters, same sizes) as the uncollapsed round-6 plan
-    (collapse_exact=False, inverted-index verification)."""
+    (inverted-index verification over every document, then CC)."""
     from era_parser_spark.operators.dedup import fuzzy_dedup
+    from tests.conftest import uncollapsed_fuzzy_dedup
 
     docs = _clone_corpus(spark)
     fast = fuzzy_dedup(docs, "doc_id", "text", threshold=0.5, verify=verify)
-    slow = fuzzy_dedup(
-        docs, "doc_id", "text", threshold=0.5, verify="exact_index",
-        collapse_exact=False,
-    )
     f = sorted(tuple(r) for r in fast.collect())
-    s = sorted(tuple(r) for r in slow.collect())
+    s = uncollapsed_fuzzy_dedup(docs, threshold=0.5)
     assert f == s and len(f) == docs.count()
 
 

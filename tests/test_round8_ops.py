@@ -56,6 +56,7 @@ def test_fuzzy_dedup_quality_keeper_displaces_min_id(spark):
 
 def test_fuzzy_dedup_keeper_min_direction_and_default(spark):
     from era_parser_spark.operators.dedup import fuzzy_dedup
+    from tests.conftest import uncollapsed_fuzzy_dedup
 
     docs = _keeper_corpus(spark)
     kept_min = {
@@ -72,16 +73,15 @@ def test_fuzzy_dedup_keeper_min_direction_and_default(spark):
         if r.kept
     }
     assert kept_default == {1, 3, 5}
-    # keeper applies identically on the uncollapsed differential plan
-    kept_uncollapsed = {
-        r.doc_id
+    # keeper applies identically on the uncollapsed composition
+    kept_max = sorted(
+        tuple(r)
         for r in fuzzy_dedup(
-            docs, "doc_id", "text", threshold=0.5, keeper=("q", "max"),
-            collapse_exact=False,
+            docs, "doc_id", "text", threshold=0.5, keeper=("q", "max")
         ).collect()
-        if r.kept
-    }
-    assert kept_uncollapsed == {2, 3, 5}
+    )
+    assert kept_max == uncollapsed_fuzzy_dedup(docs, keeper=("q", "max"))
+    assert {r[0] for r in kept_max if r[3]} == {2, 3, 5}
 
 
 def test_fuzzy_dedup_keeper_validation(spark):

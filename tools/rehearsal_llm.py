@@ -604,13 +604,25 @@ def main() -> int:
         ).filter("kept").count(),
     )
     if args.uncollapsed:
-        phase(
-            "dd9_fuzzy_dedup_round6_plan",
-            lambda: fuzzy_dedup(
-                docs, "doc_id", "text", threshold=0.5,
-                verify="exact_index", collapse_exact=False,
-            ).filter("kept").count(),
+        # the round-6 plan: inverted-index verification over every
+        # document (no exact-clone collapse), then CC; kept = min id
+        from era_parser_spark.operators.dedup import minhash_lsh_dedup_pairs
+        from era_parser_spark.operators.graph import (
+            cluster_sizes,
+            connected_components,
         )
+
+        def _uncollapsed():
+            edges = minhash_lsh_dedup_pairs(docs, "doc_id", "text", threshold=0.5)
+            comps = connected_components(
+                docs.select("doc_id"), edges.select("doc_a", "doc_b"),
+                id_col="doc_id", src_col="doc_a", dst_col="doc_b",
+            )
+            return cluster_sizes(comps, id_col="doc_id").filter(
+                F.col("doc_id") == F.col("cluster_id")
+            ).count()
+
+        phase("dd9_fuzzy_dedup_round6_plan", _uncollapsed)
     if not args.dd9_only:
         phase(
             "t9_boilerplate_strip",

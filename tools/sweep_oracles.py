@@ -1,8 +1,9 @@
 """Pre-driver correctness sweep: run every queries() entry against its
 oracle_sql() at sf0.01 the way the driver does — row count, column-name
-set, value equality over name-sorted columns — PLUS a type audit the
-driver's hash is sensitive to (round-1 lesson: DuckDB HUGEINT vs Spark
-BIGINT hash-mismatch with identical values).
+set, value equality over name-sorted columns (`testing.oracle`, floats
+compared bitwise) — PLUS a type audit the driver's hash is sensitive to
+(round-1 lesson: DuckDB HUGEINT vs Spark BIGINT hash-mismatch with
+identical values).
 
 Usage: python tools/sweep_oracles.py [sf_dir] [name_substring ...]
 (exit 1 on any mismatch; extra args filter to matching query names)
@@ -10,10 +11,10 @@ Usage: python tools/sweep_oracles.py [sf_dir] [name_substring ...]
 
 from __future__ import annotations
 
-import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2:]
@@ -37,26 +38,14 @@ OK_TYPE_PAIRS = {
 }
 
 
-def norm(v):
-    if isinstance(v, float):
-        # driver hashes bitwise; NaN != NaN breaks tuple compare
-        return ("f", math.isnan(v), v)
-    return v
-
-
 def main() -> int:
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as m
+    from era_parser_spark.session import get_spark
+    from era_parser_spark.testing.oracle import compare_spark_duckdb
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="sweep_oracles")
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
@@ -70,41 +59,26 @@ def main() -> int:
         if name not in O:
             print(f"{name:28s} rows-only (no oracle)")
             continue
+        probs = []
         try:
             sdf = Q[name](spark, SF)
-            scols = sorted(sdf.columns)
             stypes = dict(sdf.dtypes)
-            srows = sorted(
-                tuple(norm(r[c]) for c in scols) for r in sdf.collect()
-            )
+            # binding the relation gives the oracle's types without running it
             rel = con.sql(O[name])
-            dcols_raw, dtypes_raw = list(rel.columns), list(rel.types)
-            order = sorted(range(len(dcols_raw)), key=lambda i: dcols_raw[i])
-            dcols = [dcols_raw[i] for i in order]
-            drows = sorted(
-                tuple(norm(row[i]) for i in order) for row in rel.fetchall()
-            )
+            for c, dt in zip(rel.columns, rel.types):
+                dt, st = str(dt).upper(), stypes.get(c, "?")
+                if (dt, st) not in OK_TYPE_PAIRS:
+                    probs.append(f"type {c}: duckdb {dt} vs spark {st}")
+            n_rows = compare_spark_duckdb(sdf, con, O[name], name)
+        except AssertionError as exc:
+            probs.append(str(exc))
         except Exception as exc:  # noqa: BLE001 - report and keep sweeping
-            bad.append(name)
-            print(f"{name:28s} ERROR {type(exc).__name__}: {exc}")
-            continue
-        probs = []
-        if scols != dcols:
-            probs.append(f"cols {scols} vs {dcols}")
-        if len(srows) != len(drows):
-            probs.append(f"rows {len(srows)} vs {len(drows)}")
-        elif srows != drows:
-            diff = next(i for i, (a, b) in enumerate(zip(srows, drows)) if a != b)
-            probs.append(f"values differ at sorted row {diff}: {srows[diff]} vs {drows[diff]}")
-        for i, c in enumerate(dcols_raw):
-            dt, st = str(dtypes_raw[i]).upper(), stypes.get(c, "?")
-            if (dt, st) not in OK_TYPE_PAIRS:
-                probs.append(f"type {c}: duckdb {dt} vs spark {st}")
+            probs.append(f"ERROR {type(exc).__name__}: {exc}")
         if probs:
             bad.append(name)
             print(f"{name:28s} MISMATCH: " + "; ".join(probs))
         else:
-            print(f"{name:28s} ok ({len(srows)} rows)")
+            print(f"{name:28s} ok ({n_rows} rows)")
         # entries that cache intermediates (fuzzy_dedup's reps/signature/
         # candidate frames) must not accumulate blocks across a 186-entry
         # sweep — same hygiene as tools/plan_lint.py (round-8 advice)
