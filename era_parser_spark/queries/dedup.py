@@ -178,7 +178,7 @@ def dd3_minhash_lsh(spark, sf_dir):
     )
 
 
-# dd5 under a second registry name that callers use: same builder,
+# dd5 under a second registry name that callers use: same query function,
 # same oracle.
 register("dd6_dup_clusters_alternating", oracle=_DUP_CLUSTERS_ORACLE)(
     dd5_dup_clusters
