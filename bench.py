@@ -192,7 +192,7 @@ def bench_era_parse(spark, times: dict[str, float]) -> dict:
     typed blocks DF -> attestations explode + aggregate.  The reference's
     single-process baseline is ~7k blocks/s on deneb
     (docs/NETWORK_FORKS.md:272); this measures the same work distributed."""
-    from era_parser_spark.operators.normalize import attestations_table
+    from era_parser_spark.operators.normalize import TABLES
     from era_parser_spark.sources.era import read_era_blocks
 
     d, n_blocks = _era_bench_dir()
@@ -223,7 +223,7 @@ def bench_era_parse(spark, times: dict[str, float]) -> dict:
     times["era_parse_scan_warm"] = round(dt_warm, 3)
 
     t1 = time.perf_counter()
-    atts = attestations_table(
+    atts = TABLES["attestations"].build(
         read_era_blocks(spark, d, glob="*.era", tables=["attestations"])
     )
     atts.groupBy("committee_index").count().write.format("noop").mode("overwrite").save()

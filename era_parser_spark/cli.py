@@ -38,7 +38,7 @@ def _resolve_input(path: str, network: str | None):
 
 
 def cmd_parse(args) -> int:
-    from era_parser_spark.operators.normalize import TABLE_BUILDERS, all_tables, wide_blocks_table
+    from era_parser_spark.operators.normalize import TABLES, all_tables, wide_blocks_table
     from era_parser_spark.sinks.writers import write_separate_datasets
     from era_parser_spark.sources.era import read_era_blocks
 
@@ -46,9 +46,9 @@ def cmd_parse(args) -> int:
     args.input = _resolve_input(args.input, args.network)
     tables = None
     if args.table not in ("all-blocks", "blocks-wide"):
-        if args.table not in TABLE_BUILDERS:
+        if args.table not in TABLES:
             print(f"unknown table {args.table!r}; one of: all-blocks, blocks-wide, "
-                  + ", ".join(TABLE_BUILDERS), file=sys.stderr)
+                  + ", ".join(TABLES), file=sys.stderr)
             return 2
         tables = [args.table]
     slot_range = None

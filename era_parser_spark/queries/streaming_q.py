@@ -11,7 +11,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from era_parser_spark.queries.registry import register, table
+from era_parser_spark.queries.registry import read_source, register, table
 
 
 def _stream_src_dir(prefix: str, sf_dir: str, table_file: str = "events.parquet") -> str:
@@ -35,6 +35,20 @@ def _stream_src_dir(prefix: str, sf_dir: str, table_file: str = "events.parquet"
     return d
 
 
+def _stream(spark, sf_dir: str, name: str, prefix: str):
+    """Streaming read of benchmark table `name`, with read_source's µs
+    timestamps.  The file source wants an explicit schema (the batch
+    read's) and a directory, here one exposing the single table file (a
+    real deployment streams a growing table dir)."""
+    table_file = f"{name}.parquet"
+
+    def read():
+        schema = spark.read.parquet(f"{sf_dir}/{table_file}").schema
+        return spark.readStream.schema(schema).parquet(_stream_src_dir(prefix, sf_dir, table_file))
+
+    return read_source(spark, name, read)
+
+
 @register(
     "st1_stream_windowed_counts",
     oracle="""
@@ -50,18 +64,11 @@ def st1_stream_windowed_counts(spark, sf_dir):
     Trigger.AvailableNow (real micro-batched streaming execution), returned
     as the final in-memory table.  Spark's window() is epoch-aligned, so
     the oracle is a plain floor-to-hour GROUP BY."""
-    # streaming needs an explicit schema; reuse the batch loader's (which
-    # also resolves the nanos-timestamp conversion for `ts`)
-    batch = table(spark, sf_dir, "events")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the streaming file source wants a directory; expose the single table
-    # file through one (a real deployment streams a growing table dir)
-    stream_dir = _stream_src_dir("st1", sf_dir)
-    stream = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    from era_parser_spark.streaming.incremental import run_stream_once
+
     agg = (
-        stream.groupBy(F.window("ts", "1 hour"), "event_type")
+        _stream(spark, sf_dir, "events", "st1")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             F.col("window.start").alias("window_start"),
@@ -69,17 +76,7 @@ def st1_stream_windowed_counts(spark, sf_dir):
             "cnt",
         )
     )
-    name = f"st1_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert batch is not None  # loader call above also validated the path
-    return spark.sql(f"SELECT * FROM {name}")
+    return run_stream_once(agg, f"st1_out_{uuid.uuid4().hex[:8]}", "complete")
 
 
 @register(
@@ -107,15 +104,9 @@ def st2_stateful_gap_monitor(spark, sf_dir):
     streaming twin of e10, reference gap-detection family)."""
     from era_parser_spark.streaming.incremental import run_stream_once, slot_gap_monitor
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st2", sf_dir)
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stream_dir)
-        .select(
-            F.col("event_type").alias("network"),
-            F.col("event_id").alias("slot"),
-        )
+    stream = _stream(spark, sf_dir, "events", "st2").select(
+        F.col("event_type").alias("network"),
+        F.col("event_id").alias("slot"),
     )
     return run_stream_once(slot_gap_monitor(stream), f"st2_{uuid.uuid4().hex[:8]}")
 
@@ -155,16 +146,10 @@ def st3_stream_sessionize(spark, sf_dir):
     an exact SQL oracle (the streaming twin of x2_sessionize)."""
     from era_parser_spark.streaming.incremental import run_stream_once, session_monitor
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st3", sf_dir)
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stream_dir)
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        )
+    stream = _stream(spark, sf_dir, "events", "st3").select(
+        "user_id",
+        "event_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
     )
     return run_stream_once(session_monitor(stream), f"st3_{uuid.uuid4().hex[:8]}")
 
@@ -187,15 +172,9 @@ def st4_stream_exact_dedup(spark, sf_dir):
     tests/test_state_sinks_streaming.py)."""
     from era_parser_spark.streaming.incremental import digest_dedup_monitor, run_stream_once
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream_dir = _stream_src_dir("st4", sf_dir, "documents.parquet")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stream_dir)
-        .select(
-            F.md5(F.col("text").cast("binary")).alias("digest"),
-            "doc_id",
-        )
+    stream = _stream(spark, sf_dir, "documents", "st4").select(
+        F.md5(F.col("text").cast("binary")).alias("digest"),
+        "doc_id",
     )
     return run_stream_once(digest_dedup_monitor(stream), f"st4_{uuid.uuid4().hex[:8]}")
 
@@ -237,15 +216,9 @@ def st5_stream_kmv_distinct(spark, sf_dir):
     from era_parser_spark.operators.dedup import md5_60bit
     from era_parser_spark.streaming.incremental import kmv_monitor, run_stream_once
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st5", sf_dir)
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stream_dir)
-        .select(
-            F.col("event_type").alias("grp"),
-            md5_60bit(F.col("user_id").cast("string")).alias("h"),
-        )
+    stream = _stream(spark, sf_dir, "events", "st5").select(
+        F.col("event_type").alias("grp"),
+        md5_60bit(F.col("user_id").cast("string")).alias("h"),
     )
     out = run_stream_once(kmv_monitor(stream, k=32), f"st5_{uuid.uuid4().hex[:8]}")
     return out.select(
@@ -287,19 +260,11 @@ def st6_stream_topk(spark, sf_dir):
     from era_parser_spark.queries.similarity import _query_vec
     from era_parser_spark.streaming.incremental import run_stream_once, topk_monitor
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    stream_dir = _stream_src_dir("st6", sf_dir, table_file="embeddings.parquet")
     q = lit_vector(_query_vec(spark, sf_dir, 0))
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stream_dir)
-        .select(
-            (F.col("label") % 4).cast("long").alias("grp"),
-            "vec_id",
-            quantized_cosine(
-                cosine_expr(F.col("embedding").cast("array<double>"), q)
-            ).alias("score"),
-        )
+    stream = _stream(spark, sf_dir, "embeddings", "st6").select(
+        (F.col("label") % 4).cast("long").alias("grp"),
+        "vec_id",
+        quantized_cosine(cosine_expr(F.col("embedding").cast("array<double>"), q)).alias("score"),
     )
     out = run_stream_once(topk_monitor(stream, k=5), f"st6_{uuid.uuid4().hex[:8]}")
     # final snapshot = each group's last state update (a window, not a
@@ -344,11 +309,8 @@ def st7_stream_countmin(spark, sf_dir):
     from era_parser_spark.operators.sketch import countmin_cells_expr
     from era_parser_spark.streaming.incremental import run_stream_once
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st7", sf_dir)
     stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stream_dir)
+        _stream(spark, sf_dir, "events", "st7")
         .filter(F.col("user_id").isNotNull())
         .select(F.explode(countmin_cells_expr("user_id", 4, 64)).alias("c"))
         .groupBy(F.col("c.row").alias("row"), F.col("c.col").alias("col"))
@@ -383,15 +345,10 @@ def st8_stream_stream_join(spark, sf_dir):
     the property that makes this run forever on a live ingest."""
     from era_parser_spark.streaming.incremental import attribution_join, run_stream_once
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st8", sf_dir)
-
     def _src():
-        s = spark.readStream.schema(raw_schema).parquet(stream_dir)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         # watermarks require TIMESTAMP (not NTZ); the tz shift cancels —
         # both sides shift identically and only the µs delta is emitted
+        s = _stream(spark, sf_dir, "events", "st8")
         return s.withColumn("ts", F.col("ts").cast("timestamp"))
 
     views = _src().filter(F.col("event_type") == "view").select(
@@ -462,11 +419,8 @@ def st9_stream_near_dedup(spark, sf_dir):
         run_stream_once,
     )
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream_dir = _stream_src_dir("st9", sf_dir, "documents.parquet")
     stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stream_dir)
+        _stream(spark, sf_dir, "documents", "st9")
         .select(
             F.col("doc_id"),
             F.explode(row_band_buckets("text")).alias("bb"),
@@ -509,11 +463,7 @@ def st10_stream_watermark_dedup(spark, sf_dir):
     tests/test_round7_ops.py."""
     from era_parser_spark.streaming.incremental import run_stream_once
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st10", sf_dir)
-    s = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    if dict(s.dtypes).get("ts") == "bigint":
-        s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    s = _stream(spark, sf_dir, "events", "st10")
     # watermarks need TIMESTAMP (not NTZ); identity is unaffected
     s = s.withColumn("ts", F.col("ts").cast("timestamp"))
     dedup = (
@@ -564,11 +514,7 @@ def st11_stream_session_window(spark, sf_dir):
     oracle note)."""
     from era_parser_spark.streaming.incremental import run_stream_once
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st11", sf_dir)
-    s = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    if dict(s.dtypes).get("ts") == "bigint":
-        s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    s = _stream(spark, sf_dir, "events", "st11")
     s = s.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
         s.withWatermark("ts", "1 hour")
@@ -625,14 +571,7 @@ def st12_stream_window_funnel(spark, sf_dir):
     (streaming/incremental.py::funnel_monitor)."""
     from era_parser_spark.streaming.incremental import funnel_monitor, run_stream_once
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st12", sf_dir)
-    s = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    # the bigint-nanos guard every ts-reading st sibling applies (a raw
-    # nanos column cast straight to timestamp reads as SECONDS)
-    if dict(s.dtypes).get("ts") == "bigint":
-        s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    stream = s.select(
+    stream = _stream(spark, sf_dir, "events", "st12").select(
         "user_id",
         "event_id",
         "event_type",
@@ -674,6 +613,7 @@ def st13_stream_cluster_counts(spark, sf_dir):
     agg, Trigger.AvailableNow (the st1 execution shape); at scale the
     same query runs unbounded with a watermark + append sink."""
     from era_parser_spark.operators.similarity import kmeans_fit
+    from era_parser_spark.streaming.incremental import run_stream_once
 
     batch = table(spark, sf_dir, "embeddings")
     cids, C, dim = kmeans_fit(
@@ -691,9 +631,7 @@ def st13_stream_cluster_counts(spark, sf_dir):
 
     from era_parser_spark.operators.similarity import _quantized_vectors
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    stream_dir = _stream_src_dir("st13", sf_dir, table_file="embeddings.parquet")
-    stream = spark.readStream.schema(raw_schema).parquet(stream_dir)
+    stream = _stream(spark, sf_dir, "embeddings", "st13")
     # the SAME quantize+guard the trainer used (pure filter+select, so it
     # composes with a streaming frame) — one definition, no drift between
     # the model and what it serves
@@ -721,16 +659,7 @@ def st13_stream_cluster_counts(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("window.start").alias("window_start"), "cluster", "cnt")
     )
-    name = f"st13_out_{uuid.uuid4().hex[:8]}"
-    qy = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    qy.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return run_stream_once(agg, f"st13_out_{uuid.uuid4().hex[:8]}", "complete")
 
 
 @register(
@@ -762,12 +691,7 @@ def st14_stream_sequence_count(spark, sf_dir):
         sequence_count_monitor,
     )
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st14", sf_dir)
-    s = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    if dict(s.dtypes).get("ts") == "bigint":
-        s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    stream = s.select(
+    stream = _stream(spark, sf_dir, "events", "st14").select(
         "user_id",
         "event_id",
         "event_type",
@@ -836,6 +760,7 @@ def st15_stream_mad_outlier_counts(spark, sf_dir):
     open hour windows only — the fence itself is frozen state of size
     O(types), refreshed by re-training (the st13 deployment note)."""
     from era_parser_spark.queries.extended import mad_medians, mad_quantized
+    from era_parser_spark.streaming.incremental import run_stream_once
 
     batch = table(spark, sf_dir, "events")
     med, mad = mad_medians(mad_quantized(batch))
@@ -844,11 +769,7 @@ def st15_stream_mad_outlier_counts(spark, sf_dir):
         for r in med.join(mad, "event_type").collect()
     }
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st15", sf_dir)
-    s = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    if dict(s.dtypes).get("ts") == "bigint":
-        s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    s = _stream(spark, sf_dir, "events", "st15")
     s = s.withColumn("ts", F.col("ts").cast("timestamp")).filter(
         F.col("value").isNotNull()
     )
@@ -878,16 +799,7 @@ def st15_stream_mad_outlier_counts(spark, sf_dir):
             "n_outliers",
         )
     )
-    name = f"st15_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return run_stream_once(agg, f"st15_out_{uuid.uuid4().hex[:8]}", "complete")
 
 
 @register(
@@ -935,13 +847,9 @@ def st16_stream_asof_enrich(spark, sf_dir):
         run_stream_once,
     )
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_src_dir("st16", sf_dir)
-    s = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    if dict(s.dtypes).get("ts") == "bigint":
-        s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     stream = (
-        s.withColumn("ts", F.col("ts").cast("timestamp"))
+        _stream(spark, sf_dir, "events", "st16")
+        .withColumn("ts", F.col("ts").cast("timestamp"))
         .filter(F.col("ts").isNotNull())
         .select(
             "user_id",
@@ -998,10 +906,7 @@ def st17_stream_token_budget(spark, sf_dir):
         token_budget_monitor,
     )
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream_dir = _stream_src_dir("st17", sf_dir, table_file="documents.parquet")
-    s = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    stream = s.select(
+    stream = _stream(spark, sf_dir, "documents", "st17").select(
         "source", "doc_id", token_count_col("text").cast("long").alias("n_tokens")
     ).filter(F.col("n_tokens").isNotNull())
     return run_stream_once(

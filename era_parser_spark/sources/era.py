@@ -12,9 +12,9 @@ Pipeline (reference lifecycle §3.1, rebuilt Spark-shaped):
 Scale model: one era file (= 8192 slots, hundreds of MB) is one task; a
 100 TB archive is ~hundreds of thousands of files, so parallelism scales
 with the file count and no stage shuffles raw payloads.  Column pruning is
-pushed into the SSZ layer via `tables=`/`body_include=` — the scan only
-decodes the body fields the requested tables need (the reference always
-decodes everything).
+pushed into the SSZ layer via `tables=` — the scan only decodes the body
+fields the requested tables read, as their declarations in
+operators/normalize.py state (the reference always decodes everything).
 
 The Spark schema is GENERATED from the SSZ schema (one source of truth);
 the Arrow schema the kernel emits is derived from the Spark schema with
@@ -43,27 +43,6 @@ from era_parser_spark.parsing import ssz
 from era_parser_spark.parsing.arrow_direct import ColumnarBlockCollector
 from era_parser_spark.parsing.beacon import block_schema
 from era_parser_spark.session import rows_frame
-
-# body fields each normalized table needs (drives pruned decode)
-TABLE_BODY_FIELDS: dict[str, set[str]] = {
-    "blocks": {"eth1_data", "graffiti", "randao_reveal"},
-    "sync_aggregates": {"sync_aggregate"},
-    "execution_payloads": {"execution_payload"},
-    "transactions": {"execution_payload"},
-    "withdrawals": {"execution_payload"},
-    "attestations": {"attestations"},
-    "deposits": {"deposits"},
-    "voluntary_exits": {"voluntary_exits"},
-    "proposer_slashings": {"proposer_slashings"},
-    "attester_slashings": {"attester_slashings"},
-    "bls_changes": {"bls_to_execution_changes"},
-    "blob_commitments": {"blob_kzg_commitments"},
-    "deposit_requests": {"execution_requests"},
-    "withdrawal_requests": {"execution_requests"},
-    "consolidation_requests": {"execution_requests"},
-}
-ALL_TABLES = tuple(TABLE_BODY_FIELDS)
-
 
 def ssz_to_spark(t: ssz.SSZType) -> T.DataType:
     """Spark type from an SSZ type (the schema single-source-of-truth)."""
@@ -172,11 +151,14 @@ def _era_path_filter(slot_range: tuple[int, int]) -> F.Column:
     return F.coalesce(keep, F.lit(True))
 
 
+# blocks per Arrow batch the parse kernel yields
+_BATCH_ROWS = 2048
+
+
 def _parser(
     network: str | None,
     body_include: set[str] | None,
     on_error: str = "skip",
-    batch_rows: int = 2048,
     slot_range: tuple[int, int] | None = None,
     error_counter=None,
 ):
@@ -327,7 +309,7 @@ def _parser(
                             len(raw),
                         )
                     )
-                    if len(scalars) >= batch_rows:
+                    if len(scalars) >= _BATCH_ROWS:
                         yield flush()
                 if n_bad:
                     print(
@@ -353,18 +335,16 @@ def read_era_blocks(
     paths: str | list[str],
     network: str | None = None,
     tables: list[str] | None = None,
-    body_include: set[str] | None = None,
     glob: str | None = None,
     on_error: str = "skip",
     slot_range: tuple[int, int] | None = None,
     partitions: int | None = None,
     error_counter=None,
-    batch_rows: int = 2048,
 ) -> DataFrame:
     """Era files -> blocks DataFrame (typed, fork-superset body struct).
 
     `tables` prunes the SSZ decode to only the body fields those normalized
-    tables need; `glob` filters file names (A6 glob_batch_source);
+    tables read (`normalize.body_fields`); `glob` filters file names (A6 glob_batch_source);
     `on_error='skip'` isolates per-block parse failures (logged + counted
     on executor stderr), `'fail'` surfaces them.  `slot_range=(lo, hi)`
     (inclusive) is a two-level pushdown: era files whose slot span cannot
@@ -381,21 +361,19 @@ def read_era_blocks(
     schema (parsing/arrow_direct.py); its output is differential-tested
     equal to the generic SSZ walk on every fork.
     """
+    from era_parser_spark.operators.normalize import body_fields
     from era_parser_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    if tables is not None and body_include is None:
-        body_include = set()
-        for t in tables:
-            body_include |= TABLE_BODY_FIELDS[t]
+    body_include = None if tables is None else body_fields(tables)
     src = _source_rows(spark, paths, glob)
     if slot_range is not None:
         src = src.filter(_era_path_filter(slot_range))
     if partitions is not None:
         src = src.repartition(partitions)
     parsed = src.mapInArrow(
-        _parser(network, body_include, on_error, batch_rows=batch_rows,
-                slot_range=slot_range, error_counter=error_counter),
+        _parser(network, body_include, on_error, slot_range=slot_range,
+                error_counter=error_counter),
         _PARSE_OUT_SCHEMA,
     )
     block = F.col("block")

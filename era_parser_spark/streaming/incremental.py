@@ -100,7 +100,7 @@ def process_eras_batch(
     aggregate (two jobs under AQE: its shuffle map stage and its result)
     and two state appends — no job per table besides its write.
     """
-    from era_parser_spark.operators.normalize import ROWS_PER_BLOCK, TABLE_BUILDERS
+    from era_parser_spark.operators.normalize import TABLES
     from era_parser_spark.sinks.writers import write_parquet
 
     spark = store.spark
@@ -133,15 +133,15 @@ def process_eras_batch(
         decoded.write.mode("overwrite").parquet(staging)
         # the schema is known, so reading it back needs no footer-inference job
         blocks = spark.read.schema(decoded.schema).parquet(staging)
-        names = tables or list(TABLE_BUILDERS)
+        names = tables or list(TABLES)
         # Every table's rows per era from ONE aggregate over the staging
-        # frame: each builder's row count per block is a null test or the
-        # size of the list it explodes, so summing it per era equals the
-        # built table's groupBy(era).count() (differential-tested) without
-        # running the 15 builders.
+        # frame: a table's rows per block, derived from its declaration, is
+        # 1, a null test or the size of the list it explodes, so summing it
+        # per era equals the built table's groupBy(era).count()
+        # (differential-tested) without running the 15 builders.
         era_number = F.expr("slot div 8192")
         era_rows = blocks.groupBy(era_number.alias("era_number")).agg(
-            *[F.sum(ROWS_PER_BLOCK[name]()).alias(name) for name in names]
+            *[F.sum(TABLES[name].rows_per_block()).alias(name) for name in names]
         ).collect()
         per_era = {r.era_number: r for r in era_rows}
         counts = {
@@ -152,7 +152,7 @@ def process_eras_batch(
             # empty tables are skipped (reference skips them too, A13)
             if any(r[name] for r in era_rows):
                 write_parquet(
-                    TABLE_BUILDERS[name](blocks).withColumn("era_number", era_number),
+                    TABLES[name].build(blocks).withColumn("era_number", era_number),
                     f"{out_base}/{name}",
                     partition_by_month=False,
                     partition_by_era=True,

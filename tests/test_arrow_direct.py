@@ -22,7 +22,7 @@ from era_parser_spark.parsing.beacon import (
     parse_block,
 )
 from era_parser_spark.parsing.ssz import SSZError
-from era_parser_spark.sources.era import _PARSE_OUT_ARROW, TABLE_BODY_FIELDS
+from era_parser_spark.sources.era import _PARSE_OUT_ARROW
 from era_parser_spark.testing.era_gen import era_filename, make_block_doc, write_synthetic_era
 
 BLOCK_TYPE = _PARSE_OUT_ARROW.field("block").type
@@ -31,9 +31,23 @@ BLOCK_TYPE = _PARSE_OUT_ARROW.field("block").type
 FORK_ERAS = [0, 1, 800, 1600, 1800, 2905]
 
 _BLOCKS_FIELDS = {"eth1_data", "graffiti", "randao_reveal"}
+# the body fields the 15 tables read: each table's body path, plus the
+# three the blocks table names
+_ALL_TABLES_FIELDS = _BLOCKS_FIELDS | {
+    "sync_aggregate",
+    "execution_payload",
+    "attestations",
+    "deposits",
+    "voluntary_exits",
+    "proposer_slashings",
+    "attester_slashings",
+    "bls_to_execution_changes",
+    "blob_kzg_commitments",
+    "execution_requests",
+}
 ALL_INCLUDES = [
     None,  # full bodies
-    set().union(*TABLE_BODY_FIELDS.values()),  # all 15 tables
+    _ALL_TABLES_FIELDS,  # all 15 tables
     {"attestations"},
     _BLOCKS_FIELDS,
     _BLOCKS_FIELDS | {"attestations"},
@@ -312,10 +326,11 @@ def test_spark_scan_differential(spark, tmp_path):
     for era in (0, 1600, 2905):
         paths.append(os.path.join(d, era_filename("gnosis", era)))
         write_synthetic_era(paths[-1], era, "gnosis", blocks=12)
-    for tables in (None, ["blocks", "attestations"], ["execution_payloads"]):
-        include = None
-        if tables is not None:
-            include = set().union(*(TABLE_BODY_FIELDS[t] for t in tables))
+    for tables, include in (
+        (None, None),
+        (["blocks", "attestations"], _BLOCKS_FIELDS | {"attestations"}),
+        (["execution_payloads"], {"execution_payload"}),
+    ):
         rows = read_era_blocks(spark, d, glob="*.era", tables=tables).select(
             "slot", "version", F.col("timestamp_utc").cast("long"), "proposer_index",
             "parent_root", "state_root", "signature", "body", "decompressed_size",

@@ -106,26 +106,46 @@ def test_normalized_counts_match_docs(blocks_df, era_dir):
     assert tables["transactions"].count() == ntx
 
 
+ALL_TABLES = [
+    "blocks",
+    "sync_aggregates",
+    "execution_payloads",
+    "transactions",
+    "withdrawals",
+    "attestations",
+    "deposits",
+    "voluntary_exits",
+    "proposer_slashings",
+    "attester_slashings",
+    "bls_changes",
+    "blob_commitments",
+    "deposit_requests",
+    "withdrawal_requests",
+    "consolidation_requests",
+]
+
+
 def test_rows_per_block_matches_builders(spark, blocks_df, tmp_path):
     """Differential pin for run_incremental's one count aggregate: per era,
-    summing ROWS_PER_BLOCK[t] over the blocks frame equals the built
-    table's groupBy(era).count(), for all 15 tables over a phase0 ->
+    summing TABLES[t].rows_per_block() over the blocks frame equals the
+    built table's groupBy(era).count(), for all 15 tables over a phase0 ->
     electra corpus (null payloads and sync aggregates before their forks,
     empty lists, electra execution requests).  Both sides read a parquet
     copy of the blocks, as the batch path reads its staging parquet."""
-    from era_parser_spark.operators.normalize import ROWS_PER_BLOCK, TABLE_BUILDERS
+    from era_parser_spark.operators.normalize import TABLES
 
     staging = str(tmp_path / "staging")
     blocks_df.write.parquet(staging)
     blocks = spark.read.parquet(staging)
     era = F.expr("slot div 8192").alias("era_number")
     summed = blocks.groupBy(era).agg(
-        *[F.sum(ROWS_PER_BLOCK[t]()).alias(t) for t in TABLE_BUILDERS]
+        *[F.sum(table.rows_per_block()).alias(t) for t, table in TABLES.items()]
     ).collect()
     assert sorted(r.era_number for r in summed) == sorted(ERA_FORKS)
-    assert set(ROWS_PER_BLOCK) == set(TABLE_BUILDERS)
-    for t, build in TABLE_BUILDERS.items():
-        built = {r.era_number: r["count"] for r in build(blocks).groupBy(era).count().collect()}
+    assert list(TABLES) == ALL_TABLES
+    for t, table in TABLES.items():
+        built = table.build(blocks).groupBy(era).count().collect()
+        built = {r.era_number: r["count"] for r in built}
         got = {r.era_number: r[t] for r in summed}
         assert got == {e: built.get(e, 0) for e in ERA_FORKS}, t
         assert sum(got.values()) > 0, t  # every table is exercised
@@ -135,11 +155,31 @@ def test_rows_per_block_matches_builders(spark, blocks_df, tmp_path):
     assert per_era[1300]["deposit_requests"] == 0
 
 
+def test_pruned_tables_equal_full_scan(spark, blocks_df, era_dir):
+    """Each of the 15 tables built from a scan pruned to its own body
+    fields (`read_era_blocks(tables=[t])`) equals the table built from the
+    full scan, schema and rows, over the phase0 -> electra corpus: a
+    pruning set that misses a field the table reads would leave that
+    column null."""
+    from collections import Counter
+
+    from era_parser_spark.operators.normalize import TABLES
+    from era_parser_spark.sources.era import read_era_blocks
+
+    d, _ = era_dir
+    for t in ALL_TABLES:
+        pruned = TABLES[t].build(read_era_blocks(spark, d, glob="*.era", tables=[t]))
+        full = TABLES[t].build(blocks_df)
+        assert pruned.schema == full.schema, t
+        rows = Counter(map(tuple, full.collect()))
+        assert Counter(map(tuple, pruned.collect())) == rows and rows, t
+
+
 def test_attester_slashing_invariants(blocks_df, era_dir):
-    from era_parser_spark.operators.normalize import attester_slashings_table
+    from era_parser_spark.operators.normalize import TABLES
 
     _, docs = era_dir
-    rows = attester_slashings_table(blocks_df).collect()
+    rows = TABLES["attester_slashings"].build(blocks_df).collect()
     by_key = {(r.slot, r.slashing_index): r for r in rows}
     import json as _json
 
@@ -156,13 +196,6 @@ def test_attester_slashing_invariants(blocks_df, era_dir):
 
 
 def test_participating_validators_popcount(blocks_df):
-    rows = (
-        blocks_df.sparkSession.createDataFrame(
-            [(1, "0x" + "ff" * 64), (2, "0x" + "00" * 64), (3, "0x0f03")], ["id", "bits"]
-        )
-        .select("id", F.col("bits").alias("h"))
-        .collect()
-    )
     from era_parser_spark.operators.normalize import popcount_hex
 
     df = blocks_df.sparkSession.createDataFrame(
@@ -172,9 +205,9 @@ def test_participating_validators_popcount(blocks_df):
     got = {r.id: r.pc for r in df.collect()}
     assert got == {1: 512, 2: 0, 3: 6, 4: None}
 
-    from era_parser_spark.operators.normalize import sync_aggregates_table
+    from era_parser_spark.operators.normalize import TABLES
 
-    for r in sync_aggregates_table(blocks_df).limit(20).collect():
+    for r in TABLES["sync_aggregates"].build(blocks_df).limit(20).collect():
         expected = bin(int(r.sync_committee_bits[2:], 16)).count("1")
         assert r.participating_validators == expected
 
@@ -188,10 +221,10 @@ def test_pruned_scan(spark, era_dir):
     assert row.body.attestations is not None or True  # may be empty list
     assert row.body.execution_payload is None  # pruned away
     n_atts = sum(len(x["message"]["body"]["attestations"]) for x in docs[2700])
-    from era_parser_spark.operators.normalize import attestations_table
+    from era_parser_spark.operators.normalize import TABLES
 
     assert (
-        attestations_table(df.filter(F.col("era_number") == 2700)).count() == n_atts
+        TABLES["attestations"].build(df.filter(F.col("era_number") == 2700)).count() == n_atts
     )
 
 

@@ -140,7 +140,6 @@ def test_sinks_shapes(spark, era_dir, tmp_path_factory):
 
 
 def test_streaming_window_and_gap_monitor(spark, era_dir, tmp_path_factory):
-    from era_parser_spark.operators.normalize import blocks_table
     from era_parser_spark.sources.era import read_era_blocks
     from era_parser_spark.streaming.incremental import (
         run_stream_once,
@@ -863,7 +862,7 @@ def test_batched_run_job_counts(spark, chaos_era_dir, tmp_path_factory, monkeypa
     state read (the state path does not exist yet); a resume over the
     completed state runs one job, the state read.  A per-era run is the
     same batch once per era: 5 non-write jobs each."""
-    from era_parser_spark.operators.normalize import TABLE_BUILDERS
+    from era_parser_spark.operators.normalize import TABLES
 
     base = tmp_path_factory.mktemp("jobs_pin")
     one, one_run, one_writes = _run_counting_jobs(
@@ -876,8 +875,8 @@ def test_batched_run_job_counts(spark, chaos_era_dir, tmp_path_factory, monkeypa
     )
     assert sorted(fresh) == sorted(one) == [1400, 1401]
     assert fresh[1400]["blocks"] == one[1400]["blocks"]
-    assert set(fresh[1400]) == set(TABLE_BUILDERS)
-    nonempty = [t for t in TABLE_BUILDERS if fresh[1400][t] + fresh[1401][t] > 0]
+    assert set(fresh[1400]) == set(TABLES)
+    nonempty = [t for t in TABLES if fresh[1400][t] + fresh[1401][t] > 0]
     assert len(one_writes) == 1
     assert len(write_jobs) == len(nonempty)
     # staging write + count aggregate (shuffle map stage + result) + 2 appends
