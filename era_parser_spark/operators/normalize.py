@@ -1,19 +1,22 @@
 """Normalizer: parsed-blocks DataFrame -> the 15 flat tables.
 
 Each table is declared once, in `TABLES`: the body path its rows come
-from and the columns it projects.  Its builder, its rows per block (one
-aggregate counts every table of an ingest without building them) and the
-body fields a pruned scan decodes for it (`sources/era.py`) all derive
-from that record, so a new table is one `TABLES` entry.
+from and the columns it projects.  Its rows per block as one
+array<struct> column (`Table.rows`), and from that its builder and its
+row count per block, plus the body fields a pruned scan decodes for it
+(`sources/era.py`), all derive from that record, so a new table is one
+`TABLES` entry.  Ingest writes `rows()` of every table from one job
+(`streaming/incremental.py`).
 
 Column lists follow FIXTURES.md / the reference's extraction
 (era_parser/core/processor.py:101-399); every row carries timestamp_utc
 (the single partitioning column, reference README.md:228).
 
-Everything here is select/filter/posexplode — pure Catalyst, no Python.
-posexplode supplies the positional *_index columns the reference computes
-with enumerate().  `participating_validators` is a real popcount (the
-reference schema declares it but never fills it — SURVEY §2.C15).
+Everything here is Catalyst expressions, no Python.  `transform`'s
+element position supplies the positional *_index columns the reference
+computes with enumerate().  `participating_validators` is a real
+popcount (the reference schema declares it but never fills it — SURVEY
+§2.C15).
 """
 
 from __future__ import annotations
@@ -59,32 +62,37 @@ class Table:
     present: str | None = None
     reads: tuple[str, ...] = ()
 
-    def build(self, df: DataFrame) -> DataFrame:
+    def rows(self) -> Column:
+        """This table's rows of each block, as one array<struct> column over
+        the blocks frame: one struct per list element (with its position as
+        a long) for `explode`, a one-element array for a block carrying
+        `present` (null otherwise), one struct per block with neither.
+        `build` inlines it; ingest writes it straight to the table's files."""
+
+        def row(r: Column, i: Column | None = None) -> Column:
+            return F.struct(*[
+                i.cast("long").alias(c) if isinstance(c, str) and c == self.index else c
+                for c in self.columns(r)
+            ])
+
         if self.explode is not None:
             items = F.col(f"body.{self.explode}")
             if self.index is None:
-                df = df.select("*", F.explode(items).alias("_r"))
-            else:
-                df = df.select("*", F.posexplode(items).alias(self.index, "_r"))
-                df = df.withColumn(self.index, F.col(self.index).cast("long"))
-            return df.select(*self.columns(F.col("_r")))
+                return F.transform(items, lambda r: row(r))
+            return F.transform(items, lambda r, i: row(r, i))
         if self.present is not None:
             struct = F.col(f"body.{self.present}")
-            return df.filter(struct.isNotNull()).select(*self.columns(struct))
-        return df.select(*self.columns(F.col("body")))
+            return F.when(struct.isNotNull(), F.array(row(struct)))
+        return F.array(row(F.col("body")))
+
+    def build(self, df: DataFrame) -> DataFrame:
+        return df.select(F.inline(self.rows()))
 
     def rows_per_block(self) -> Column:
         """Rows build() emits per block, as a column over the same blocks
-        frame.  Summed per era it equals the built table's row count per
-        era (differential-tested), so one aggregate counts every table
-        without running the builders."""
-        if self.explode is not None:
-            # explode emits nothing for a null list, and size(null) is -1
-            # under spark.sql.legacy.sizeOfNull
-            return F.size(F.coalesce(F.col(f"body.{self.explode}"), F.array()))
-        if self.present is not None:
-            return F.when(F.col(f"body.{self.present}").isNotNull(), 1).otherwise(0)
-        return F.lit(1)
+        frame: the size of `rows()`, 0 where it is null (size(null) is -1
+        under spark.sql.legacy.sizeOfNull)."""
+        return F.size(F.coalesce(self.rows(), F.array()))
 
 
 def _signed_header(s: Column, i: int) -> list[Column]:

@@ -5,8 +5,11 @@ exporters) and bulk-inserts to ClickHouse.  Here every sink is a
 DataFrameWriter plan:
 
 * parquet: month-partitioned (the reference's ClickHouse PARTITION BY
-  toStartOfMonth(timestamp_utc)) + era_number subpartition for idempotent
-  per-era overwrite (reference's delete-then-insert, D3).
+  toStartOfMonth(timestamp_utc)).
+* era tables: `write_era_tables` writes every table of an ingest batch
+  from one Spark job, one file per (table, era) per task, and the driver
+  swaps each era_number partition for exactly the files the tasks
+  reported (`commit_partitions`) — the reference's delete-then-insert, D3.
 * jsonl/csv: native writers; metadata travels in a sidecar file instead of
   `#` comment headers (which break parallel readers).
 * single-document JSON (A9): exact reference shape, driver-assembled —
@@ -21,6 +24,10 @@ from __future__ import annotations
 import json
 import os
 import time
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,30 +44,125 @@ def write_parquet(
     df: DataFrame,
     path: str,
     partition_by_month: bool = True,
-    partition_by_era: bool = False,
     mode: str = "overwrite",
     metadata: dict | None = None,
 ) -> None:
-    """Partitioned parquet sink; Catalyst prunes partitions on read filters.
-
-    With partition_by_era the write overwrites partitions dynamically (a
-    writer option, so the session conf is left as the caller set it):
-    re-writing one era replaces exactly that era's partition (D3 semantics).
-    """
-    parts = []
+    """Partitioned parquet sink; Catalyst prunes partitions on read filters."""
+    writer = df.write
     if partition_by_month and "timestamp_utc" in df.columns:
-        df = with_month(df)
-        parts.append(MONTH_COL)
-    if partition_by_era and "era_number" in df.columns:
-        parts.append("era_number")
-    writer = df.write.mode(mode)
-    if parts:
-        writer = writer.partitionBy(*parts)
-    if "era_number" in parts:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.parquet(path)
+        writer = with_month(df).write.partitionBy(MONTH_COL)
+    writer.mode(mode).parquet(path)
     if metadata is not None:
         _write_sidecar(path, metadata)
+
+
+# --- era tables: one fan-out job, a driver-side partition swap ---------------
+
+MANIFEST = pa.schema(
+    [("table", pa.string()), ("era_number", pa.int64()), ("file", pa.string()),
+     ("rows", pa.int64())]
+)
+
+
+def warehouse_fs(base: str) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow filesystem and root path `base` names, for task-side
+    writes and driver-side moves alike.  Hadoop's s3a:// reads as s3://; a
+    path with no scheme is local.  A scheme pyarrow cannot open raises."""
+    if base.startswith("s3a://"):
+        base = "s3://" + base[len("s3a://"):]
+    if "://" not in base and not base.startswith("file:"):
+        return pafs.LocalFileSystem(), os.path.abspath(base)
+    return pafs.FileSystem.from_uri(base)
+
+
+def remove_tree(fs: pafs.FileSystem, path: str) -> None:
+    if fs.get_file_info(path).type != pafs.FileType.NotFound:
+        fs.delete_dir(path)
+
+
+def _fan_out(fs: pafs.FileSystem, scratch: str, names: list[str]):
+    """mapInArrow body: each batch holds era_number and one array<struct>
+    column per table; every (table, era) the task sees streams through
+    its own open ParquetWriter under scratch/<table>/era_number=<era>/.
+    Yields the manifest: one (table, era_number, file, rows) row per file."""
+
+    def write(batches):
+        import uuid
+
+        import numpy as np
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        tag = f"part-{TaskContext.get().partitionId():05d}-{uuid.uuid4().hex}.snappy.parquet"
+        files: dict[tuple[str, int], list] = {}  # (table, era) -> [writer, path, rows]
+        try:
+            for batch in batches:
+                era = batch.column("era_number").to_numpy()
+                for name in names:
+                    col = batch.column(name)
+                    rows = col.flatten()
+                    if not len(rows):
+                        continue
+                    # flatten() skips null lists, whose length reads as 0 here
+                    eras = np.repeat(era, pc.list_value_length(col).fill_null(0).to_numpy())
+                    uniq = np.unique(eras)
+                    for e in uniq.tolist():
+                        part = rows if len(uniq) == 1 else rows.filter(pa.array(eras == e))
+                        if (name, e) not in files:
+                            d = f"{scratch}/{name}/era_number={e}"
+                            fs.create_dir(d)
+                            schema = pa.schema(list(part.type))
+                            files[name, e] = [
+                                pq.ParquetWriter(f"{d}/{tag}", schema, filesystem=fs,
+                                                 use_deprecated_int96_timestamps=True),
+                                f"{d}/{tag}", 0,
+                            ]
+                        out = files[name, e]
+                        out[0].write_batch(pa.RecordBatch.from_struct_array(part))
+                        out[2] += len(part)
+        finally:
+            for w, _, _ in files.values():
+                w.close()
+        if files:
+            yield pa.RecordBatch.from_pylist(
+                [{"table": t, "era_number": e, "file": p, "rows": n}
+                 for (t, e), (_, p, n) in files.items()],
+                schema=MANIFEST,
+            )
+
+    return write
+
+
+def write_era_tables(
+    frame: DataFrame, names: list[str], fs: pafs.FileSystem, scratch: str
+) -> list:
+    """Write every named table of an ingest batch in ONE Spark job.
+    `frame` has an `era_number` column and, per table, its rows of each
+    block as an array<struct> column (`Table.rows()`).  Files land under
+    `scratch` (a path on `fs`); returns the manifest rows, which name
+    every file a successful task attempt wrote and nothing else."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return frame.mapInArrow(_fan_out(fs, scratch, names), from_arrow_schema(MANIFEST)).collect()
+
+
+def replace_partition(fs: pafs.FileSystem, part: str, files: list[str]) -> None:
+    """Make directory `part` hold exactly `files`, moved in."""
+    remove_tree(fs, part)
+    fs.create_dir(part)
+    for f in files:
+        fs.move(f, f"{part}/{f.rsplit('/', 1)[1]}")
+
+
+def commit_partitions(fs: pafs.FileSystem, root: str, manifest: list) -> None:
+    """Replace each (table, era) partition the manifest names under root
+    with exactly the files it lists; partitions it does not name are left
+    as they are, as dynamic partition overwrite leaves them."""
+    parts: dict[tuple[str, int], list[str]] = {}
+    for r in manifest:
+        parts.setdefault((r.table, r.era_number), []).append(r.file)
+    for (name, era), files in sorted(parts.items()):
+        replace_partition(fs, f"{root}/{name}/era_number={era}", files)
 
 
 def _write_sidecar(path: str, metadata: dict) -> None:

@@ -2,8 +2,10 @@
 
 run_incremental() is the reference's remote/batch lifecycle (§3.2) rebuilt
 on Spark primitives: inventory -> minus the state store's completed eras (D1) ->
-process_eras_batch, the one ingest path: processing -> write all tables ->
-completed/failed per era (D8), with partition-overwrite idempotency (D3).
+process_eras_batch, the one ingest path: processing -> decode to a staging
+parquet -> one fan-out job writes every table -> the driver swaps in each
+written era_number partition -> completed/failed per era (D8), so a
+re-run replaces exactly the eras it touches (D3).
 It takes all pending eras in one batch, or (per_era) one-era batches in
 era order that stop at the first failure.  Era archives are closed/past
 data, so the reference needs no watermarks — "process new files, skip done
@@ -49,13 +51,13 @@ def run_incremental(
     """Process every not-yet-completed era under era_dir. Returns
     {era_number: {table: rows}} for the eras processed this run.
 
-    Default (batched): ALL pending eras go through one distributed job per
-    table — one scan parallelized across era files, one partitioned write —
-    which is the 100 TB shape.  per_era=True runs the same batch path on
+    Default (batched): ALL pending eras go through one decode job and one
+    write job for every table — each parallelized across era files — which
+    is the 100 TB shape.  per_era=True runs the same batch path on
     one-era batches in era order, as the reference loops eras serially:
     it stops at the first failure, so the eras before it stay completed,
     the failing era is marked failed and later eras get no status row.
-    Idempotency is identical either way: era_number partition overwrite +
+    Idempotency is identical either way: era_number partition replacement +
     status log; a mid-job failure leaves eras 'processing' and the next run
     redoes exactly those partitions.
 
@@ -89,21 +91,23 @@ def process_eras_batch(
     out_base: str,
     tables: list[str] | None = None,
 ) -> dict[int, dict[str, int]]:
-    """The one ingest path: one distributed job for a batch of eras —
-    scan every era file in parallel, write each table once partitioned by
-    era_number (dynamic overwrite replaces exactly the touched eras), then
-    flip all statuses.
+    """The one ingest path: one distributed job decodes every era file of
+    the batch into a staging parquet, one more writes every table of every
+    era from it, the driver swaps in each written (table, era) partition,
+    then all statuses flip.
 
     `todo` is plan_pending's (era_number, path, retry_count) list, or a
-    one-era slice of it when run_incremental runs per era.  The
-    bookkeeping around the writes is one staging write, one row-count
-    aggregate (two jobs under AQE: its shuffle map stage and its result)
-    and two state appends — no job per table besides its write.
+    one-era slice of it when run_incremental runs per era.  Between the two
+    state appends the batch runs exactly two Spark jobs, whatever the
+    table set: the staging write and the fan-out write, whose manifest
+    carries each era's row counts.
     """
     from era_parser_spark.operators.normalize import TABLES
-    from era_parser_spark.sinks.writers import write_parquet
+    from era_parser_spark.sinks import writers
 
     spark = store.spark
+    # resolved before any state row: an unusable out_base fails the run here
+    fs, root = writers.warehouse_fs(out_base)
     eras = [e for e, _, _ in todo]
     # the attempt number each era's transitions carry in this batch
     attempt = {e: r + 1 for e, _, r in todo}
@@ -116,48 +120,38 @@ def process_eras_batch(
             for era in eras
         ]
     )
-    staging = f"{out_base}/_staging_blocks"
+    staging, scratch = f"{out_base}/_staging_blocks", f"{root}/_staging_tables"
     try:
         # Materialize the decoded blocks ONCE to a staging parquet instead
-        # of cache(): the 15 table builds then run as column-PRUNED
-        # columnar scans with bounded memory.  A cached decoded-blocks DF
-        # must hold (or spill fragment-by-fragment) the whole batch in the
-        # block manager while every table build fights it for execution
-        # memory — at 512 eras x 4096 blocks on a 16g local JVM that GC-
-        # death-spiraled (found by tools/rehearsal.py); on a real cluster
-        # it caps batch size by aggregate executor memory for no reason.
-        # Parse cost stays one pass either way; the staging write is the
-        # same volume the cache would have spilled, and each table build
-        # reads only its own columns back.
+        # of cache(): the fan-out job then reads it back as a column-pruned
+        # scan with bounded memory.  A cached decoded-blocks DF must hold (or
+        # spill fragment-by-fragment) the whole batch in the block manager
+        # while the table writes fight it for execution memory — at 512 eras
+        # x 4096 blocks on a 16g local JVM that GC-death-spiraled (found by
+        # tools/rehearsal.py).  Decoding and writing in one stage instead
+        # keeps two Python workers per task (docs/PLANS.md).
         decoded = read_era_blocks(spark, [p for _, p, _ in todo], network=network, tables=tables)
         decoded.write.mode("overwrite").parquet(staging)
         # the schema is known, so reading it back needs no footer-inference job
         blocks = spark.read.schema(decoded.schema).parquet(staging)
         names = tables or list(TABLES)
-        # Every table's rows per era from ONE aggregate over the staging
-        # frame: a table's rows per block, derived from its declaration, is
-        # 1, a null test or the size of the list it explodes, so summing it
-        # per era equals the built table's groupBy(era).count()
-        # (differential-tested) without running the 15 builders.
-        era_number = F.expr("slot div 8192")
-        era_rows = blocks.groupBy(era_number.alias("era_number")).agg(
-            *[F.sum(TABLES[name].rows_per_block()).alias(name) for name in names]
-        ).collect()
-        per_era = {r.era_number: r for r in era_rows}
-        counts = {
-            era: {name: int(per_era[era][name]) if era in per_era else 0 for name in names}
-            for era in eras
-        }
-        for name in names:
-            # empty tables are skipped (reference skips them too, A13)
-            if any(r[name] for r in era_rows):
-                write_parquet(
-                    TABLES[name].build(blocks).withColumn("era_number", era_number),
-                    f"{out_base}/{name}",
-                    partition_by_month=False,
-                    partition_by_era=True,
-                    mode="overwrite",
-                )
+        # ONE job writes every table: each task streams its rows of each
+        # (table, era) to a file under the scratch dir and reports it
+        manifest = writers.write_era_tables(
+            blocks.select(
+                F.expr("slot div 8192").alias("era_number"),
+                *[TABLES[name].rows().alias(name) for name in names],
+            ),
+            names, fs, scratch,
+        )
+        # each written partition now holds exactly the files the manifest
+        # lists (a failed task attempt's files never move); a table with no
+        # rows in an era leaves that partition untouched (A13)
+        writers.commit_partitions(fs, root, manifest)
+        counts = {era: dict.fromkeys(names, 0) for era in eras}
+        for r in manifest:
+            if r.era_number in counts:  # a block's era is its slot div 8192
+                counts[r.era_number][r.table] += r.rows
         store.record_many(
             [
                 {"network": network, "era_number": era, "status": "completed",
@@ -179,14 +173,13 @@ def process_eras_batch(
         )
         raise
     finally:
-        # staging is batch-scoped scratch; on failure the next run rewrites
-        # it anyway, so best-effort delete either way
-        try:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(staging)
-            p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
-        except Exception:  # noqa: BLE001 - cleanup must never mask the result
-            pass
+        # both scratch dirs are batch-scoped; on failure the next run
+        # rewrites them anyway, so best-effort delete either way
+        for d in (f"{root}/_staging_blocks", scratch):
+            try:
+                writers.remove_tree(fs, d)
+            except Exception:  # noqa: BLE001 - cleanup must never mask the result
+                pass
 
 
 # --- Structured Streaming over normalized tables -----------------------------

@@ -63,25 +63,26 @@ def test_incremental_run_skips_completed(spark, era_dir, tmp_path_factory):
 
 
 def test_per_era_failure_stops_at_failed_era(spark, era_dir, tmp_path_factory, monkeypatch):
-    """D8 per-era status model: a write failure in the second era leaves the
-    first completed, marks the second failed with the exception type, its
-    message and traceback, gives the third no status row, and raises."""
+    """D8 per-era status model: a commit failure in the second era, after
+    the first era's partition landed, leaves the first completed, marks the
+    second failed with the exception type, its message and traceback, gives
+    the third no status row, removes both scratch dirs, and raises."""
     import era_parser_spark.sinks.writers as writers
     from era_parser_spark.state.era_state import EraStateStore
     from era_parser_spark.streaming.incremental import run_incremental
 
     out = str(tmp_path_factory.mktemp("warehouse_fail"))
     state_path = os.path.join(out, "_state")
-    real_write = writers.write_parquet
+    real_replace = writers.replace_partition
     calls = {"n": 0}
 
-    def failing_write(df, path, **kw):
+    def failing_replace(fs, part, files):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("disk full (simulated)")
-        return real_write(df, path, **kw)
+        return real_replace(fs, part, files)
 
-    monkeypatch.setattr(writers, "write_parquet", failing_write)
+    monkeypatch.setattr(writers, "replace_partition", failing_replace)
     with pytest.raises(RuntimeError, match="disk full"):
         run_incremental(spark, era_dir, out, state_path, "gnosis",
                         tables=["blocks"], per_era=True)
@@ -92,6 +93,9 @@ def test_per_era_failure_stops_at_failed_era(spark, era_dir, tmp_path_factory, m
     assert "disk full" in latest[1301].error_message
     assert "RuntimeError" in latest[1301].error_message
     assert "Traceback" in latest[1301].error_message
+    assert sorted(os.listdir(f"{out}/blocks")) == ["era_number=1300"]
+    assert not os.path.exists(f"{out}/_staging_blocks")
+    assert not os.path.exists(f"{out}/_staging_tables")
 
 
 def test_sinks_shapes(spark, era_dir, tmp_path_factory):
@@ -707,57 +711,60 @@ def chaos_era_dir(tmp_path_factory):
 
 
 def test_mid_write_kill_recovery_per_era(spark, chaos_era_dir, tmp_path_factory, monkeypatch):
-    """Chaos pin (round-7 verdict item 6): a hard kill mid-era-write — the
-    sink lands a PARTIAL partition and the process dies before any
-    failed-status record can be written (BaseException, so
-    process_eras_batch's except-Exception never runs) — leaves the era
-    'processing'.  The restarted run must re-process exactly that era,
-    dynamic partition overwrite must replace the partial partition (no
-    duplicate and no missing rows), and log compaction must preserve the
-    recovered state."""
+    """Chaos pin (round-7 verdict item 6): a hard kill mid-commit — the
+    first partition of the era (its attestations) lands, the process dies
+    before its blocks partition and before any failed-status record can be
+    written (BaseException, so process_eras_batch's except-Exception never
+    runs) — leaves the era 'processing' and half written.  The restarted
+    run must re-process exactly that era, the partition swap must replace
+    what landed (no duplicate and no missing rows), and log compaction
+    must preserve the recovered state."""
     import era_parser_spark.sinks.writers as writers
     from era_parser_spark.state.era_state import EraStateStore
     from era_parser_spark.streaming.incremental import run_incremental
 
     out = str(tmp_path_factory.mktemp("warehouse_chaos"))
     state_path = os.path.join(out, "_era_state")
-    real_write = writers.write_parquet
+    tables = ["attestations", "blocks"]
+    real_replace = writers.replace_partition
     calls = {"n": 0}
 
-    def killing_write(df, path, **kw):
+    def killing_replace(fs, part, files):
         calls["n"] += 1
+        real_replace(fs, part, files)  # the partition really lands
         if calls["n"] == 1:
-            real_write(df.limit(3), path, **kw)  # partial data really lands
-            raise KeyboardInterrupt("simulated mid-write kill")
-        return real_write(df, path, **kw)
+            raise KeyboardInterrupt("simulated mid-commit kill")
 
-    monkeypatch.setattr(writers, "write_parquet", killing_write)
+    monkeypatch.setattr(writers, "replace_partition", killing_replace)
     with pytest.raises(KeyboardInterrupt):
         run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
-                        tables=["blocks"], per_era=True)
+                        tables=tables, per_era=True)
 
     store = EraStateStore(spark, state_path)
     latest = store.latest_state().filter(F.col("era_number") == 1400).first()
     assert latest.status == "processing"  # kill == no failed record
-    assert spark.read.parquet(f"{out}/blocks").count() == 3  # the partial
+    landed = spark.read.parquet(f"{out}/attestations").count()
+    assert landed > 0 and not os.path.exists(f"{out}/blocks")  # the partial era
+    assert not os.path.exists(f"{out}/_staging_blocks")
+    assert not os.path.exists(f"{out}/_staging_tables")
 
     # restart: both eras pend (processing is not completed), each processed
-    # exactly once, and the partial partition is REPLACED, not appended to
+    # exactly once, and the landed partition is REPLACED, not appended to
     second = run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
-                             tables=["blocks"], per_era=True)
+                             tables=tables, per_era=True)
     assert sorted(second) == [1400, 1401]
-    blocks = spark.read.parquet(f"{out}/blocks")
-    per_era = {r.era_number: r.cnt for r in blocks.groupBy("era_number")
-               .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert per_era == {1400: second[1400]["blocks"], 1401: second[1401]["blocks"]}
-    # the partial (3-row) partition was REPLACED by the full era
-    assert per_era[1400] > 3
-    assert blocks.select("slot").distinct().count() == blocks.count()
+    assert second[1400]["attestations"] == landed
+    for t, key in (("blocks", ["slot"]), ("attestations", ["slot", "attestation_index"])):
+        df = spark.read.parquet(f"{out}/{t}")
+        per_era = {r.era_number: r.cnt for r in df.groupBy("era_number")
+                   .agg(F.count(F.lit(1)).alias("cnt")).collect()}
+        assert per_era == {1400: second[1400][t], 1401: second[1401][t]}, t
+        assert df.select(*key).distinct().count() == df.count(), t
     assert store.max_retries("gnosis", [1400])[1400] == 2  # killed attempt counted
 
     # third run: a no-op; then the log compacts without changing state
     assert run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
-                           tables=["blocks"], per_era=True) == {}
+                           tables=tables, per_era=True) == {}
     before = sorted(
         (r.era_number, r.status) for r in store.latest_state().collect()
     )
@@ -769,9 +776,10 @@ def test_mid_write_kill_recovery_per_era(spark, chaos_era_dir, tmp_path_factory,
 
 
 def test_mid_write_kill_recovery_batched(spark, chaos_era_dir, tmp_path_factory, monkeypatch):
-    """Same chaos on the batched (100 TB-shaped) path: the kill lands a
-    partial multi-era partition set; the whole batch stays 'processing'
-    and the restarted batch rewrites every touched partition exactly."""
+    """Same chaos on the batched (100 TB-shaped) path: the kill lands the
+    first era's partition of the batch and not the second; the whole batch
+    stays 'processing', both scratch dirs are gone, and the restarted batch
+    rewrites every touched partition exactly."""
     import era_parser_spark.sinks.writers as writers
 
     from era_parser_spark.state.era_state import EraStateStore
@@ -779,17 +787,16 @@ def test_mid_write_kill_recovery_batched(spark, chaos_era_dir, tmp_path_factory,
 
     out = str(tmp_path_factory.mktemp("warehouse_chaos_b"))
     state_path = os.path.join(out, "_era_state")
-    real_write = writers.write_parquet
+    real_replace = writers.replace_partition
     calls = {"n": 0}
 
-    def killing_write(df, path, **kw):
+    def killing_replace(fs, part, files):
         calls["n"] += 1
+        real_replace(fs, part, files)
         if calls["n"] == 1:
-            real_write(df.limit(5), path, **kw)
-            raise KeyboardInterrupt("simulated mid-write kill")
-        return real_write(df, path, **kw)
+            raise KeyboardInterrupt("simulated mid-commit kill")
 
-    monkeypatch.setattr(writers, "write_parquet", killing_write)
+    monkeypatch.setattr(writers, "replace_partition", killing_replace)
     with pytest.raises(KeyboardInterrupt):
         run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
                         tables=["blocks"])
@@ -797,19 +804,70 @@ def test_mid_write_kill_recovery_batched(spark, chaos_era_dir, tmp_path_factory,
     store = EraStateStore(spark, state_path)
     statuses = {r.era_number: r.status for r in store.latest_state().collect()}
     assert statuses == {1400: "processing", 1401: "processing"}
-    # staging scratch must not leak past the failed batch (finally-cleanup)
+    assert sorted(os.listdir(f"{out}/blocks")) == ["era_number=1400"]
+    landed = spark.read.parquet(f"{out}/blocks").count()
+    # scratch must not leak past the failed batch (finally-cleanup)
     assert not os.path.exists(f"{out}/_staging_blocks")
+    assert not os.path.exists(f"{out}/_staging_tables")
 
     second = run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
                              tables=["blocks"])
     assert sorted(second) == [1400, 1401]
+    assert second[1400]["blocks"] == landed
     blocks = spark.read.parquet(f"{out}/blocks")
     total = second[1400]["blocks"] + second[1401]["blocks"]
-    assert blocks.count() == total > 5  # partial partitions replaced
+    assert blocks.count() == total > landed  # the missing partition landed
     assert blocks.select("slot").distinct().count() == total
     assert {r.era_number: r.status for r in store.latest_state().collect()} == {
         1400: "completed", 1401: "completed"
     }
+
+
+def test_commit_moves_only_manifest_files(spark, chaos_era_dir, tmp_path_factory, monkeypatch):
+    """A file in the scratch dir that no manifest row lists — a failed task
+    attempt's output — never reaches the warehouse: each partition holds
+    exactly the files the tasks reported."""
+    import shutil
+
+    import era_parser_spark.sinks.writers as writers
+    from era_parser_spark.streaming.incremental import run_incremental
+
+    out = str(tmp_path_factory.mktemp("warehouse_stray"))
+    real_write = writers.write_era_tables
+    listed = []
+
+    def write_with_stray(frame, names, fs, scratch):
+        manifest = real_write(frame, names, fs, scratch)
+        listed.extend(os.path.basename(r.file) for r in manifest)
+        for r in manifest:
+            shutil.copy(r.file, os.path.join(os.path.dirname(r.file), "stray-attempt.parquet"))
+        return manifest
+
+    monkeypatch.setattr(writers, "write_era_tables", write_with_stray)
+    result = run_incremental(spark, chaos_era_dir, out, f"{out}_state", "gnosis",
+                             tables=["blocks"])
+    files = sorted(
+        name for d in os.listdir(f"{out}/blocks") for name in os.listdir(f"{out}/blocks/{d}")
+    )
+    assert files == sorted(listed) and len(files) >= 2
+    assert spark.read.parquet(f"{out}/blocks").count() == sum(
+        c["blocks"] for c in result.values()
+    )
+    assert not os.path.exists(f"{out}/_staging_tables")
+
+
+def test_unopenable_warehouse_scheme_raises_before_processing(spark, chaos_era_dir, tmp_path):
+    """The warehouse filesystem is resolved before the batch records
+    'processing': an out_base pyarrow cannot open fails the run and
+    leaves no state row."""
+    from era_parser_spark.state.era_state import EraStateStore
+    from era_parser_spark.streaming.incremental import run_incremental
+
+    state = str(tmp_path / "state")
+    with pytest.raises(Exception, match="nosuch"):
+        run_incremental(spark, chaos_era_dir, "nosuch://bucket/wh", state, "gnosis",
+                        tables=["blocks"])
+    assert EraStateStore(spark, state).latest_state().collect() == []
 
 
 # --- bookkeeping jobs of the batched run -------------------------------------
@@ -834,72 +892,51 @@ def _job_ids(spark, name) -> list[int]:
     return list(sc.statusTracker().getJobIdsForGroup(name))
 
 
-def _run_counting_jobs(spark, monkeypatch, era_dir, out, state, tables=None, per_era=False):
-    """run_incremental's result, its non-write job ids and its table-write
-    job ids (each write_parquet call runs under a second job group)."""
-    import era_parser_spark.sinks.writers as writers
+def _run_counting_jobs(spark, era_dir, out, state, tables=None, per_era=False):
+    """run_incremental's result and the ids of every Spark job it ran."""
     from era_parser_spark.streaming.incremental import run_incremental
 
-    run, write = f"run_{uuid.uuid4().hex}", f"write_{uuid.uuid4().hex}"
-    real_write = writers.write_parquet
-
-    def grouped_write(df, path, **kw):
-        with _job_group(spark, write):
-            return real_write(df, path, **kw)
-
-    monkeypatch.setattr(writers, "write_parquet", grouped_write)
+    run = f"run_{uuid.uuid4().hex}"
     with _job_group(spark, run):
         result = run_incremental(spark, era_dir, out, state, "gnosis", tables=tables,
                                  per_era=per_era)
-    monkeypatch.setattr(writers, "write_parquet", real_write)
-    return result, _job_ids(spark, run), _job_ids(spark, write)
+    return result, _job_ids(spark, run)
 
 
-def test_batched_run_job_counts(spark, chaos_era_dir, tmp_path_factory, monkeypatch):
-    """Job-count pin for the batched run's bookkeeping.  A fresh run over 2
-    eras runs the same non-write jobs for all 15 tables as for one — the
-    staging write, the row-count aggregate, two state appends — and no
-    state read (the state path does not exist yet); a resume over the
-    completed state runs one job, the state read.  A per-era run is the
-    same batch once per era: 5 non-write jobs each."""
+def test_batched_run_job_counts(spark, chaos_era_dir, tmp_path_factory):
+    """Job-count pin for the batched run.  A fresh run over 2 eras runs the
+    same four jobs for all 15 tables as for one — the staging write, the
+    one fan-out write of every table, two state appends — and no state
+    read (the state path does not exist yet); a resume over the completed
+    state runs one job, the state read.  A per-era run is the same batch
+    once per era: 4 jobs each."""
     from era_parser_spark.operators.normalize import TABLES
 
     base = tmp_path_factory.mktemp("jobs_pin")
-    one, one_run, one_writes = _run_counting_jobs(
-        spark, monkeypatch, chaos_era_dir, str(base / "one"), str(base / "one_state"),
-        tables=["blocks"],
+    one, one_run = _run_counting_jobs(
+        spark, chaos_era_dir, str(base / "one"), str(base / "one_state"), tables=["blocks"],
     )
     out, state = str(base / "all"), str(base / "all_state")
-    fresh, run_jobs, write_jobs = _run_counting_jobs(
-        spark, monkeypatch, chaos_era_dir, out, state
-    )
+    fresh, run_jobs = _run_counting_jobs(spark, chaos_era_dir, out, state)
     assert sorted(fresh) == sorted(one) == [1400, 1401]
     assert fresh[1400]["blocks"] == one[1400]["blocks"]
     assert set(fresh[1400]) == set(TABLES)
     nonempty = [t for t in TABLES if fresh[1400][t] + fresh[1401][t] > 0]
-    assert len(one_writes) == 1
-    assert len(write_jobs) == len(nonempty)
-    # staging write + count aggregate (shuffle map stage + result) + 2 appends
-    assert len(run_jobs) == len(one_run) == 5
+    assert sorted(os.listdir(out)) == sorted(nonempty)
+    # staging write + fan-out write + 2 appends
+    assert len(run_jobs) == len(one_run) == 4
 
-    again, resume_jobs, resume_writes = _run_counting_jobs(
-        spark, monkeypatch, chaos_era_dir, out, state
-    )
+    again, resume_jobs = _run_counting_jobs(spark, chaos_era_dir, out, state)
     assert again == {}
-    assert len(resume_jobs) == 1 and resume_writes == []
+    assert len(resume_jobs) == 1
 
     out, state = str(base / "per_era"), str(base / "per_era_state")
-    serial, serial_jobs, serial_writes = _run_counting_jobs(
-        spark, monkeypatch, chaos_era_dir, out, state, per_era=True
-    )
+    serial, serial_jobs = _run_counting_jobs(spark, chaos_era_dir, out, state, per_era=True)
     assert serial == fresh
-    assert len(serial_writes) == sum(n > 0 for c in serial.values() for n in c.values())
-    assert len(serial_jobs) == 10
-    again, resume_jobs, resume_writes = _run_counting_jobs(
-        spark, monkeypatch, chaos_era_dir, out, state, per_era=True
-    )
+    assert len(serial_jobs) == 8
+    again, resume_jobs = _run_counting_jobs(spark, chaos_era_dir, out, state, per_era=True)
     assert again == {}
-    assert len(resume_jobs) == 1 and resume_writes == []
+    assert len(resume_jobs) == 1
 
 
 def test_repeat_pass_compiles_no_new_classes(spark, chaos_era_dir, tmp_path_factory):
@@ -942,10 +979,9 @@ def test_repeat_pass_compiles_no_new_classes(spark, chaos_era_dir, tmp_path_fact
 def test_ingest_leaves_partition_overwrite_mode_alone(
     spark, chaos_era_dir, tmp_path_factory
 ):
-    """The era writes overwrite partitions dynamically through a writer
-    option, not the session conf: after an ingest a session set to static
-    still reads static, and a one-era re-run keeps the other era's
-    partition."""
+    """The era writes replace partitions without touching the session
+    conf: after an ingest a session set to static still reads static, and
+    a one-era re-run keeps the other era's partition."""
     from era_parser_spark.streaming.incremental import run_incremental
 
     key = "spark.sql.sources.partitionOverwriteMode"

@@ -8,8 +8,10 @@ cheaply — and records the behaviors the small bench can't see:
   1. generate a 512-era synthetic corpus (8x the bench corpus; cached)
   2. time discovery/listing over 512 files
   3. run_incremental() -> 15-table warehouse partitioned by era_number
-     (one distributed job per table; the reference loops eras serially —
-     era_parser/core.py process_single_era)
+     (one decode job to the staging parquet, then one fan-out job whose
+     tasks write every table's files, swapped in per partition by the
+     driver; the reference loops eras serially — era_parser/core.py
+     process_single_era)
   4. re-run run_incremental(): everything completed -> measures the
      anti-join/no-op cost that dominates steady-state cron runs
   5. state-log file count before/after compact_log()
